@@ -95,15 +95,15 @@ def decide_round(
     broadcast_hosts: bool = True,
     hot_host_threshold: int | None = None,
     n_salts: int = 16,
-    persist_cand: bool = False,
+    checkpoint_cand: bool = False,
 ) -> tuple[DataFrame, DataFrame | None]:
     """A10+A11+A12 fused into ONE host-partitioned pipeline.
 
-    Returns ``(decided, cand)``: ``cand`` is the persisted shared
-    candidate subtree when ``persist_cand`` is set (the caller
-    unpersists it after the round's actions), else None — an explicit
-    pair, not an attribute smuggled on the DataFrame, which silently
-    breaks under copies/Spark Connect (round-2 ADVICE).
+    Returns ``(decided, cand)``: ``cand`` is the localCheckpoint'd
+    shared candidate table when ``checkpoint_cand`` is set (the caller
+    releases its blocks after the round's actions), else None — an
+    explicit pair, not an attribute smuggled on the DataFrame, which
+    silently breaks under copies/Spark Connect.
 
     ``decided`` carries every PENDING row with decision flags:
       blocked   — robots-disallowed (A10; longest-prefix, tie -> Allow)
@@ -118,7 +118,7 @@ def decide_round(
       tokens_refilled / n_elig — the token-bucket state the round loop
                   turns into host_state updates
 
-    One persisted result replaces the three separate jobs (blocked
+    One materialized result replaces the three separate jobs (blocked
     count, admitted count, pending count) the loop used to run: all
     counts come from a single aggregation over this DataFrame.  The
     blocked decision is a hash-aggregate (max over (prefix_len, allow)
@@ -184,9 +184,15 @@ def decide_round(
     # the three admit branches below); Catalyst does no cross-subtree
     # CSE, so each consumer would re-scan the frontier and re-run the
     # joins — a fixed multi-job latency floor on every round.  The
-    # round loop opts in and unpersists via the handle on the result.
-    if persist_cand:
-        cand = cand.persist()
+    # round loop opts in and releases the blocks via the handle on the
+    # result.  A checkpoint, not a persist: downstream plans start from
+    # a LogicalRDD leaf instead of embedding (and re-rendering) this
+    # whole subtree.
+    if checkpoint_cand:
+        cand = cand.localCheckpoint(eager=False)
+    # the handle must be the checkpoint itself: ``cand`` is rebound to
+    # the joined table below, whose release would free nothing
+    shared = cand if checkpoint_cand else None
     # per-host eligible count via partial-aggregated groupBy + join
     # back — NOT a host window, which would drag every row of the
     # hot host into one task (the single-host skew is by construction)
@@ -235,7 +241,7 @@ def decide_round(
                          n_salts)
         )
     out = out.drop("quota", "robots_done")
-    return out, (cand if persist_cand else None)
+    return out, shared
 
 
 def _salted_topk(hot: DataFrame, n_salts: int) -> DataFrame:

@@ -3,10 +3,11 @@
 One round = one Spark job DAG (driver orchestrates; all data paths are
 DataFrame ops; Python only at the two Arrow boundaries: parse UDF and
 cuckoo cogroup).  Every round commits a snapshot — the PENDING
-frontier snapshot (written straight off the round's persisted decision
-table, never by joining/rewriting the full frontier history) plus
-append-only deltas (terminal frontier_log rows, seen, ledger, parsed,
-metrics) — so ``resume`` continues bit-identically (§5.3 property).
+frontier snapshot (written straight off the round's checkpointed
+decision table, never by joining/rewriting the full frontier history)
+plus append-only deltas (terminal frontier_log rows, seen, ledger,
+parsed, metrics) — so ``resume`` continues bit-identically (§5.3
+property).
 Independent table writes are submitted from concurrent driver threads:
 the commit barrier waits for all of them, but their job latencies
 overlap instead of summing (the per-round serial floor governs N->4N
@@ -18,6 +19,28 @@ the discovery merge is min(struct); nothing reads wall-clock or
 partition iteration order.  Hence local[8] == local[32] == N-executor
 cluster, which is how the north rule's two-cluster-size criterion is
 evidenced in-sandbox (BENCH/BASELINE.md).
+
+Materialization rule: every intermediate a round consumes more than
+once (the decide candidates, the decision table, the ranked batch, the
+robots results, the merged discoveries, the cuckoo probe output, the
+new rows and the new frontier delta) and the carry handed to the next
+round is a lazy ``localCheckpoint``, never a ``persist``.  Downstream
+plans then start from a ``LogicalRDD`` leaf: a cached relation would
+embed its whole source plan in every consumer, and Spark re-renders
+those multi-megabyte plan strings at every SQL execution start and
+adaptive re-plan.  A leaf carries only the optimizer's size estimate,
+not the measured size, so a join whose strategy needs the true size
+takes it from the exact counts the round already holds (the parents
+broadcast keys off ``n_admitted``); AQE re-plans the rest from shuffle
+statistics (the 101k-URL bench crawl kept its wall time and hashes,
+BENCH/BASELINE.md).  Checkpoint blocks are invisible to
+``DataFrame.unpersist()``; ``_release`` frees them through the
+checkpoint's own RDD, and only after the round's last consumer.
+
+Fault model: checkpoint blocks live only on the executors that built
+them and have no lineage to recompute from.  A lost executor fails
+the round's job; the crawl then restarts with ``resume`` from the last
+committed snapshot, which re-runs the lost round bit-identically.
 """
 
 from __future__ import annotations
@@ -87,11 +110,16 @@ def _carry_dfs(carry: "_Carry | None") -> list:
     return [] if carry is None else [carry.frontier, carry.host_state]
 
 
-def _unpersist_all(dfs) -> None:
+def _release(dfs) -> None:
+    """Free the blocks of localCheckpoint'd DataFrames.  Their plan is a
+    ``LogicalRDD`` leaf over the checkpointed RDD, which is released
+    directly: ``DataFrame.unpersist()`` only reaches cached relations.
+    A checkpointed RDD cannot be recomputed, so call this only after
+    every consumer has run."""
     for df in dfs:
         if df is not None:
             try:
-                df.unpersist()
+                df._jdf.logicalPlan().rdd().unpersist(False)
             except Exception:
                 pass  # session teardown races are benign here
 
@@ -164,7 +192,10 @@ def resume(
     cfg = cfg or CrawlConfig(**{
         k: v for k, v in (m.lineage.get("config") or {}).items()
     })
-    if cfg.use_cuckoo and cat.read("seen_filter") is None and cat.read("seen") is not None:
+    # table existence from the manifest: cat.read() would run a parquet
+    # schema-inference job per table just to answer None or not
+    if (cfg.use_cuckoo and not m.tables.get("seen_filter", {}).get("paths")
+            and m.tables.get("seen", {}).get("paths")):
         cat.write_round(
             "seen_filter",
             S.compact_blobs(cat.read("seen"), cfg.n_filter_partitions, m.round,
@@ -233,7 +264,7 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
         # write failure must PROPAGATE here, not be swallowed
         if carry is not None:
             carry.commit.result()
-            _unpersist_all(_carry_dfs(carry))
+            _release(_carry_dfs(carry))
             carry = None
     finally:
         if carry is not None:  # exception path: best-effort drain only
@@ -241,7 +272,7 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
                 carry.commit.result()
             except Exception:
                 pass  # the original in-round exception is the signal
-            _unpersist_all(_carry_dfs(carry))
+            _release(_carry_dfs(carry))
         ex.shutdown(wait=True)
         ex_early.shutdown(wait=True)
         if cfg.cache_pages:
@@ -265,7 +296,7 @@ def _run_round(
     past its no-op successors (see the n_admitted == 0 branch)."""
     if carry is not None:
         # pipelined round: decide consumes the previous round's
-        # persisted in-memory state while its writes+commit run in the
+        # checkpointed in-memory state while its writes+commit run in the
         # background; already pending-only (the filter is a schema-
         # preserving no-op) and spread (union of the decide
         # repartition's and the merge shuffle's partitions)
@@ -295,15 +326,15 @@ def _run_round(
     )
     # 1.+2. robots marking + token-bucket admission fused into ONE
     # host-partitioned pipeline (A10/A11/A12); every per-round count
-    # comes from a single aggregation over the cached decision table
+    # comes from a single aggregation over the checkpointed decision table
     decided, decide_cand = decide_round(
         pending, hs, rules, cfg.round_seconds,
         broadcast_hosts=broadcast_hosts,
         hot_host_threshold=cfg.hot_host_threshold,
         n_salts=cfg.n_salts,
-        persist_cand=True,
+        checkpoint_cand=True,
     )
-    decided = decided.persist()
+    decided = decided.localCheckpoint(eager=False)
     # the corpus-prune key set rides inside the SAME aggregation job
     # (bounded by the n_buckets x files_per_bucket partition grid), so
     # the round pays one driver round-trip, not two
@@ -339,7 +370,7 @@ def _run_round(
     host_updates = host_updates_from_decided(decided)
 
     # terminal rows leave the frontier via the append-only log; the
-    # remaining pending set comes straight off the persisted decision
+    # remaining pending set comes straight off the checkpointed decision
     # table — NO per-round join against (or rewrite of) the full
     # frontier history, which is what makes a round O(pending + delta)
     # instead of O(all urls ever discovered)
@@ -362,7 +393,7 @@ def _run_round(
         cat.commit_round(rnd, lineage={"next_rank": next_rank, "drained": True,
                                        "config": asdict(cfg),
                                        "n_hosts_ub": n_hosts_ub})
-        _unpersist_all([decided, decide_cand, *_carry_dfs(carry)])
+        _release([decided, decide_cand, *_carry_dfs(carry)])
         return False, rnd, next_rank, n_hosts_ub, None
 
     if n_admitted == 0:
@@ -441,13 +472,13 @@ def _run_round(
         if rnd_commit != rnd:
             lineage["fast_forwarded_from"] = rnd
         cat.commit_round(rnd_commit, lineage=lineage)
-        _unpersist_all([decided, decide_cand, *_carry_dfs(carry)])
+        _release([decided, decide_cand, *_carry_dfs(carry)])
         return True, rnd_commit, next_rank, n_hosts_ub, None
 
     # 3. deterministic global order -> ledger (A20)
     ranked = with_global_rank(
         admitted, next_rank, n_admitted, cfg.big_batch_threshold
-    ).persist()
+    ).localCheckpoint(eager=False)
     _prof(rnd, t0, "rank built")
     ledger = ranked.select("rank", F.lit(rnd).alias("round"), "url")
 
@@ -466,7 +497,7 @@ def _run_round(
     # land before this round stages anything (staging is shared catalog
     # state, manifests must stay ordered).  Decide/agg above overlapped
     # with those writes — that overlap is the pipelined-commit win.
-    # (carry DFs are NOT unpersisted here: a localCheckpoint'd RDD has
+    # (carry DFs are NOT released here: a localCheckpoint'd RDD has
     # no lineage to recompute from, so its blocks must outlive every
     # possible consumer — they retire in the NEXT background commit.)
     _join_commit(carry)
@@ -510,7 +541,7 @@ def _run_round(
                 F.coalesce("crawl_delay", F.lit(1.0)).alias("crawl_delay_new"),
                 "record_json",
             )
-            .persist()
+            .localCheckpoint(eager=False)
         )
         new_rules = (
             robots_res.filter(F.col("record_json").isNotNull())
@@ -576,12 +607,10 @@ def _run_round(
             F.broadcast(seen.select("url")), "url", "left_anti"
         )
     # Materialize the merge output before the dedupe/union stages: the
-    # count is paid once, downstream consumers read the (small,
-    # post-dedup-filter) cached table, and AQE plans the seen anti-join
-    # and frontier union with the TRUE row count instead of the
-    # explode's wildly pessimistic estimate (measured 167 -> 139 s on
-    # the 101k-URL bench crawl at local[16], identical hashes).
-    merged = merge_discoveries(children, rnd).persist()
+    # count is paid once, and downstream consumers read the (small,
+    # post-dedup-filter) checkpointed table instead of re-running the
+    # explode+classify+merge chain.
+    merged = merge_discoveries(children, rnd).localCheckpoint(eager=False)
     merged.count()
     _prof(rnd, t0, "explode+classify+merge materialized")
 
@@ -591,12 +620,14 @@ def _run_round(
     # ``pre`` and ``new_rows`` are each consumed by MULTIPLE subtrees
     # (pre: the definite/maybe branches; new_rows: the frontier union +
     # robots_injection's host-distinct and url anti-join).  Catalyst
-    # does no cross-subtree CSE, so without the persists the whole
+    # does no cross-subtree CSE, so without the checkpoints the whole
     # explode+classify+merge+probe chain re-executes once per consumer
     # — measured as ~90 s/round at 16 threads on the 1.32M-URL round.
     pre = None
     if cfg.use_cuckoo and seen_rows >= cfg.cuckoo_min_seen_rows:
-        pre = S.cuckoo_prefilter(merged, blobs, cfg.n_filter_partitions).persist()
+        pre = S.cuckoo_prefilter(
+            merged, blobs, cfg.n_filter_partitions
+        ).localCheckpoint(eager=False)
         definite_new = pre.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = pre.filter(F.col("maybe_seen")).drop("maybe_seen")
         survivors = S.dedupe_exact(maybe, seen)
@@ -604,12 +635,12 @@ def _run_round(
     else:
         new_rows = S.dedupe_exact(merged, seen)
 
-    new_rows = new_rows.persist()
+    new_rows = new_rows.localCheckpoint(eager=False)
     if os.environ.get("SPARK_GRAFT_PROF") == "2":
         new_rows.count()
         _prof(rnd, t0, "seen-dedupe materialized")
     robots_rows = robots_injection(new_rows, hs, seen, rnd)
-    new_frontier = new_rows.unionByName(robots_rows).persist()
+    new_frontier = new_rows.unionByName(robots_rows).localCheckpoint(eager=False)
     # one job: delta size + exact new-host count (the countDistinct is
     # over this round's NEW rows only, not the frontier)
     nf_agg = new_frontier.agg(
@@ -707,18 +738,18 @@ def _run_round(
         seen_fut.result()
         _prof(rnd, t0, "state writes done")
         cat.commit_round(rnd, lineage=lineage, metrics=metrics)
-        _unpersist_all(intermediates + _carry_dfs(carry))
+        _release(intermediates + _carry_dfs(carry))
         return True, rnd, next_rank + n_admitted, n_hosts_ub, None
 
     # pipelined commit: localCheckpoint the next round's decide inputs
     # (cuts the cross-round lineage — WITHOUT this the logical plan
     # nests one full round deeper every round and the driver melts down
     # rendering/optimizing it), run the state writes + commit +
-    # intermediate unpersists in the background, and hand the in-memory
+    # intermediate releases in the background, and hand the in-memory
     # state forward.  Lazy checkpoint: whichever touches it first (the
     # background frontier write or the next round's decide) pays the
-    # one materialization; intermediates stay cached until the writes
-    # complete.  The previous carry's blocks retire here too — only
+    # one materialization; intermediates stay checkpointed until the
+    # writes complete.  The previous carry's blocks retire here too — only
     # after this round's writes, because checkpointed blocks cannot be
     # recomputed once dropped.
     pending_next = pending_next.localCheckpoint(eager=False)
@@ -731,7 +762,7 @@ def _run_round(
         seen_fut.result()
         _prof(rnd, t0, "state writes done (bg)")
         cat.commit_round(rnd, lineage=lineage, metrics=metrics)
-        _unpersist_all(retiring)
+        _release(retiring)
 
     fut = ex.submit(_commit_bg)
     _prof(rnd, t0, "commit submitted (bg)")

@@ -319,5 +319,6 @@ def write_pages_warc(
     manifest = src.mapInPandas(
         gen, "shard string, n_records long, payload_bytes long"
     )
-    # the action below materializes the writes; manifest is tiny
+    # lazy: the caller's one action on the returned (tiny) manifest is
+    # what runs the writes
     return manifest

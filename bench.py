@@ -166,15 +166,11 @@ def main() -> int:
                       f"{str(e)[:150]}", file=sys.stderr)
             finally:
                 # drop query-scoped persists so cached blocks from the
-                # near-dup pipelines don't hold memory across queries.
-                # SPARK_GRAFT_BENCH_LEAK_CACHES=1 reproduces the
-                # pre-round-3 behavior (caches leak across queries); the
-                # controlled A/B in BENCH/BASELINE.md
-                # (scripts/bench_cache_ab.py) measured the leak effect on
-                # query time as nil-to-negative, so this is hygiene, not
-                # a timing confounder.
-                if not os.environ.get("SPARK_GRAFT_BENCH_LEAK_CACHES"):
-                    release_caches()
+                # near-dup pipelines don't hold memory across queries
+                # (the cache A/B in BENCH/BASELINE.md measured the effect
+                # on query time as nil-to-negative: hygiene, not a
+                # timing confounder)
+                release_caches()
         return times
 
     # Constituent twins of the consolidated SIGNED slots: each of these
@@ -200,10 +196,8 @@ def main() -> int:
     qtimes = sweep(items)
     # Second timed pass: every query has now run once in THIS process,
     # so pass 2 is same-context by construction (JIT + page cache warm,
-    # identical session state) — the bench_cache_ab.py protocol wired
-    # into the round workflow (round-4 VERDICT ask #9).  Cross-round
-    # per-query comparisons should use this block; pass 1 keeps
-    # continuity with r01–r04 lines.
+    # identical session state).  Cross-round per-query comparisons
+    # should use this block; pass 1 keeps continuity with r01–r04 lines.
     qtimes_warm = sweep(items)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -219,12 +213,7 @@ def main() -> int:
         "scaling": load_scaling_evidence(),
         "queries": qtimes,
         "queries_same_context": qtimes_warm,
-        # r02 -> r03 per-query comparability note: the controlled A/B
-        # (BENCH/BASELINE.md) attributes the deltas to measurement
-        # context on a shared VM, NOT to the r03 cache-hygiene change;
-        # the field records the mode so runs remain labeled either way
-        "cache_hygiene": "per-query" if not os.environ.get(
-            "SPARK_GRAFT_BENCH_LEAK_CACHES") else "leaked",
+        "cache_hygiene": "per-query",
     }
     # The driver records only the LAST 2000 chars of stdout, then
     # parses the final line as JSON.  The round-2 AND round-4 lines
@@ -253,15 +242,23 @@ def main() -> int:
     return 0
 
 
+# the keys the driver reads off the final stdout line
+REQUIRED_LINE_KEYS = ("metric", "value", "unit", "sf", "queries")
+
+
 def compact_line(out: dict, budget: int = 1900) -> str:
     """Serialize the record for the driver's bounded stdout tail.
 
     Never on the line (full values live in BENCH/last_run.json): the
     warm-pass sweep, the post-crawl box probe, scaling provenance
     strings.  Then optional blocks are dropped in documented order
-    until the serialization fits ``budget`` — a hard guarantee, not an
-    estimate, because the required driver keys (metric/value/unit/
-    sf/queries) total well under it."""
+    until the serialization fits ``budget``; then query timings are
+    coarsened and shed from the end.  If the line still does not fit
+    (or has no ``queries`` to shed), only the required driver keys
+    stay — scalars that total well under the budget."""
+    def size(d: dict) -> int:
+        return len(json.dumps(d, separators=(",", ":")))
+
     line = dict(out)
     line.pop("queries_same_context", None)
     line.pop("box_post_crawl", None)
@@ -282,18 +279,22 @@ def compact_line(out: dict, budget: int = 1900) -> str:
             if k in sc
         }
     for drop in ("box", "cache_hygiene", "scaling", "crawl"):
-        if len(json.dumps(line, separators=(",", ":"))) <= budget:
+        if size(line) <= budget:
             break
         line.pop(drop, None)
-    if len(json.dumps(line, separators=(",", ":"))) > budget:
+    q = line.get("queries")
+    if q and size(line) > budget:
         # registry grew past what 2-decimal timings fit: coarsen to 1
-        line["queries"] = {k: round(v, 1) for k, v in line["queries"].items()}
-    while len(json.dumps(line, separators=(",", ":"))) > budget:
-        # last resort — an unparseable line loses EVERYTHING, so shed
-        # trailing query entries and say so on the line itself
-        q = line["queries"]
+        line["queries"] = q = {k: round(v, 1) for k, v in q.items()}
+    while q and size(line) > budget:
+        # an unparseable line loses EVERYTHING, so shed trailing query
+        # entries and say so on the line itself
         q.pop(next(reversed(q)))
         line["queries_truncated"] = True
+    if size(line) > budget:
+        # last resort: something outside the known blocks overflows
+        line = {k: line[k] for k in REQUIRED_LINE_KEYS + ("queries_truncated",)
+                if k in line}
     return json.dumps(line, separators=(",", ":"))
 
 

@@ -87,3 +87,33 @@ def test_last_run_record_on_disk_parses_and_fits():
         assert k in d
     assert "queries_truncated" not in d
     assert "wall_sec_N_source" not in d["scaling"]
+
+
+def test_overflow_outside_known_blocks_falls_back_to_required_keys():
+    """An oversized block the compactor does not know about cannot be
+    shed by dropping queries: once they are gone the line keeps only
+    the required driver keys, instead of raising on an empty dict."""
+    rec = _record(5)
+    rec["unknown_block"] = "x" * 3000
+    s = compact_line(rec)
+    assert len(s) <= 2000
+    d = json.loads(s)
+    for k in ("metric", "value", "unit", "sf"):
+        assert k in d
+    assert "unknown_block" not in d
+    assert d.get("queries_truncated") is True
+
+
+def test_record_without_queries_fits_and_parses():
+    """A record with no ``queries`` key (e.g. every sweep failed before
+    the record was built) still compacts to a parseable line."""
+    rec = _record(0)
+    del rec["queries"]
+    s = compact_line(rec)
+    assert len(s) <= 2000
+    assert json.loads(s)["metric"] == "urls_scheduled_parsed_per_sec"
+    rec["unknown_block"] = "x" * 3000
+    s = compact_line(rec)
+    assert len(s) <= 2000
+    d = json.loads(s)
+    assert "unknown_block" not in d and d["value"] == 1234.5
