@@ -40,14 +40,19 @@ def with_global_rank(
     batch_rows: int,
     big_batch_threshold: int = 1 << 20,
     n_range_partitions: int = 64,
-) -> DataFrame:
-    """Adds ``rank`` = start_rank + position in the total order."""
+) -> tuple[DataFrame, DataFrame | None]:
+    """Adds ``rank`` = start_rank + position in the total order.
+
+    Returns ``(ranked, parts)``: ``parts`` is the localCheckpoint'd
+    range-partitioned input of the two-phase path (None on the one-task
+    path), which ``ranked`` reads; the caller releases its blocks once
+    every consumer of ``ranked`` has run."""
     key = order_key(df)
     if batch_rows <= big_batch_threshold:
         w = Window.orderBy(*key)
         return df.withColumn(
             "rank", (F.row_number().over(w) - 1 + F.lit(start_rank)).cast("long")
-        )
+        ), None
     # two-phase: range partition on the order key, local sort, offset by
     # cumulative lower-partition counts (collects n_range_partitions ints)
     d = (
@@ -60,7 +65,7 @@ def with_global_rank(
             "url",
         )
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=False)
     )
     counts = {r["_pid"]: r["cnt"] for r in d.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = {}, 0
@@ -75,4 +80,4 @@ def with_global_rank(
             F.row_number().over(w) - 1 + off[F.col("_pid")] + F.lit(start_rank)
         ).cast("long"),
     ).drop("_pid")
-    return out
+    return out, d

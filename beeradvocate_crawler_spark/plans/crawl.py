@@ -21,14 +21,15 @@ cluster, which is how the north rule's two-cluster-size criterion is
 evidenced in-sandbox (BENCH/BASELINE.md).
 
 Materialization rule: every intermediate a round consumes more than
-once (the decide candidates, the decision table, the ranked batch, the
-robots results, the merged discoveries, the cuckoo probe output, the
-new rows and the new frontier delta) and the carry handed to the next
-round is a lazy ``localCheckpoint``, never a ``persist``.  Downstream
-plans then start from a ``LogicalRDD`` leaf: a cached relation would
-embed its whole source plan in every consumer, and Spark re-renders
-those multi-megabyte plan strings at every SQL execution start and
-adaptive re-plan.  A leaf carries only the optimizer's size estimate,
+once (the decide candidates, the decision table, the ranked batch and,
+for a big batch, its range-partitioned input, the robots results, the
+merged discoveries, the cuckoo probe output, the new rows and the new
+frontier delta) and the carry handed to the next round is a lazy
+``localCheckpoint``, never a ``persist``.  Downstream plans then start
+from a ``LogicalRDD`` leaf: a cached relation would embed its whole
+source plan in every consumer, and Spark re-renders those
+multi-megabyte plan strings at every SQL execution start and adaptive
+re-plan.  A leaf carries only the optimizer's size estimate,
 not the measured size, so a join whose strategy needs the true size
 takes it from the exact counts the round already holds (the parents
 broadcast keys off ``n_admitted``); AQE re-plans the rest from shuffle
@@ -476,9 +477,10 @@ def _run_round(
         return True, rnd_commit, next_rank, n_hosts_ub, None
 
     # 3. deterministic global order -> ledger (A20)
-    ranked = with_global_rank(
+    ranked, rank_parts = with_global_rank(
         admitted, next_rank, n_admitted, cfg.big_batch_threshold
-    ).localCheckpoint(eager=False)
+    )
+    ranked = ranked.localCheckpoint(eager=False)
     _prof(rnd, t0, "rank built")
     ledger = ranked.select("rank", F.lit(rnd).alias("round"), "url")
 
@@ -726,8 +728,8 @@ def _run_round(
         "n_admitted": n_admitted, "n_new": n_new, "n_blocked": n_blocked,
         "n_pending_before": n_pending_after,
     }
-    intermediates = [decided, decide_cand, ranked, robots_res, merged, pre,
-                     new_rows, new_frontier]
+    intermediates = [decided, decide_cand, ranked, rank_parts, robots_res,
+                     merged, pre, new_rows, new_frontier]
 
     if rules_changed:
         # a rules update must be committed before the next round's

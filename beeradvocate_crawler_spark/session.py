@@ -3,6 +3,10 @@
 Local mode is the sandbox stand-in for a multi-executor cluster; the
 partitioning/shuffle design (host-hash bucketing, AQE, salted skew
 splitting) is what carries to a real cluster — see SURVEY.md §4.
+
+The local core count and the driver heap default to what the machine
+has (``machine_defaults``); ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEM`` override them.
 """
 
 from __future__ import annotations
@@ -11,6 +15,58 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of the machine's memory (physical memory, or the cgroup limit
+# when that is lower) given to the driver heap.  In local mode every
+# executor thread lives in that heap; the rest is for the JVM's
+# off-heap memory and the Python workers.
+DRIVER_HEAP_FRACTION = 0.5
+MIN_DRIVER_HEAP_MB = 1024
+
+# Compiled-class cache size (Spark's default is 100).  One resumed round
+# of the smoke polite crawl needs more classes than 100, so at 100
+# entries every warm resume of that round recompiled 131-132 of them;
+# at 1000 it compiles 2.  The fresh 5-round crawl before it compiles 707
+# classes at 100 entries and 288 at 1000.  The 7 benchmark analytics
+# queries compile about 99 per cold pass; a warm pass recompiled 3-20
+# at 100 entries and 0-4 at 1000.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# PySpark's DataFrame debugging wraps every Column/DataFrame API call in
+# a Python stack walk plus extra py4j round trips to record the call
+# site.  Off, a resumed round of the smoke polite crawl makes about
+# 3,400 py4j round trips instead of 6,700.  The cost: analysis errors
+# no longer name the PySpark call site that built the failing
+# expression.
+DATAFRAME_DEBUGGING = "false"
+
+
+def machine_defaults(total_bytes: int, cpus: int | None) -> tuple[int, str]:
+    """(local cores, driver heap) for a machine with ``total_bytes`` of
+    usable memory and ``cpus`` CPUs (None when unknown)."""
+    heap_mb = max(MIN_DRIVER_HEAP_MB,
+                  int(total_bytes * DRIVER_HEAP_FRACTION) >> 20)
+    return max(1, cpus or 1), f"{heap_mb}m"
+
+
+def _usable_memory_bytes() -> int:
+    """Physical memory, capped by the cgroup (v2 or v1) memory limit."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for limit_file in ("/sys/fs/cgroup/memory.max",
+                       "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(limit_file) as f:
+                total = min(total, int(f.read().strip()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            continue
+    return total
+
+
+def session_defaults() -> tuple[int, str]:
+    """``machine_defaults`` of this machine, with the env overrides."""
+    cores, heap = machine_defaults(_usable_memory_bytes(), os.cpu_count())
+    return (int(os.environ.get("SPARK_GRAFT_CPUS", cores)),
+            os.environ.get("SPARK_DRIVER_MEM", heap))
+
 
 def get_spark(
     app: str = "beeradvocate_crawler_spark",
@@ -18,7 +74,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores, driver_memory = session_defaults()
     master = master or f"local[{cores}]"
     n_threads = int(master[master.index("[") + 1 : -1]) if "[" in master else cores
     shuffle_partitions = shuffle_partitions or max(8, n_threads)
@@ -34,7 +90,9 @@ def get_spark(
         # fat html cells: bound Arrow batch size so python workers
         # don't blow up on wide binary columns (SURVEY.md §4.1)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", DATAFRAME_DEBUGGING)
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )

@@ -12,7 +12,12 @@ time travel by round — over plain parquet:
 
 Manifest (one per committed round) records, per table, the *explicit
 file-list* (mode "replace" points at the latest rewrite, mode "delta"
-accumulates append paths) plus row counts and free-form lineage/metrics.
+accumulates append paths), row counts, the table's Spark schema, and
+free-form lineage/metrics.  Reads pass that schema to the parquet
+reader, so reading a table runs no schema-inference job; a delta
+table's schema is the union, by field name, of its writes' schemas.
+(Tables of manifests written before schemas were recorded are read
+with inference, as before.)
 Commit protocol: write parquet dirs -> write manifest json -> atomic
 ``os.replace`` of the pointer.  A crash between steps leaves the old
 snapshot intact (exact resume, BASELINE.json north_rule).  Commits are
@@ -47,6 +52,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 REPLACE = "replace"
 DELTA = "delta"
@@ -84,6 +90,16 @@ class Manifest:
     def from_json(cls, s: str) -> "Manifest":
         d = json.loads(s)
         return cls(d["round"], d["tables"], d.get("lineage", {}), d.get("metrics", {}))
+
+
+def _union_schema(a: dict[str, Any] | None, b: dict[str, Any]) -> dict[str, Any]:
+    """Union of two struct schemas (``StructType.jsonValue()``) by field
+    name; a name's first occurrence wins."""
+    if a is None:
+        return b
+    names = {f["name"] for f in a["fields"]}
+    return {**a, "fields": a["fields"] + [
+        f for f in b["fields"] if f["name"] not in names]}
 
 
 class SnapshotCatalog:
@@ -149,7 +165,7 @@ class SnapshotCatalog:
         with self._stage_lock:
             self._staged[name] = {
                 "mode": mode, "path": path, "rows": int(n_rows or -1),
-                "files": self._inventory(path),
+                "files": self._inventory(path), "schema": df.schema.jsonValue(),
             }
         return int(n_rows or -1)
 
@@ -260,6 +276,7 @@ class SnapshotCatalog:
         for name in names:
             staged = self._staged.get(name)
             old = prev_tables.get(name, {})
+            schema = old.get("schema")
             if staged is None:
                 m.tables[name] = dict(old)  # carried forward unchanged
             elif staged["mode"] == REPLACE:
@@ -270,10 +287,16 @@ class SnapshotCatalog:
                     "files": (staged.get("files", []) if staged["path"]
                               else old.get("files", [])),
                 }
+                if staged["path"]:
+                    schema = staged["schema"]
             else:
                 paths = list(old.get("paths", []))
                 files = list(old.get("files", []))
                 if staged["path"]:
+                    # a table committed without a schema (older manifest)
+                    # keeps none: its earlier files' schema is unknown
+                    if schema is not None or not paths:
+                        schema = _union_schema(schema, staged["schema"])
                     paths.append(staged["path"])
                     files.extend(staged.get("files", []))
                 m.tables[name] = {
@@ -282,6 +305,8 @@ class SnapshotCatalog:
                     "rows": old.get("rows", 0) + max(0, staged["rows"]),
                     "files": files,
                 }
+            if schema is not None:
+                m.tables[name]["schema"] = schema
             # additive schema evolution: committed evolutions carry
             # forward; newly staged ones append (Iceberg add-column)
             evo = list(old.get("evolution", [])) + self._staged_evolution.get(
@@ -310,7 +335,8 @@ class SnapshotCatalog:
         round's commit) and is recorded in the manifest, so time travel
         to pre-evolution snapshots still reads the ORIGINAL schema.
         Writers may keep producing the old schema after the bump —
-        ``read`` merges footer schemas and fills the default per file —
+        ``read`` uses the table's manifest schema, the union of every
+        write's schema, and fills the default per file —
         which is what lets a resumed crawl cross a schema-version
         boundary without rewriting data or code.  Only add-column is
         supported (rename/drop/retype are not — the crawl state tables
@@ -359,7 +385,7 @@ class SnapshotCatalog:
         with self._stage_lock:
             self._staged[name] = {
                 "mode": REPLACE, "path": path, "rows": n,
-                "files": self._inventory(path),
+                "files": self._inventory(path), "schema": df.schema.jsonValue(),
             }
         return self.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
 
@@ -509,7 +535,7 @@ class SnapshotCatalog:
         staged = self._staged.get(name)
         if staged is None or staged["path"] is None:
             return None
-        return self.spark.read.parquet(staged["path"])
+        return self._reader(staged["schema"]).parquet(staged["path"])
 
     def read(self, name: str, manifest: Manifest | None = None) -> DataFrame | None:
         m = manifest or self.latest()
@@ -519,16 +545,23 @@ class SnapshotCatalog:
         paths = t.get("paths", [])
         if not paths:
             return None
+        schema = t.get("schema")
         evo = t.get("evolution") or []
-        if not evo:
-            return self.spark.read.parquet(*paths)
-        # evolved table: delta paths can mix pre- and post-evolution
-        # schemas — merge footer schemas, then fill each added column's
-        # default for files that predate it (Iceberg read-time
-        # projection).  mergeSchema costs one footer read per file,
-        # already paid by the lineage inventory at write time.
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if schema is None and evo:
+            # manifest written before tables carried a schema: its delta
+            # paths can mix pre- and post-evolution files, so merge their
+            # footer schemas (one footer read per file)
+            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        else:
+            # the manifest schema covers every file; files that predate a
+            # column read it as NULL, and an evolved column's default is
+            # filled below (Iceberg read-time projection)
+            df = self._reader(schema).parquet(*paths)
         return self._apply_evolution(df, evo)
+
+    def _reader(self, schema: dict[str, Any] | None):
+        r = self.spark.read
+        return r if schema is None else r.schema(StructType.fromJson(schema))
 
     def rows(self, name: str, manifest: Manifest | None = None) -> int:
         m = manifest or self.latest()

@@ -30,6 +30,7 @@ WARC-ingested smoke corpus is differentially equal to the oracle.
 
 from __future__ import annotations
 
+import os
 import zlib
 from datetime import datetime, timezone
 
@@ -197,6 +198,13 @@ def write_corpus(
 
 # -- WARC export (egress) -----------------------------------------------------
 
+def _shard_paths(out_dir: str, pid: int, attempt: int) -> tuple[str, str]:
+    """(published, temp) path of shard ``pid`` written by task attempt
+    ``attempt``.  The temp name is a dot-file, which readers skip."""
+    return (os.path.join(out_dir, f"part-{pid:05d}.warc.gz"),
+            os.path.join(out_dir, f".part-{pid:05d}.{attempt}.tmp"))
+
+
 def write_pages_warc(
     df: DataFrame,
     out_dir: str,
@@ -225,7 +233,13 @@ def write_pages_warc(
 
     Task retries can't publish partial output: shards are written to a
     dot-temp name and ``os.replace``d into place (atomic on a POSIX
-    directory) only after the last byte is flushed.
+    directory) only after the last byte is flushed.  The temp name
+    carries the task attempt id (``_shard_paths``), so two attempts of
+    one task running at once (a retry beside a speculative copy) never
+    write the same temp file; the last to finish publishes the shard.
+
+    ``WARC-Date`` is mandatory, so a NULL ``warc_ts`` is written as the
+    epoch (1970-01-01T00:00:00Z) and re-ingests as the epoch, not NULL.
 
     ``text``/``lang`` intentionally do not survive (WARC carries no
     extracted text; CC publishes that separately as WET — the same
@@ -233,8 +247,6 @@ def write_pages_warc(
     DataFrame (shard, n_records, payload_bytes) — one row per shard,
     the catalog/lineage unit.
     """
-    import os
-
     import pandas as pd
 
     spark = df.sparkSession
@@ -265,15 +277,16 @@ def write_pages_warc(
         return head + b"\r\n" + block + b"\r\n\r\n"
 
     def gen(batches):
-        pid, fh, path, tmp = None, None, None, None
+        from pyspark import TaskContext
+
+        fh, path, tmp = None, None, None
         n_rec, n_payload = 0, 0
         for pdf in batches:
             if fh is None:
                 if len(pdf) == 0:
                     continue
-                pid = int(pdf["_pid"].iloc[0])
-                path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
-                tmp = os.path.join(out_dir, f".part-{pid:05d}.tmp")
+                path, tmp = _shard_paths(out_dir, int(pdf["_pid"].iloc[0]),
+                                         TaskContext.get().taskAttemptId())
                 fh = open(tmp, "wb")
                 info = b"software: beeradvocate_crawler_spark\r\n"
                 fh.write(_gz_member(_record(

@@ -128,15 +128,15 @@ def crawl_throughput(spark, scale: str, round_seconds: int) -> dict:
 
 
 def main() -> int:
+    from beeradvocate_crawler_spark.session import get_spark, session_defaults
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = session_defaults()[0]
     # headline runs on the ~106k-page corpus: big enough that the
     # per-round fixed cost amortizes and throughput reflects the
     # parallel fetch+parse path (the thing that matters at 100 TB)
     scale = os.environ.get("SPARK_GRAFT_BENCH_SCALE", "bench")
     rs = int(os.environ.get("SPARK_GRAFT_BENCH_ROUND_SECONDS", "100000"))
-
-    from beeradvocate_crawler_spark.session import get_spark
 
     import __spark_entry__ as E
 

@@ -20,6 +20,7 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def build_zip() -> str:
@@ -41,10 +42,12 @@ def build_zip() -> str:
 
 def run_once(master: str, zpath: str, scale: str, rs: int, out: str,
              pages_dir: str | None = None) -> dict:
+    from beeradvocate_crawler_spark.session import session_defaults
+
     cmd = [
         "spark-submit",
         "--master", master,
-        "--driver-memory", os.environ.get("SPARK_DRIVER_MEM", "24g"),
+        "--driver-memory", session_defaults()[1],
         "--py-files", zpath,
         os.path.join(REPO, "scripts", "crawl_bench_once.py"),
         "--scale", scale,
@@ -64,8 +67,6 @@ def run_once(master: str, zpath: str, scale: str, rs: int, out: str,
 def gen_corpus(scale: str, out_dir: str) -> None:
     """Materialize the corpus ONCE (at full parallelism) so both
     measured runs read the IDENTICAL input."""
-    import sys as _sys
-    _sys.path.insert(0, REPO)
     from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
     from beeradvocate_crawler_spark.session import get_spark
 

@@ -28,9 +28,11 @@ SEEN_GOLD = "0x1be8f4c132539d29"
 
 
 def main() -> int:
+    from beeradvocate_crawler_spark.session import session_defaults
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages-dir", default="/tmp/ba_scaling_pages")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=session_defaults()[0])
     ap.add_argument("--round-seconds", type=int, default=100_000_000)
     args = ap.parse_args()
 

@@ -221,6 +221,18 @@ class TestWarcExport:
         write_pages_warc(pages_df(spark, "smoke"), out, n_shards=3).collect()
         assert not glob.glob(out + "/.part-*.tmp")
 
+    def test_temp_name_is_per_task_attempt(self):
+        """Two attempts of one task (a retry beside a speculative copy)
+        write different temp files, both hidden from readers, and
+        publish to the same shard name."""
+        from beeradvocate_crawler_spark.sources.ingest import _shard_paths
+
+        (pub_a, tmp_a), (pub_b, tmp_b) = (_shard_paths("/out", 3, attempt)
+                                          for attempt in (17, 18))
+        assert pub_a == pub_b == "/out/part-00003.warc.gz"
+        assert tmp_a != tmp_b
+        assert all(t.startswith("/out/.part-00003.") for t in (tmp_a, tmp_b))
+
     def test_crlf_url_cannot_desync_framing(self, spark, tmp_path):
         """A url carrying CR/LF must not inject headers or break the
         Content-Length framing of neighboring records."""

@@ -9,21 +9,37 @@
    plans; a cached relation would, and Spark renders the resulting
    multi-megabyte plan strings at every SQL execution start and
    adaptive re-plan.  The guard pins the plan property, not a timing.
+3. **A warm round re-pays no round-invariant work.**  Resuming the same
+   round again compiles (almost) no new classes, and reading a
+   committed table runs no schema-inference job: the manifest carries
+   its schema.  A manifest without schemas (written before they were
+   recorded) still resumes bit-identically.
+
+The guards pin counts, not timings.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from beeradvocate_crawler_spark.config import CrawlConfig
 from beeradvocate_crawler_spark.fixtures import site_model as sm
 from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
 from beeradvocate_crawler_spark.plans import crawl as plans
+from beeradvocate_crawler_spark.sources.catalog import SnapshotCatalog
 
 MAX_PLAN_BYTES = 256 * 1024
+# order and seen hashes of the full smoke polite crawl (round 9, 77 URLs)
+FULL_CRAWL = {"order": "-0x2330f2bdfef33cd2", "seen": "0x4ee3e0ce9d9f6c28"}
+# classes a warm resumed round may still compile (about 130 when the
+# codegen cache is too small to hold a round)
+MAX_WARM_COMPILES = 4
 
 
 def _persistent_rdds(spark) -> int:
@@ -42,24 +58,41 @@ def _executions(spark):
     return out
 
 
+def _compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def _crawl_hashes(cat) -> dict:
+    order = cat.read("crawl_order").select(F.bit_xor(F.xxhash64(
+        F.concat_ws("\x01", "rank", "round", "url")))).collect()[0][0]
+    seen = cat.read("seen").select(F.bit_xor(F.xxhash64("url"))).collect()[0][0]
+    return {"order": hex(order), "seen": hex(seen)}
+
+
 @pytest.fixture(scope="module")
 def polite_calls(spark):
     """Crawl 5 rounds with ``run``, then 2 more with ``resume`` (the
     politeness-bound rounds), recording persistent-RDD counts around
-    each call and the plan sizes of the resumed rounds' executions."""
+    each call and the plan sizes of the resumed rounds' executions.
+    A copy of the 5-round snapshot is kept as ``base`` (its manifests
+    name the original's data files, which later rounds never rewrite)."""
     tmp = tempfile.mkdtemp(prefix="ba_round_plans_")
     pages = f"{tmp}/pages"
     write_pages_parquet(spark, "smoke", pages)
     cfg = CrawlConfig(round_seconds=16)
-    rec = {}
+    rec = {"tmp": tmp, "pages": pages, "cfg": cfg, "base": f"{tmp}/base"}
     before = _persistent_rdds(spark)
     plans.run(spark, pages, sm.SEED_URLS, f"{tmp}/run", cfg, max_rounds=5)
     rec["run"] = (before, _persistent_rdds(spark))
+    shutil.copytree(f"{tmp}/run", rec["base"])
     last_id = max((i for i, _ in _executions(spark)), default=-1)
     before = _persistent_rdds(spark)
     cat = plans.resume(spark, pages, f"{tmp}/run", cfg, max_rounds=2)
     rec["resume"] = (before, _persistent_rdds(spark))
     rec["round"] = cat.latest().round
+    rec["run_dir"] = f"{tmp}/run"
     rec["plans"] = [n for i, n in _executions(spark) if i > last_id]
     yield rec
     shutil.rmtree(tmp, ignore_errors=True)
@@ -76,3 +109,61 @@ def test_round_plans_stay_small(polite_calls):
     assert sizes, "no SQL executions recorded for the resumed rounds"
     assert max(sizes) <= MAX_PLAN_BYTES, (
         f"largest physical plan description is {max(sizes)} bytes")
+
+
+def test_big_batch_rank_releases_its_blocks(spark, polite_calls):
+    """The two-phase rank's range-partitioned input is released with
+    the round's other intermediates."""
+    cfg = CrawlConfig(round_seconds=16, big_batch_threshold=0)
+    before = _persistent_rdds(spark)
+    plans.run(spark, polite_calls["pages"], sm.SEED_URLS,
+              f"{polite_calls['tmp']}/big", cfg, max_rounds=3)
+    assert _persistent_rdds(spark) == before
+
+
+def test_warm_resume_reuses_generated_classes(spark, polite_calls):
+    """Resuming the same round twice: the second compiles (almost)
+    nothing, because one round's classes fit the codegen cache."""
+    compiled = []
+    for copy in ("warm1", "warm2"):
+        run_dir = f"{polite_calls['tmp']}/{copy}"
+        shutil.copytree(polite_calls["base"], run_dir)
+        c0 = _compiles(spark)
+        plans.resume(spark, polite_calls["pages"], run_dir,
+                     polite_calls["cfg"], max_rounds=1)
+        compiled.append(_compiles(spark) - c0)
+    assert compiled[1] <= MAX_WARM_COMPILES, compiled
+
+
+def test_committed_tables_read_without_a_job(spark, polite_calls):
+    cat = SnapshotCatalog(spark, polite_calls["run_dir"])
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog_reads", "reads of committed tables")
+    try:
+        tables = {t: cat.read(t) for t in sorted(cat.latest().tables)}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("catalog_reads") == []
+    assert all(df is not None for df in tables.values())
+
+
+def test_resume_without_manifest_schemas_is_exact(spark, polite_calls):
+    """A snapshot whose manifest carries no schemas (written before
+    they were recorded) resumes to the same crawl; delta tables stay
+    schema-less, replaced tables regain one at their next write."""
+    run_dir = f"{polite_calls['tmp']}/no_schema"
+    shutil.copytree(polite_calls["base"], run_dir)
+    with open(os.path.join(run_dir, "_SNAPSHOT")) as f:
+        mf = os.path.join(run_dir, "_manifests", json.load(f)["manifest"])
+    with open(mf) as f:
+        m = json.load(f)
+    for t in m["tables"].values():
+        assert t.pop("schema", None) is not None
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    cat = plans.resume(spark, polite_calls["pages"], run_dir,
+                       polite_calls["cfg"])
+    assert _crawl_hashes(cat) == FULL_CRAWL
+    tables = cat.latest().tables
+    assert "schema" not in tables["seen"] and "schema" in tables["frontier"]
