@@ -19,26 +19,20 @@ class CrawlConfig:
     # then the `*` groups do NOT apply.  The sequential oracle takes
     # the same parameter, so the e2e differential covers it.
     user_agent: str | None = None
-    # cuckoo-filter seen pre-filter (A8); exact anti-join stays authoritative.
-    # Partition count caps the parallelism of the two Python blob stages
-    # (probe cogroup + delta build) — 8 was a measured 4->16-thread
-    # scaling sink in the heavy rounds; results are partition-count
-    # independent (the exact anti-join is the authority)
-    use_cuckoo: bool = True
-    # which approximate membership structure backs the pre-filter blobs
-    # (north rule "bloom/cuckoo URL-seen" [B:14]): "cuckoo" (16-bit fp,
-    # ~0.012% FPR, ~19 bits/key) or "bloom" (blocked 512-bit lines,
-    # ~0.5% FPR, 12 bits/key, overflow-free).  Blobs self-describe, so
-    # a resume may switch kinds mid-crawl; outputs are identical either
-    # way — the exact anti-join stays authoritative (§7.1).
-    filter_kind: str = "cuckoo"
+    # partitioned cuckoo-filter seen pre-filter (A8, functions/cuckoo.py);
+    # the exact anti-join stays authoritative.  Partition count caps
+    # the parallelism of the two Python blob stages (probe cogroup +
+    # delta build) — 8 was a measured
+    # 4->16-thread scaling sink in the heavy rounds; results are
+    # partition-count independent (the exact anti-join is the authority)
     n_filter_partitions: int = 32
     # probe the filter only once `seen` exceeds this many rows: the
     # filter exists to avoid shuffling a HUGE seen table — while seen
     # is small the exact anti-join is cheaper than the cogroup's
     # Python stage.  Blobs are still built/compacted every round so
     # resume and the big-seen path stay exercised.  (Results are
-    # identical either way — cuckoo on/off equivalence is a test.)
+    # identical either way: the e2e differential forces the probe
+    # with 0.)
     cuckoo_min_seen_rows: int = 100_000
     filter_compact_every: int = 8  # rebuild delta blobs from `seen` every k rounds
     # pre-merge seen filter: while `seen` fits a broadcast, already-seen
@@ -51,12 +45,6 @@ class CrawlConfig:
     # (sources/corpus.py) — set explicitly only to override it
     n_page_buckets: int = 16
     files_per_bucket: int | None = None
-    # corpus caching: OFF by default — the fetch path prunes partition
-    # directories per round, so parquet re-scans touch only the
-    # scheduled files; caching the whole corpus costs memory pressure
-    # and fixes the task count at the cached partitioning (a 100 TB
-    # corpus could never be cached anyway)
-    cache_pages: bool = False
     # global-rank strategy: below this batch size a single-task window
     # sorts the (politeness-bounded) batch; above it, two-phase
     # range-partitioned ranking (operators/ordering.py).  64k keeps the

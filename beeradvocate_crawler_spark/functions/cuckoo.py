@@ -4,8 +4,10 @@ Bucketized cuckoo filter (Fan et al., "Cuckoo Filter: Practically
 Better Than Bloom", CoNEXT'14): 4 slots/bucket, 16-bit fingerprints,
 partial-key cuckoo hashing.  All insert/lookup paths are
 numpy-vectorized — the filter lives inside grouped-map pandas UDFs,
-one blob per host-hash partition, serialized to a ``binary`` column of
-the ``seen_filter`` table.
+one blob per url-hash partition, serialized to a ``binary`` column of
+the ``seen_filter`` table.  It is the engine's only seen-filter kind:
+``from_bytes`` rejects any other blob (e.g. a blocked-bloom blob left
+in an older run dir) with ``ValueError``.
 
 Role in the engine: *pruning accelerator only*.  Candidates that the
 filter says "definitely new" skip the exact anti-join's shuffle of the
@@ -124,13 +126,25 @@ class CuckooFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CuckooFilter":
-        n_buckets, n_keys = np.frombuffer(blob[:16], dtype=np.int64)
-        table = (
-            np.frombuffer(blob[16:], dtype=np.uint16)
-            .reshape(int(n_buckets), SLOTS)
-            .copy()
-        )
-        return cls(int(n_buckets), table, int(n_keys))
+        """Decode a ``to_bytes`` blob.  The header is checked, not
+        trusted: a blob whose bucket count is not a positive power of
+        two (a blocked-bloom blob from an older run dir leads with a
+        negative magic) or whose length disagrees with that count
+        raises ``ValueError``."""
+        blob = bytes(blob)
+        if len(blob) < 16:
+            raise ValueError(f"cuckoo blob too short: {len(blob)} bytes")
+        n_buckets, n_keys = (int(v) for v in np.frombuffer(blob[:16], dtype=np.int64))
+        if n_buckets <= 0 or n_buckets & (n_buckets - 1):
+            raise ValueError(
+                f"not a cuckoo-filter blob: bucket count {n_buckets} is not "
+                "a positive power of two")
+        if len(blob) != 16 + n_buckets * SLOTS * 2:
+            raise ValueError(
+                f"cuckoo blob is {len(blob)} bytes, header implies "
+                f"{16 + n_buckets * SLOTS * 2}")
+        table = np.frombuffer(blob[16:], dtype=np.uint16).reshape(n_buckets, SLOTS).copy()
+        return cls(n_buckets, table, n_keys)
 
     @classmethod
     def sized_for(cls, expected_keys: int, load: float = 0.84) -> "CuckooFilter":
@@ -139,10 +153,3 @@ class CuckooFilter:
         while n < need:
             n <<= 1
         return cls(n)
-
-    def grown(self, extra_keys: int) -> "CuckooFilter":
-        """A copy big enough for n_keys+extra_keys (rebuild-free append:
-        since fingerprints alone can't be rehashed exactly, callers keep
-        key lists per partition in the ``seen`` table and rebuild —
-        this helper just sizes the new blob)."""
-        return CuckooFilter.sized_for(self.n_keys + extra_keys)

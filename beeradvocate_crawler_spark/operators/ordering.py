@@ -38,7 +38,7 @@ def with_global_rank(
     df: DataFrame,
     start_rank: int,
     batch_rows: int,
-    big_batch_threshold: int = 1 << 20,
+    big_batch_threshold: int,
     n_range_partitions: int = 64,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Adds ``rank`` = start_rank + position in the total order.

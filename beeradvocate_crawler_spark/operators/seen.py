@@ -1,20 +1,17 @@
 """URL-seen set: approximate pre-filter + exact anti-join (§2 A7/A8).
 
-Two interchangeable pre-filter kinds cover the north rule's
-"bloom/cuckoo URL-seen" [B:14]: the default partitioned **cuckoo**
-filter (functions/cuckoo.py) and a partitioned **blocked-bloom**
-filter (functions/bloom.py), selected by ``CrawlConfig.filter_kind``.
-Blobs self-describe (the bloom blob leads with a negative magic int64;
-a cuckoo blob leads with its positive power-of-two bucket count), so
-``decode_filter`` dispatches per blob and a crawl resumed under the
-other kind keeps probing old blobs correctly while writing new-kind
-deltas.
+The pre-filter is the spec's "partitioned cuckoo-filter URL-seen set
+keyed by canonicalized-URL xxhash64" [B:6]: one cuckoo blob
+(functions/cuckoo.py) per ``pmod(url_hash, n_parts)`` partition and
+round, in the ``seen_filter`` table.  ``CuckooFilter.from_bytes``
+checks every blob it decodes, so a blob of another kind fails loudly
+instead of probing garbage.
 
-Exactness layering (§7.1): either filter only PRUNES — candidates
-it proves absent skip the anti-join; "maybe seen" survivors (all true
-dupes + ~0.012% cuckoo / ~0.5% bloom false positives) still go through
-the exact left-anti join against ``seen``, which remains the
-authority.  A filter bug can cost performance, never correctness.
+Exactness layering (§7.1): the filter only PRUNES — candidates it
+proves absent skip the anti-join; "maybe seen" survivors (all true
+dupes + ~0.012% false positives) still go through the exact
+left-anti join against ``seen``, which remains the authority.  A
+filter bug can cost performance, never correctness.
 
 Blob lifecycle (delta + compaction): each round inserts the round's
 new keys into a FRESH delta blob per partition (sized exactly, never
@@ -35,22 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.bloom import BlockedBloomFilter
 from ..functions.cuckoo import CuckooFilter
-
-FILTER_KINDS = {"cuckoo": CuckooFilter, "bloom": BlockedBloomFilter}
-
-
-def decode_filter(blob: bytes):
-    """Blob-self-describing decode: bloom blobs lead with a negative
-    magic int64, cuckoo blobs with a positive power-of-two n_buckets."""
-    first = int(np.frombuffer(bytes(blob)[:8], dtype=np.int64)[0])
-    return (
-        BlockedBloomFilter.from_bytes(bytes(blob))
-        if first < 0
-        else CuckooFilter.from_bytes(bytes(blob))
-    )
-
 
 BLOB_SCHEMA = T.StructType(
     [
@@ -79,8 +61,7 @@ def cuckoo_prefilter(
     """A8: adds ``maybe_seen`` (bool).  False => definitely new (skip
     the anti-join).  Implemented as a cogrouped-map pandas UDF so each
     partition's candidate batch meets its filter blobs without
-    shuffling the seen table.  Blob kind (cuckoo/bloom) is decoded per
-    blob, so mixed-kind blob sets (a resume that switched kinds) work."""
+    shuffling the seen table."""
     cand = candidates.withColumn(
         "partition_id", partition_id_expr(F.col("url_hash"), n_parts)
     )
@@ -96,7 +77,7 @@ def cuckoo_prefilter(
         maybe = np.zeros(len(left), dtype=bool)
         keys = left["url_hash"].to_numpy(dtype=np.int64)
         for b in right["blob"]:
-            maybe |= decode_filter(b).contains(keys)
+            maybe |= CuckooFilter.from_bytes(b).contains(keys)
         return left.assign(maybe_seen=maybe)
 
     return (
@@ -108,8 +89,7 @@ def cuckoo_prefilter(
 
 
 def build_delta_blobs(
-    new_rows: DataFrame, n_parts: int, rnd: int, n_rows: int | None = None,
-    kind: str = "cuckoo",
+    new_rows: DataFrame, n_parts: int, rnd: int, n_rows: int | None = None
 ) -> DataFrame:
     """Fresh delta blob per partition holding this round's new keys.
 
@@ -117,13 +97,12 @@ def build_delta_blobs(
     the partition_ids it holds — blob layout is always the n_parts
     pmod, independent of task count), so a 100-row round doesn't pay
     n_parts python-worker round-trips while a 1M-row round fans out."""
-    fcls = FILTER_KINDS[kind]
 
     def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdf_iter:
             for pid, g in pdf.groupby("partition_id"):
                 keys = g["url_hash"].to_numpy(dtype=np.int64)
-                cf = fcls.sized_for(len(keys))
+                cf = CuckooFilter.sized_for(len(keys))
                 cf.insert(keys)
                 yield pd.DataFrame(
                     {
@@ -147,17 +126,13 @@ def build_delta_blobs(
     )
 
 
-def compact_blobs(
-    seen: DataFrame, n_parts: int, rnd: int, kind: str = "cuckoo"
-) -> DataFrame:
+def compact_blobs(seen: DataFrame, n_parts: int, rnd: int) -> DataFrame:
     """Rebuild one blob per partition from the full seen table — a
     single distributed pass; bounds lookup cost to O(1) blobs/partition."""
-    out_schema = BLOB_SCHEMA
-    fcls = FILTER_KINDS[kind]
 
     def rebuild(key, pdf: pd.DataFrame) -> pd.DataFrame:
         keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-        cf = fcls.sized_for(max(64, len(keys)))
+        cf = CuckooFilter.sized_for(max(64, len(keys)))
         cf.insert(keys)
         return pd.DataFrame(
             {
@@ -174,5 +149,5 @@ def compact_blobs(
             "url_hash",
         )
         .groupBy("partition_id")
-        .applyInPandas(rebuild, out_schema)
+        .applyInPandas(rebuild, BLOB_SCHEMA)
     )

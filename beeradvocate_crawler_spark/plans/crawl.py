@@ -38,10 +38,20 @@ BENCH/BASELINE.md).  Checkpoint blocks are invisible to
 ``DataFrame.unpersist()``; ``_release`` frees them through the
 checkpoint's own RDD, and only after the round's last consumer.
 
+Commit rule: every round exit (drained, starved, rules-changed,
+admitting) builds an ``_Outcome`` and submits one ``_commit`` job to a
+single-worker executor, so commits run in round order.  The next round
+decides on the carry (the checkpointed pending frontier and host_state)
+while that job runs; only a round that changed the robots rules waits
+on its own commit, and its successor reads the committed catalog.
+
 Fault model: checkpoint blocks live only on the executors that built
 them and have no lineage to recompute from.  A lost executor fails
 the round's job; the crawl then restarts with ``resume`` from the last
 committed snapshot, which re-runs the lost round bit-identically.
+Each ``_commit`` first joins its predecessor's, so a failed commit
+fails every later one (the executor runs queued jobs after one raises)
+and the catalog head is always a round whose commits all succeeded.
 """
 
 from __future__ import annotations
@@ -49,7 +59,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, field, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,34 +91,59 @@ RULES_JSON_SCHEMA = "rules array<struct<ord: int, allow: boolean, prefix: string
 
 @dataclass
 class _Carry:
-    """Round-r state handed to round r+1 so r's writes+commit can run
-    in the BACKGROUND while r+1 computes (the pipelined-commit attack
-    on the per-round serial floor — round-2 VERDICT ask #8).
+    """Round r's state that round r+1 decides on while r's commit job
+    runs (frames are None after a drained round).  ``rules`` is always
+    the committed table; ``seen``/``seen_filter`` are re-read from the
+    catalog after the barrier, so no cross-round lineage chain forms."""
 
-    Only the tables round r+1 needs BEFORE the commit barrier travel in
-    memory: the pending frontier and host_state (consumed by decide)
-    plus the robots rules (a round that CHANGES rules commits
-    synchronously and drops the carry, so a carried ``rules`` is always
-    the committed one).  ``seen``/``seen_filter`` are re-read from the
-    catalog after the barrier — no cross-round in-memory lineage chains.
-    Exact-resume is untouched: the barrier sits before round r+1's
-    first staged write, commits stay ordered and all-or-nothing, and a
-    failed background write surfaces at the barrier before any r+1
-    state is staged."""
-
-    frontier: "DataFrame"            # localCheckpoint'd pending rows
-    host_state: "DataFrame"          # localCheckpoint'd
-    rules: "DataFrame | None"        # committed rules (never in-memory-new)
-    commit: Future                   # round r's writes + commit + cleanup
+    frontier: DataFrame | None
+    host_state: DataFrame | None
+    rules: DataFrame | None
+    commit: Future
 
 
-def _join_commit(carry: "_Carry | None") -> None:
+@dataclass
+class _Outcome:
+    """What a round leaves to its commit job (see ``_commit``)."""
+
+    rnd: int                     # commit round: a fast-forward advances it
+    next_rank: int
+    n_hosts_ub: int | None
+    writes: list                 # staged writes still to run
+    staged: list = field(default_factory=list)  # futures of staged writes
+    extras: dict = field(default_factory=dict)  # drained/fast_forwarded_from
+    metrics: dict | None = None
+    release: list = field(default_factory=list)  # freed after the commit
+
+
+def _commit(cat, cfg, prev: Future | None, out: _Outcome) -> None:
+    """One round's commit job.  The predecessor join must come first:
+    without it round r+1 would commit on top of a failed round r's
+    predecessor, with round r's staged files."""
+    if prev is not None:
+        prev.result()
+    _write_all(out.writes)
+    for f in out.staged:
+        f.result()
+    lineage = {"next_rank": out.next_rank, "config": asdict(cfg),
+               "n_hosts_ub": out.n_hosts_ub, **out.extras}
+    cat.commit_round(out.rnd, lineage=lineage, metrics=out.metrics)
+    _release(out.release)
+
+
+def _hand_on(cat, cfg, ex, carry, out, frontier=None, host_state=None,
+             rules=None, wait=False) -> _Carry | None:
+    """Submit ``out``'s commit job, which also retires the previous
+    carry; return the next carry (None when the round waits)."""
     if carry is not None:
-        carry.commit.result()
-
-
-def _carry_dfs(carry: "_Carry | None") -> list:
-    return [] if carry is None else [carry.frontier, carry.host_state]
+        out.release += [carry.frontier, carry.host_state]
+    if wait:
+        out.release += [frontier, host_state]
+    fut = ex.submit(_commit, cat, cfg, carry.commit if carry else None, out)
+    if wait:
+        fut.result()
+        return None
+    return _Carry(frontier, host_state, rules, fut)
 
 
 def _release(dfs) -> None:
@@ -123,11 +158,6 @@ def _release(dfs) -> None:
                 df._jdf.logicalPlan().rdd().unpersist(False)
             except Exception:
                 pass  # session teardown races are benign here
-
-
-def _read_pages(spark: SparkSession, pages_path: str, cache: bool) -> DataFrame:
-    df = spark.read.parquet(pages_path)
-    return df.persist() if cache else df
 
 
 def run(
@@ -157,13 +187,10 @@ def run(
                     skip_if_empty=False, n_rows=None)
     cat.write_round("host_state", host_state0, 0, REPLACE, skip_if_empty=False)
     cat.write_round("seen", seen0, 0, DELTA)
-    if cfg.use_cuckoo:
-        cat.write_round(
-            "seen_filter",
-            S.build_delta_blobs(seen0, cfg.n_filter_partitions, 0,
-                                kind=cfg.filter_kind),
-            0, DELTA, skip_if_empty=False,
-        )
+    cat.write_round(
+        "seen_filter", S.build_delta_blobs(seen0, cfg.n_filter_partitions, 0),
+        0, DELTA, skip_if_empty=False,
+    )
     # host-count upper bound (drives broadcast-vs-shuffle host joins);
     # seeds are a driver-side list, so this costs no job
     n_hosts = len({host_of(canonicalize_url(s)) for s in seeds})
@@ -183,24 +210,26 @@ def resume(
     Per-partition lineage is validated first (A19): a missing/truncated
     part file rolls the snapshot back to the newest fully-valid round,
     whose lost successors are re-run deterministically.  Missing filter
-    blobs (e.g. catalog copied without seen_filter) are rebuilt from
-    the authoritative ``seen`` table."""
+    blobs (e.g. catalog copied without seen_filter, or written with the
+    filter switched off) are rebuilt from the authoritative ``seen``
+    table.  Lineage config keys that are no longer ``CrawlConfig``
+    fields (options since removed) are ignored."""
     cat = SnapshotCatalog(spark, run_dir)
     m = cat.latest()
     if m is None:
         raise ValueError(f"no snapshot to resume in {run_dir}")
     m = cat.rollback_to_valid()
+    known = {f.name for f in fields(CrawlConfig)}
     cfg = cfg or CrawlConfig(**{
-        k: v for k, v in (m.lineage.get("config") or {}).items()
+        k: v for k, v in (m.lineage.get("config") or {}).items() if k in known
     })
     # table existence from the manifest: cat.read() would run a parquet
     # schema-inference job per table just to answer None or not
-    if (cfg.use_cuckoo and not m.tables.get("seen_filter", {}).get("paths")
+    if (not m.tables.get("seen_filter", {}).get("paths")
             and m.tables.get("seen", {}).get("paths")):
         cat.write_round(
             "seen_filter",
-            S.compact_blobs(cat.read("seen"), cfg.n_filter_partitions, m.round,
-                            kind=cfg.filter_kind),
+            S.compact_blobs(cat.read("seen"), cfg.n_filter_partitions, m.round),
             m.round, REPLACE, skip_if_empty=False,
         )
         cat.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
@@ -208,7 +237,7 @@ def resume(
 
 
 def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
-    pages = _read_pages(spark, pages_path, cfg.cache_pages)
+    pages = spark.read.parquet(pages_path)
     # two-level partition layout? the pruning moduli MUST come from the
     # corpus writer's sidecar metadata (sources/corpus.py) — inferring
     # files_per_bucket from max(file_in_bucket)+1 is wrong whenever the
@@ -233,7 +262,7 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     rnd = m.round
     rounds_done = 0
     carry: _Carry | None = None
-    ex = ThreadPoolExecutor(max_workers=1)  # ordered background commits
+    ex = ThreadPoolExecutor(max_workers=1)  # round-ordered commit jobs
     # early-write pool: ledger + terminal-log rows are fully determined
     # right after decide/rank, so their (constant-heavy: job launch,
     # output-commit renames, manifest fsync) write latency hides under
@@ -250,34 +279,27 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
         while rnd < cfg.max_rounds and (max_rounds is None or rounds_done < max_rounds):
             rnd += 1
             t0 = time.time()
-            # rnd comes back possibly advanced: starved rounds batch
-            # their no-op successors into one commit (fast-forward)
-            progressed, rnd, next_rank, n_hosts_ub, carry = _run_round(
+            # the commit round may come back advanced: a starved round
+            # commits its no-op successors at once (fast-forward)
+            progressed, out, carry = _run_round(
                 spark, cat, pages, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex,
                 ex_early,
             )
+            rnd, next_rank, n_hosts_ub = out.rnd, out.next_rank, out.n_hosts_ub
             _prof(rnd, t0, "round end")
             rounds_done += 1
             if not progressed:
                 break
-        # drain the last pending commit (e.g. max_rounds cap hit) so the
-        # returned catalog reflects every completed round; a background
-        # write failure must PROPAGATE here, not be swallowed
+        # the last commit job joins every earlier one, so the returned
+        # catalog reflects every completed round; a failed commit must
+        # PROPAGATE here, not be swallowed
         if carry is not None:
             carry.commit.result()
-            _release(_carry_dfs(carry))
-            carry = None
     finally:
-        if carry is not None:  # exception path: best-effort drain only
-            try:
-                carry.commit.result()
-            except Exception:
-                pass  # the original in-round exception is the signal
-            _release(_carry_dfs(carry))
-        ex.shutdown(wait=True)
+        ex.shutdown(wait=True)  # the last commit job ended, failed or not
         ex_early.shutdown(wait=True)
-        if cfg.cache_pages:
-            pages.unpersist()
+        if carry is not None:
+            _release([carry.frontier, carry.host_state])
     return cat
 
 
@@ -291,16 +313,16 @@ def _prof(rnd, t0, label):
 
 def _run_round(
     spark, cat, pages, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex, ex_early
-) -> tuple[bool, int, int, int | None, "_Carry | None"]:
-    """Returns (progressed, rnd, next_rank, n_hosts_ub, carry); ``rnd``
-    may come back AHEAD of the input when a starved round fast-forwards
-    past its no-op successors (see the n_admitted == 0 branch)."""
+) -> tuple[bool, _Outcome, _Carry | None]:
+    """Returns (progressed, outcome, carry); the outcome's ``rnd`` is
+    AHEAD of the input when a starved round fast-forwards past its
+    no-op successors (see the n_admitted == 0 branch)."""
     if carry is not None:
         # pipelined round: decide consumes the previous round's
-        # checkpointed in-memory state while its writes+commit run in the
+        # checkpointed in-memory state while its commit job runs in the
         # background; already pending-only (the filter is a schema-
-        # preserving no-op) and spread (union of the decide
-        # repartition's and the merge shuffle's partitions)
+        # preserving no-op) and spread (the decide repartition's
+        # partitions, plus the merge shuffle's after an admitting round)
         pending = carry.frontier.filter(F.col("state") == PENDING).drop("state")
         hs = carry.host_state
         rules = carry.rules
@@ -385,30 +407,31 @@ def _run_round(
         *fcols, F.lit(PENDING).alias("state")
     )
 
+    release = [decided, decide_cand]
     if n_pending_after == 0:
         # drained: flush final terminal marks, empty the pending set, stop
-        _join_commit(carry)  # staging is shared state: barrier first
-        cat.write_round("frontier", leftover, rnd, REPLACE,
-                        skip_if_empty=False, n_rows=0)
-        cat.write_round("frontier_log", terminal, rnd, DELTA, n_rows=n_blocked)
-        cat.commit_round(rnd, lineage={"next_rank": next_rank, "drained": True,
-                                       "config": asdict(cfg),
-                                       "n_hosts_ub": n_hosts_ub})
-        _release([decided, decide_cand, *_carry_dfs(carry)])
-        return False, rnd, next_rank, n_hosts_ub, None
+        out = _Outcome(rnd, next_rank, n_hosts_ub, writes=[
+            lambda: cat.write_round("frontier", leftover, rnd, REPLACE,
+                                    skip_if_empty=False, n_rows=0),
+            lambda: cat.write_round("frontier_log", terminal, rnd, DELTA,
+                                    n_rows=n_blocked),
+        ], extras={"drained": True}, release=release)
+        return False, out, _hand_on(cat, cfg, ex, carry, out)
 
     if n_admitted == 0:
         # token starvation round: only terminal marks + refill bookkeeping.
         # Adaptive starved-round batching (round-4 VERDICT ask #4): a
         # starved round changes NOTHING except candidate hosts' token
-        # levels, so consecutive starved rounds are collapsed into this
-        # one commit by pre-applying the skipped rounds' refills and
-        # jumping the round counter.  Because burst = 2x refill, a
-        # candidate host either admits within 2 refills or NEVER can
-        # (burst < 1 token): the skip distance is 1 round — or the
-        # whole remaining budget when every candidate host is
-        # permanently starved (without this, one slow host burns
-        # max_rounds x the ~1.3 s round floor of empty driver rounds).
+        # levels.  Stored tokens are never negative (tokens_after =
+        # tokens_refilled - admitted, admitted <= floor(tokens_refilled)),
+        # so every candidate host holds tokens_refilled >= rr, its next
+        # refill reaches burst = 2 x rr, and it admits then iff burst >= 1
+        # token — else NEVER.  So a starved round either commits at its
+        # own index (some candidate host admits next round) or, when
+        # every candidate host is permanently starved, jumps the round
+        # counter to the horizon in one commit, pre-applying the skipped
+        # rounds' refill (without this, one slow host burns max_rounds x
+        # the ~1.3 s round floor of empty driver rounds).
         # Ledger/seen/frontier semantics are untouched — skipped rounds
         # admit nothing by construction and the extra refill reproduces
         # the oracle's per-round iterated float math exactly (one
@@ -416,30 +439,19 @@ def _run_round(
         # at burst).  Only when this round logged no terminal rows
         # (n_blocked == 0), so every table delta stays round-exact.
         rnd_commit, extra_refill = rnd, False
+        rr = F.lit(float(cfg.round_seconds)) / F.col("crawl_delay")
+        burst = F.lit(TOKEN_BURST_FACTOR) * rr
         if n_blocked == 0:
-            rr = F.lit(float(cfg.round_seconds)) / F.col("d")
-            t2 = F.least(F.lit(TOKEN_BURST_FACTOR) * rr, F.col("t") + rr)
-            jrow = (
-                decided.where(F.col("n_elig") > 0)
-                .groupBy("host")
-                .agg(F.first("tokens_refilled").alias("t"),
-                     F.first("crawl_delay").alias("d"))
-                .select(
-                    F.min(
-                        F.when(t2 >= 1.0, F.lit(1))
-                        .when(F.lit(TOKEN_BURST_FACTOR) * rr >= 1.0, F.lit(2))
-                    ).alias("jmin"),
-                    F.count("*").alias("nh"),
-                ).collect()[0]
-            )
-            if jrow["nh"] == 0:
+            jrow = decided.where(F.col("n_elig") > 0).agg(
+                F.count("*").alias("n"),
+                F.count(F.when(burst >= 1.0, True)).alias("n_ready"),
+            ).collect()[0]
+            if jrow["n"] == 0:
                 # structural deadlock: no host has any candidate and no
                 # fetch is in flight to change that — the oracle idles
                 # to max_rounds; commit once at the horizon instead
                 rnd_commit = cfg.max_rounds
-            elif jrow["jmin"] == 2:
-                rnd_commit, extra_refill = rnd + 1, True
-            elif jrow["jmin"] is None:
+            elif jrow["n_ready"] == 0:
                 # every candidate host is permanently starved
                 # (burst < 1 token): idle to the horizon in one commit
                 rnd_commit, extra_refill = cfg.max_rounds, True
@@ -449,17 +461,14 @@ def _run_round(
                 decided.where(F.col("n_elig") > 0).select("host").distinct()
                 .withColumn("_cand", F.lit(True))
             )
-            rr2 = F.lit(float(cfg.round_seconds)) / F.col("crawl_delay")
             hs2 = hs2.join(F.broadcast(cand_hosts), "host", "left").withColumn(
                 "tokens",
-                F.when(
-                    F.col("_cand"),
-                    F.least(F.lit(TOKEN_BURST_FACTOR) * rr2,
-                            F.col("tokens") + rr2),
-                ).otherwise(F.col("tokens")),
+                F.when(F.col("_cand"), F.least(burst, F.col("tokens") + rr))
+                .otherwise(F.col("tokens")),
             ).drop("_cand")
-        _join_commit(carry)
-        _write_all([
+        leftover = leftover.localCheckpoint(eager=False)
+        hs2 = hs2.localCheckpoint(eager=False)
+        out = _Outcome(rnd_commit, next_rank, n_hosts_ub, writes=[
             lambda: cat.write_round("frontier", leftover, rnd_commit, REPLACE,
                                     skip_if_empty=False,
                                     n_rows=n_pending_after),
@@ -467,14 +476,10 @@ def _run_round(
                                     DELTA, n_rows=n_blocked),
             lambda: cat.write_round("host_state", hs2, rnd_commit, REPLACE,
                                     skip_if_empty=False),
-        ])
-        lineage = {"next_rank": next_rank, "config": asdict(cfg),
-                   "n_hosts_ub": n_hosts_ub}
+        ], release=release)
         if rnd_commit != rnd:
-            lineage["fast_forwarded_from"] = rnd
-        cat.commit_round(rnd_commit, lineage=lineage)
-        _release([decided, decide_cand, *_carry_dfs(carry)])
-        return True, rnd_commit, next_rank, n_hosts_ub, None
+            out.extras["fast_forwarded_from"] = rnd
+        return True, out, _hand_on(cat, cfg, ex, carry, out, leftover, hs2, rules)
 
     # 3. deterministic global order -> ledger (A20)
     ranked, rank_parts = with_global_rank(
@@ -495,22 +500,22 @@ def _run_round(
                          batch_rows=n_admitted,
                          files_per_bucket=getattr(cfg, "_files_per_bucket", None),
                          prune_keys=prune_keys)
-    # COMMIT BARRIER: the previous round's background writes+commit must
-    # land before this round stages anything (staging is shared catalog
-    # state, manifests must stay ordered).  Decide/agg above overlapped
-    # with those writes — that overlap is the pipelined-commit win.
-    # (carry DFs are NOT released here: a localCheckpoint'd RDD has
-    # no lineage to recompute from, so its blocks must outlive every
-    # possible consumer — they retire in the NEXT background commit.)
-    _join_commit(carry)
+    # COMMIT BARRIER: the previous round's commit job must land before
+    # this round stages anything (staging is shared catalog state,
+    # manifests must stay ordered).  Decide/agg above overlapped with
+    # that job — that overlap is the pipelined-commit win.  (The carry's
+    # blocks are NOT released here: a localCheckpoint'd RDD has no
+    # lineage to recompute from, so they retire in THIS round's commit
+    # job, after its writes.)
+    if carry is not None:
+        carry.commit.result()
     _prof(rnd, t0, "prev commit joined")
     # EARLY WRITES: the ledger (ranked is final) and the terminal log
     # (decided is final) are staged NOW so their write jobs + commit
     # constants overlap the dominant fetch+parse phase below rather
     # than the round-end tail; the snapshot protocol is untouched —
-    # these are staged files for THIS round, joined before commit_round
-    # (early_fut.result() in both commit paths), so commits stay
-    # all-or-nothing and ordered.
+    # these are staged files for THIS round, joined by its commit job
+    # before commit_round, so commits stay all-or-nothing and ordered.
     early_writes = [
         lambda: cat.write_round("crawl_order", ledger, rnd, DELTA,
                                 n_rows=n_admitted),
@@ -526,7 +531,6 @@ def _run_round(
     # include the previous round's committed deltas — the carry never
     # holds cross-round in-memory lineage for the append-only tables
     seen = cat.read("seen")
-    blobs = cat.read("seen_filter") if cfg.use_cuckoo else None
 
     # robots results -> host updates effective next round (skipped
     # entirely in robots-free rounds — the common case)
@@ -551,8 +555,7 @@ def _run_round(
             .select("host", F.col("r.ord").alias("rule_ord"),
                     F.col("r.allow").alias("allow"), F.col("r.prefix").alias("prefix"))
         )
-        n_new_rules = new_rules.count()
-        if n_new_rules:
+        if new_rules.count():
             rules2 = new_rules if rules is None else rules.unionByName(new_rules)
             cat.write_round("robots_rules", rules2, rnd, REPLACE,
                             skip_if_empty=False)
@@ -626,9 +629,9 @@ def _run_round(
     # explode+classify+merge+probe chain re-executes once per consumer
     # — measured as ~90 s/round at 16 threads on the 1.32M-URL round.
     pre = None
-    if cfg.use_cuckoo and seen_rows >= cfg.cuckoo_min_seen_rows:
+    if seen_rows >= cfg.cuckoo_min_seen_rows:
         pre = S.cuckoo_prefilter(
-            merged, blobs, cfg.n_filter_partitions
+            merged, cat.read("seen_filter"), cfg.n_filter_partitions
         ).localCheckpoint(eager=False)
         definite_new = pre.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = pre.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -638,9 +641,6 @@ def _run_round(
         new_rows = S.dedupe_exact(merged, seen)
 
     new_rows = new_rows.localCheckpoint(eager=False)
-    if os.environ.get("SPARK_GRAFT_PROF") == "2":
-        new_rows.count()
-        _prof(rnd, t0, "seen-dedupe materialized")
     robots_rows = robots_injection(new_rows, hs, seen, rnd)
     new_frontier = new_rows.unionByName(robots_rows).localCheckpoint(eager=False)
     # one job: delta size + exact new-host count (the countDistinct is
@@ -674,8 +674,15 @@ def _run_round(
         .select("host", F.lit(0.0).alias("tokens"),
                 F.lit(1.0).alias("crawl_delay"), F.lit(False).alias("robots_done"))
     )
-    hs2 = _apply_host_updates(hs, host_updates, robots_res, new_hosts)
-    pending_next = leftover.unionByName(new_frontier)
+    # the carry: localCheckpoint the next round's decide inputs (cuts
+    # the cross-round lineage — WITHOUT this the logical plan nests one
+    # full round deeper every round and the driver melts down rendering/
+    # optimizing it).  Lazy: whichever touches it first (the commit
+    # job's write or the next round's decide) pays the one
+    # materialization.
+    hs2 = _apply_host_updates(
+        hs, host_updates, robots_res, new_hosts).localCheckpoint(eager=False)
+    pending_next = leftover.unionByName(new_frontier).localCheckpoint(eager=False)
     wall_ms = int((time.time() - t0) * 1000)
     stats = (
         parsed.groupBy("page_type")
@@ -700,77 +707,38 @@ def _run_round(
         lambda: cat.write_round("round_metrics", stats, rnd, DELTA,
                                 skip_if_empty=False),
     ]
-    if cfg.use_cuckoo:
-        if rnd % cfg.filter_compact_every == 0:
-            # allowMissingColumns: a schema-evolved seen table (catalog
-            # add-column) is wider than this round's delta; the filter
-            # blobs consume url_hash only, so the nulls are harmless
-            all_seen = (
-                seen.unionByName(seen_delta, allowMissingColumns=True)
-                if seen is not None else seen_delta
-            )
-            writes.append(lambda: cat.write_round(
-                "seen_filter",
-                S.compact_blobs(all_seen, cfg.n_filter_partitions, rnd,
-                                kind=cfg.filter_kind),
-                rnd, REPLACE, skip_if_empty=False,
-            ))
-        elif n_new:
-            writes.append(lambda: cat.write_round(
-                "seen_filter",
-                S.build_delta_blobs(new_frontier, cfg.n_filter_partitions, rnd,
-                                    n_rows=n_new, kind=cfg.filter_kind),
-                rnd, DELTA, skip_if_empty=False,
-            ))
-    lineage = {"next_rank": next_rank + n_admitted, "config": asdict(cfg),
-               "n_hosts_ub": n_hosts_ub}
-    metrics = {
-        "n_admitted": n_admitted, "n_new": n_new, "n_blocked": n_blocked,
-        "n_pending_before": n_pending_after,
-    }
-    intermediates = [decided, decide_cand, ranked, rank_parts, robots_res,
-                     merged, pre, new_rows, new_frontier]
-
-    if rules_changed:
-        # a rules update must be committed before the next round's
-        # decide consumes it — no carry, synchronous commit (robots
-        # rounds are the first few only; losing their overlap is noise)
-        _write_all(writes)
-        early_fut.result()
-        seen_fut.result()
-        _prof(rnd, t0, "state writes done")
-        cat.commit_round(rnd, lineage=lineage, metrics=metrics)
-        _release(intermediates + _carry_dfs(carry))
-        return True, rnd, next_rank + n_admitted, n_hosts_ub, None
-
-    # pipelined commit: localCheckpoint the next round's decide inputs
-    # (cuts the cross-round lineage — WITHOUT this the logical plan
-    # nests one full round deeper every round and the driver melts down
-    # rendering/optimizing it), run the state writes + commit +
-    # intermediate releases in the background, and hand the in-memory
-    # state forward.  Lazy checkpoint: whichever touches it first (the
-    # background frontier write or the next round's decide) pays the
-    # one materialization; intermediates stay checkpointed until the
-    # writes complete.  The previous carry's blocks retire here too — only
-    # after this round's writes, because checkpointed blocks cannot be
-    # recomputed once dropped.
-    pending_next = pending_next.localCheckpoint(eager=False)
-    hs2 = hs2.localCheckpoint(eager=False)
-    retiring = intermediates + _carry_dfs(carry)
-
-    def _commit_bg():
-        _write_all(writes)
-        early_fut.result()
-        seen_fut.result()
-        _prof(rnd, t0, "state writes done (bg)")
-        cat.commit_round(rnd, lineage=lineage, metrics=metrics)
-        _release(retiring)
-
-    fut = ex.submit(_commit_bg)
-    _prof(rnd, t0, "commit submitted (bg)")
-    return True, rnd, next_rank + n_admitted, n_hosts_ub, _Carry(
-        frontier=pending_next, host_state=hs2, rules=rules, commit=fut
+    if rnd % cfg.filter_compact_every == 0:
+        # allowMissingColumns: a schema-evolved seen table (catalog
+        # add-column) is wider than this round's delta; the filter
+        # blobs consume url_hash only, so the nulls are harmless
+        all_seen = (
+            seen.unionByName(seen_delta, allowMissingColumns=True)
+            if seen is not None else seen_delta
+        )
+        writes.append(lambda: cat.write_round(
+            "seen_filter", S.compact_blobs(all_seen, cfg.n_filter_partitions, rnd),
+            rnd, REPLACE, skip_if_empty=False,
+        ))
+    elif n_new:
+        writes.append(lambda: cat.write_round(
+            "seen_filter",
+            S.build_delta_blobs(new_frontier, cfg.n_filter_partitions, rnd,
+                                n_rows=n_new),
+            rnd, DELTA, skip_if_empty=False,
+        ))
+    out = _Outcome(
+        rnd, next_rank + n_admitted, n_hosts_ub, writes,
+        staged=[early_fut, seen_fut],
+        metrics={"n_admitted": n_admitted, "n_new": n_new,
+                 "n_blocked": n_blocked, "n_pending_before": n_pending_after},
+        release=release + [ranked, rank_parts, robots_res, merged, pre,
+                           new_rows, new_frontier],
     )
+    # a rules update must be committed before the next round's decide
+    # consumes it, so that round waits on its commit and hands no carry
+    # (robots rounds are the first few only; losing their overlap is noise)
+    return True, out, _hand_on(cat, cfg, ex, carry, out, pending_next, hs2,
+                               rules, wait=rules_changed)
 
 
 def _write_all(writes):
@@ -779,8 +747,6 @@ def _write_all(writes):
     lets the scheduler overlap their (mostly fixed) latencies.  Any
     failure propagates before commit, so the snapshot protocol's
     all-or-nothing property is preserved."""
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=len(writes)) as ex:
         for f in [ex.submit(w) for w in writes]:
             f.result()

@@ -151,6 +151,22 @@ class TestCuckoo:
         with pytest.raises(RuntimeError):
             cf.insert(np.arange(10000, dtype=np.int64))
 
+    def test_from_bytes_rejects_truncated_blob(self):
+        cf = CuckooFilter.sized_for(100)
+        cf.insert(np.arange(50, dtype=np.int64))
+        blob = cf.to_bytes()
+        for cut in (len(blob) - 2, 16, 8):
+            with pytest.raises(ValueError):
+                CuckooFilter.from_bytes(blob[:cut])
+
+    def test_from_bytes_rejects_bloom_header(self):
+        """A blocked-bloom blob (the removed second filter kind, which an
+        older run dir may still hold) leads with a negative magic int64
+        ("BLM1"), then its block count, key count and 64-byte blocks."""
+        header = np.array([-0x424C4D31, 4, 10], dtype=np.int64).tobytes()
+        with pytest.raises(ValueError, match="not a cuckoo-filter blob"):
+            CuckooFilter.from_bytes(header + bytes(4 * 64))
+
     def test_partitioned_keys_no_bucket_aliasing(self):
         """Regression: the seen-set partitions by pmod(key, P), so keys
         within one partition share their low bits; the bucket index

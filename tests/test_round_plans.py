@@ -167,3 +167,28 @@ def test_resume_without_manifest_schemas_is_exact(spark, polite_calls):
     assert _crawl_hashes(cat) == FULL_CRAWL
     tables = cat.latest().tables
     assert "schema" not in tables["seen"] and "schema" in tables["frontier"]
+
+
+@pytest.mark.parametrize("filter_on", [True, False])
+def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
+                                                  filter_on):
+    """A snapshot whose lineage config still names the options removed
+    from ``CrawlConfig`` (``filter_kind``, ``use_cuckoo``,
+    ``cache_pages``) resumes, with the config taken from the lineage,
+    to the full-crawl hashes.  One written with the filter off has no
+    ``seen_filter`` table; resume rebuilds it from ``seen``."""
+    run_dir = f"{polite_calls['tmp']}/old_keys_{filter_on}"
+    shutil.copytree(polite_calls["base"], run_dir)
+    with open(os.path.join(run_dir, "_SNAPSHOT")) as f:
+        mf = os.path.join(run_dir, "_manifests", json.load(f)["manifest"])
+    with open(mf) as f:
+        m = json.load(f)
+    m["lineage"]["config"].update(
+        filter_kind="cuckoo", use_cuckoo=filter_on, cache_pages=False)
+    if not filter_on:
+        del m["tables"]["seen_filter"]
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    cat = plans.resume(spark, polite_calls["pages"], run_dir)
+    assert _crawl_hashes(cat) == FULL_CRAWL
+    assert cat.latest().tables["seen_filter"]["paths"]

@@ -2,20 +2,24 @@
 terminal-round batching).
 
 A starved round (pending rows exist, zero admissions) changes nothing
-but candidate hosts' token levels, so its no-op successors are batched
-into one commit.  Because burst = 2x refill, a candidate host either
-admits within one more refill or NEVER can (burst < 1 token) — so the
-reachable cases are a single-round skip and the permanent-starvation
-jump to the round horizon.  The differential twin here builds the
-permanent case: a host whose robots.txt sets Crawl-delay 4x the round
-budget (refill 0.25, burst 0.5 < 1 token) — the oracle idles from
-round 2 to max_rounds one round at a time; the engine must reach the
-IDENTICAL end state (ledger, seen, final round number, exact token
-float) in O(1) commits instead of O(max_rounds).
+but candidate hosts' token levels.  Because burst = 2x refill, a
+candidate host either admits after the next refill or NEVER can
+(burst < 1 token) — so a starved round either commits at its own
+index or jumps to the round horizon in one commit.  Two differential
+twins: a host that starves in single rounds between admissions (each
+starved round commits at its own index and hands its carry to the
+next, admitting round), and the permanent case: a host whose
+robots.txt sets Crawl-delay 4x the round budget (refill 0.25, burst
+0.5 < 1 token) — the oracle idles from round 2 to max_rounds one
+round at a time; the engine must reach the IDENTICAL end state
+(ledger, seen, final round number, exact token float) in O(1) commits
+instead of O(max_rounds).
 """
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -111,5 +115,67 @@ def test_starved_fastforward_resume_is_noop(spark):
         after = (cat2.latest().round,
                  cat2.read("crawl_order").count(), cat2.read("seen").count())
         assert before == after == (MAX_ROUNDS, 1, 2)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_starved_round_hands_its_carry_to_an_admitting_round(spark):
+    """Crawl-delay 6 against round_seconds=4: refill 2/3, burst 4/3.
+    After the robots round the host admits one URL, then alternately
+    starves (2/3 - float rounding < 1 token) and admits, so rounds 3
+    and 5 are starved and each hands its carry to an admitting round.
+    The seed URLs are absent from the corpus (404), so nothing else is
+    discovered, and round 7 is drained."""
+    from datetime import datetime
+
+    host = "https://every.example"
+    robots_url = f"{host}/robots.txt"
+    robots_body = "User-agent: *\nCrawl-delay: 6\n"
+    seeds = [f"{host}/beer/profile/{i}/" for i in (1, 2, 3)]
+    pages = [{"url": robots_url, "warc_ts": datetime(2024, 1, 1),
+              "html": robots_body.encode(), "text": robots_body, "lang": "en"}]
+    ores = oracle.crawl({robots_url: pages[0]}, seeds, round_seconds=4)
+    assert ores.rounds == 7
+    assert sorted({r for _, r, _ in ores.crawl_order}) == [1, 2, 4, 6]
+
+    tmp = tempfile.mkdtemp(prefix="ba_starved_carry_")
+    try:
+        pages_path = f"{tmp}/pages"
+        write_corpus(spark.createDataFrame(pages, schema=pages_schema()),
+                     pages_path, 16, 4)
+        run_dir = f"{tmp}/run"
+        cat = plans.run(spark, pages_path, seeds, run_dir,
+                        CrawlConfig(round_seconds=4))
+        m = cat.latest()
+        assert m.round == ores.rounds and m.lineage.get("drained")
+        got_order = [
+            (r["rank"], r["round"], r["url"])
+            for r in cat.read("crawl_order").orderBy("rank").collect()
+        ]
+        assert got_order == ores.crawl_order
+        got_seen = {(r["url"], r["url_hash"])
+                    for r in cat.read("seen").collect()}
+        assert got_seen == {(u, xxh64_signed(u)) for u in ores.seen}
+        # the oracle's token float after round 6 (the drained round
+        # writes no host_state): refill 4 before robots.txt lands,
+        # then 4/6, less one token per admitted URL
+        admitted = [0] * ores.rounds
+        for _, r, _ in ores.crawl_order:
+            admitted[r] += 1
+        tokens, refill = 0.0, 4.0
+        for r in range(1, ores.rounds):
+            if r == 2:
+                refill = 4 / 6
+            tokens = min(2 * refill, tokens + refill) - admitted[r]
+        hs = {r["host"]: r for r in cat.read("host_state").collect()}
+        assert hs["every.example"]["tokens"] == tokens
+        assert abs(tokens - 1 / 3) < 1e-9
+        # every round committed at its own index: no fast-forward
+        mdir = os.path.join(run_dir, "_manifests")
+        names = sorted(os.listdir(mdir))
+        assert len(names) == ores.rounds + 1
+        for name in names:
+            with open(os.path.join(mdir, name)) as f:
+                assert "fast_forwarded_from" not in json.load(f)["lineage"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
