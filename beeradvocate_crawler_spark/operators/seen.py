@@ -130,7 +130,9 @@ def compact_blobs(seen: DataFrame, n_parts: int, rnd: int) -> DataFrame:
     """Rebuild one blob per partition from the full seen table — a
     single distributed pass; bounds lookup cost to O(1) blobs/partition."""
 
-    def rebuild(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated: a partly annotated grouped-map function makes
+    # applyInPandas warn that it cannot infer the eval type from hints
+    def rebuild(key, pdf):
         keys = pdf["url_hash"].to_numpy(dtype=np.int64)
         cf = CuckooFilter.sized_for(max(64, len(keys)))
         cf.insert(keys)
