@@ -3,7 +3,8 @@
 ONE set of compiled regexes, used two ways:
 - pure-Python parse functions (the sequential oracle, SURVEY.md §5.2);
 - vectorized pandas ``Series.str.extract`` / ``extractall`` twins (the
-  engine's mapInPandas parser, operators/parse.py).
+  engine's ``mapInArrow`` parser, operators/parse.py, which returns
+  the fields as typed Arrow columns).
 
 Keeping a single pattern table is the SURVEY §7.4 mitigation for the
 byte-exactness risk: the two paths literally share the regex objects.

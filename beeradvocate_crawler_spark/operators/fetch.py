@@ -22,7 +22,7 @@ Common-Crawl-style tables, BASELINE.json north_star).  Scale design:
   shuffled join (AQE picks SMJ/SHJ and handles skew);
 - hot-host skew (A14): the join key is ``url``, whose hash is uniform
   even when ONE host owns the whole batch — the downstream
-  mapInPandas parse inherits the corpus's file-split parallelism.
+  mapInArrow parse inherits the corpus's file-split parallelism.
 """
 
 from __future__ import annotations

@@ -2,10 +2,14 @@
 
 One round = one Spark job DAG (driver orchestrates; all data paths are
 DataFrame ops; Python only at the two Arrow boundaries: parse UDF and
-cuckoo cogroup).  Every round commits a snapshot — the PENDING
-frontier snapshot (written straight off the round's checkpointed
-decision table, never by joining/rewriting the full frontier history)
-plus append-only deltas (terminal frontier_log rows, seen, ledger,
+cuckoo cogroup).  The parse UDF returns typed columns
+(``operators.parse.PARSE_SCHEMA``), so the round reads its outputs by
+column selection: the robots rules are ``inline``d straight from
+``parsed.rules``, the links from ``link_urls``/``link_pos``.
+
+Every round commits a snapshot — the PENDING frontier snapshot
+(written straight off the round's checkpointed decision table, never
+by joining/rewriting the full frontier history) plus append-only deltas (terminal frontier_log rows, seen, ledger,
 parsed, metrics) — so ``resume`` continues bit-identically (§5.3
 property).
 Independent table writes are submitted from concurrent driver threads:
@@ -89,8 +93,6 @@ from ..operators.politeness import (
 )
 from ..sources.catalog import DELTA, REPLACE, SnapshotCatalog
 from ..sources.corpus import read_corpus_meta
-
-RULES_JSON_SCHEMA = "rules array<struct<ord: int, allow: boolean, prefix: string>>"
 
 
 @dataclass
@@ -544,21 +546,17 @@ def _run_round(
         robots_res = (
             ranked.filter(F.col("page_type") == "robots")
             .select("url", "host")
-            .join(parsed.select("url", "record_json", "crawl_delay"), "url", "left")
+            .join(parsed.select("url", "rules", "crawl_delay"), "url", "left")
             .select(
                 "host",
                 F.lit(True).alias("robots_done_new"),
                 F.coalesce("crawl_delay", F.lit(1.0)).alias("crawl_delay_new"),
-                "record_json",
+                "rules",
             )
             .localCheckpoint(eager=False)
         )
-        new_rules = (
-            robots_res.filter(F.col("record_json").isNotNull())
-            .select("host", F.explode(F.from_json("record_json", RULES_JSON_SCHEMA)["rules"]).alias("r"))
-            .select("host", F.col("r.ord").alias("rule_ord"),
-                    F.col("r.allow").alias("allow"), F.col("r.prefix").alias("prefix"))
-        )
+        new_rules = robots_res.select("host", F.inline("rules")).withColumnRenamed(
+            "ord", "rule_ord")
         if new_rules.count():
             rules2 = new_rules if rules is None else rules.unionByName(new_rules)
             cat.write_round("robots_rules", rules2, rnd, REPLACE,

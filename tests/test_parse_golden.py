@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from beeradvocate_crawler_spark.fixtures import site_model as sm
 from beeradvocate_crawler_spark.functions import parse_fields as pf
 from beeradvocate_crawler_spark.functions.textextract import html_to_text
@@ -82,18 +84,68 @@ def test_text_byte_identity_against_generator():
         assert html_to_text(p["html"].decode("utf-8")) == p["text"]
 
 
-def test_json_esc_roundtrips_control_chars():
-    """Every \\x00-\\x1f char must escape to what json.dumps produces,
-    or from_json silently nulls the record downstream."""
-    import json
+# every control char plus the two characters JSON escapes
+CTRL = "".join(map(chr, range(0x20))) + '"\\'
 
-    import pandas as pd
 
-    from beeradvocate_crawler_spark.operators.parse import _json_esc
+def _key(rec: dict) -> tuple:
+    return tuple(sorted(rec.items()))
 
-    vals = (
-        ["plain", 'q"q', "b\\s", "nl\nx\r", "tab\t"]
-        + [f"a{chr(c)}b" for c in range(0x20)]
+
+def test_control_chars_cross_the_parse_boundary(spark, tmp_path):
+    """Beer and user names and review texts holding CTRL come back from
+    parse_fetched (through a parquet round trip) + records_from_parsed
+    exactly as parse_fields reads the same HTML: no record is dropped."""
+    from beeradvocate_crawler_spark.operators.parse import (
+        parse_fetched,
+        records_from_parsed,
     )
-    esc = _json_esc(pd.Series(vals))
-    assert [json.loads(f'"{e}"') for e in esc] == vals
+
+    def ctrl(html: str) -> str:
+        for tag in ('<h1 class="beer">', '<h1 class="user">', '<p class="rtext">'):
+            html = html.replace(tag, tag + CTRL)
+        return html
+
+    bid, beer, R, U = 102, 10203, 50, 24
+    pages = [
+        (sm.url_beer(bid, beer), "beer",
+         ctrl(sm.render_beer_page(bid=bid, beer=beer, start=0, R=R, U=U))),
+        (sm.url_review_page(bid, beer, 25), "review_page",
+         ctrl(sm.render_beer_page(bid=bid, beer=beer, start=25, R=R, U=U))),
+        (sm.url_user(7), "user", ctrl(sm.render_user(uid=7, P=2))),
+    ]
+    fetched = spark.createDataFrame(
+        [(u, t, h.encode("utf-8")) for u, t, h in pages],
+        "url string, page_type string, html binary",
+    )
+    parse_fetched(fetched).write.parquet(str(tmp_path / "parsed"))
+    recs = records_from_parsed(spark.read.parquet(str(tmp_path / "parsed")))
+
+    def got(name):
+        return sorted((r.asDict() for r in recs[name].collect()), key=_key)
+
+    (bu, _, bh), (ru, _, rh), (uu, _, uh) = pages
+    assert got("beers") == [pf.parse_beer(bh, bu)]
+    assert got("users") == [pf.parse_user(uh, uu)]
+    want = pf.parse_reviews(bh, bu) + pf.parse_reviews(rh, ru)
+    assert len(want) == sm.beer_n_ratings(beer, R)
+    assert got("reviews") == sorted(want, key=_key)
+    assert got("beers")[0]["name"].startswith(CTRL)
+    assert got("users")[0]["user"].startswith(CTRL)
+    assert all(r["text"].startswith(CTRL) for r in got("reviews"))
+
+
+def test_records_from_parsed_rejects_a_json_record_table(spark):
+    """A parsed table from the JSON-record engine raises, instead of
+    reading its rounds' records as missing."""
+    from beeradvocate_crawler_spark.operators.parse import records_from_parsed
+
+    old = spark.createDataFrame(
+        [(sm.url_user(7), "user", 200, "taster_7", [], [], None,
+          '{"user": "taster_7", "user_id": 7}', None)],
+        "url string, page_type string, fetch_status int, text string, "
+        "link_urls array<string>, link_pos array<int>, n_ratings int, "
+        "record_json string, crawl_delay double",
+    )
+    with pytest.raises(ValueError, match="record_json"):
+        records_from_parsed(old)
