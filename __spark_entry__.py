@@ -30,31 +30,24 @@ def entry(spark: SparkSession) -> DataFrame:
     from beeradvocate_crawler_spark.fixtures import site_model as sm
     from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
     from beeradvocate_crawler_spark.plans import crawl as plans
-    from beeradvocate_crawler_spark.sources.corpus import read_corpus_meta
+    from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
 
     tmp = tempfile.mkdtemp(prefix="ba_entry_")
     pages_path = f"{tmp}/pages"
     write_pages_parquet(spark, "smoke", pages_path)
-    meta = read_corpus_meta(pages_path)
+    layout = CorpusLayout.read(pages_path)
 
     # mix the driver's sf0.001 documents in as off-site corpus chaff
-    # (never crawled -> exercises fetch-join bucket pruning); partition
-    # moduli come from the corpus sidecar, NOT from scanning the corpus
+    # (never crawled -> exercises fetch-join bucket pruning), laid out
+    # by the corpus's recorded layout
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    chaff = docs.select(
+    chaff = layout.with_partition_cols(docs.select(
         F.concat(F.lit("https://docs.example/d/"), F.col("doc_id")).alias("url"),
         F.lit("2024-06-01 00:00:00").cast("timestamp").alias("warc_ts"),
         F.encode(F.col("text"), "UTF-8").alias("html"),
         F.col("text").alias("text"),
         F.col("lang").alias("lang"),
-    ).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.parse_url("url", F.lit("HOST"))),
-               F.lit(meta["n_buckets"])),
-    ).withColumn(
-        "file_in_bucket",
-        F.pmod(F.xxhash64("url"), F.lit(meta["files_per_bucket"])),
-    )
+    ))
     chaff.write.mode("append").partitionBy("bucket", "file_in_bucket").parquet(pages_path)
 
     run_dir = f"{tmp}/run"

@@ -1,4 +1,13 @@
-"""Crawl engine configuration."""
+"""Crawl engine configuration.
+
+Only what a caller sets: the politeness budget, the user agent, and the
+four size thresholds at which a round switches to its scale path (tests
+force each to 0 to run that path at smoke scale).  Layout constants
+live beside their single use: the corpus layout is read from the
+corpus's sidecar (``sources/corpus.py``), the seen-filter blob layout
+is ``operators/seen.py``'s, and the salt count and pre-merge broadcast
+bound are ``operators/politeness.py``'s and ``plans/crawl.py``'s.
+"""
 
 from __future__ import annotations
 
@@ -19,32 +28,14 @@ class CrawlConfig:
     # then the `*` groups do NOT apply.  The sequential oracle takes
     # the same parameter, so the e2e differential covers it.
     user_agent: str | None = None
-    # partitioned cuckoo-filter seen pre-filter (A8, functions/cuckoo.py);
-    # the exact anti-join stays authoritative.  Partition count caps
-    # the parallelism of the two Python blob stages (probe cogroup +
-    # delta build) — 8 was a measured
-    # 4->16-thread scaling sink in the heavy rounds; results are
-    # partition-count independent (the exact anti-join is the authority)
-    n_filter_partitions: int = 32
-    # probe the filter only once `seen` exceeds this many rows: the
-    # filter exists to avoid shuffling a HUGE seen table — while seen
-    # is small the exact anti-join is cheaper than the cogroup's
-    # Python stage.  Blobs are still built/compacted every round so
-    # resume and the big-seen path stay exercised.  (Results are
-    # identical either way: the e2e differential forces the probe
-    # with 0.)
+    # probe the cuckoo seen pre-filter (A8, functions/cuckoo.py) only
+    # once `seen` exceeds this many rows: the filter exists to avoid
+    # shuffling a HUGE seen table — while seen is small the exact
+    # anti-join is cheaper than the cogroup's Python stage.  Blobs are
+    # still built/compacted every round so resume and the big-seen
+    # path stay exercised.  (Results are identical either way: the e2e
+    # differential forces the probe with 0.)
     cuckoo_min_seen_rows: int = 100_000
-    filter_compact_every: int = 8  # rebuild delta blobs from `seen` every k rounds
-    # pre-merge seen filter: while `seen` fits a broadcast, already-seen
-    # child links are dropped map-side BEFORE the min-depth merge
-    # shuffle (most children are navigation back-links); beyond this the
-    # cuckoo pre-filter is the scale path.  ~2M urls ≈ 150 MB relation.
-    broadcast_seen_threshold: int = 2_000_000
-    # pages corpus bucketing (fetch-join pruning); files_per_bucket is
-    # normally read from the corpus writer's sidecar metadata
-    # (sources/corpus.py) — set explicitly only to override it
-    n_page_buckets: int = 16
-    files_per_bucket: int | None = None
     # global-rank strategy: below this batch size a single-task window
     # sorts the (politeness-bounded) batch; above it, two-phase
     # range-partitioned ranking (operators/ordering.py).  64k keeps the
@@ -52,10 +43,9 @@ class CrawlConfig:
     big_batch_threshold: int = 1 << 16
     # hot-host salting (A14, operators/politeness.py:_salted_topk): a
     # quota-CONSTRAINED host with more than hot_host_threshold eligible
-    # rows is ranked via salted two-phase top-k over n_salts salts
-    # instead of one single-task host window (same admit set; tested)
+    # rows is ranked via salted two-phase top-k instead of one
+    # single-task host window (same admit set; tested)
     hot_host_threshold: int = 4096
-    n_salts: int = 16
     # host_state joins broadcast below this many hosts (upper-bound
     # tracked in snapshot lineage); above it they fall back to a
     # co-partitioned shuffle join — a broadcast hash relation of 10^8

@@ -7,7 +7,7 @@ intra-line whitespace, drop blank lines.  The fixture generator writes
 reproduces it from ``pages.html`` via the vectorized
 :func:`html_to_text_series` built from the SAME compiled patterns
 (SURVEY.md §7.4 byte-exactness mitigation), verified equal in
-tests/test_parse.py.
+tests/test_functions.py.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ RX_SCRIPT = re.compile(r"(?is)<(script|style)[^>]*>.*?</\1>")
 RX_TAG = re.compile(r"(?s)<[^>]+>")
 RX_WS = re.compile(r"[ \t\r\f\v]+")
 RX_BLANKS = re.compile(r"\n{2,}")
-RX_EDGE = re.compile(r"^\n+|\n+$")
 RX_LINE_EDGE = re.compile(r" *\n *")
 
 
@@ -39,5 +38,6 @@ def html_to_text_series(html: pd.Series) -> pd.Series:
     s = s.str.replace(RX_WS, " ", regex=True)
     s = s.str.replace(RX_LINE_EDGE, "\n", regex=True)
     s = s.str.replace(RX_BLANKS, "\n", regex=True)
-    s = s.str.replace(RX_EDGE, "", regex=True)
-    return s
+    # at most one space or one newline is left at either end (from
+    # text before the first tag or after the last one)
+    return s.str.strip(" \n")

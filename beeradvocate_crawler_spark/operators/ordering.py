@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ORDER_COLS = ["priority", "depth", "parent_ord", "link_pos", "url"]
+# range partitions of the two-phase path (its offset map has one entry each)
+N_RANGE_PARTITIONS = 64
 
 
 def order_key(df: DataFrame) -> list:
@@ -39,7 +40,6 @@ def with_global_rank(
     start_rank: int,
     batch_rows: int,
     big_batch_threshold: int,
-    n_range_partitions: int = 64,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Adds ``rank`` = start_rank + position in the total order.
 
@@ -54,10 +54,10 @@ def with_global_rank(
             "rank", (F.row_number().over(w) - 1 + F.lit(start_rank)).cast("long")
         ), None
     # two-phase: range partition on the order key, local sort, offset by
-    # cumulative lower-partition counts (collects n_range_partitions ints)
+    # cumulative lower-partition counts (collects N_RANGE_PARTITIONS ints)
     d = (
         df.repartitionByRange(
-            n_range_partitions,
+            N_RANGE_PARTITIONS,
             F.col("priority").desc(),
             "depth",
             "parent_ord",

@@ -7,6 +7,10 @@ deterministic and cluster-size-invariant (§4.2).  Semantics mirror
 oracle.crawl step-for-step (that equivalence is the e2e differential
 test).
 
+There is one robots decision, the ``blocked`` flag of ``decide_round``:
+a hash aggregate over the rule matches (longest rule wins, Allow on
+ties), not a window sort.
+
 Physical notes for the 100 TB case:
 - the rules table is tiny per host and broadcast into the blocking join;
 - host_state joins broadcast by default and fall back to a
@@ -19,9 +23,9 @@ Physical notes for the 100 TB case:
   rows — the steady state) skip ranking entirely; constrained hosts
   rank only their own pending rows, not the frontier; and a
   quota-constrained HOT host (A14) is ranked via salted two-phase
-  top-k (``_salted_topk``) so no single task ever sorts the whole
-  host.  Fetch-side skew needs no salting: the fetch join key is the
-  uniformly-hashed url (operators/fetch.py).
+  top-k over ``N_SALTS`` salts (``_salted_topk``) so no single task
+  ever sorts the whole host.  Fetch-side skew needs no salting: the
+  fetch join key is the uniformly-hashed url (operators/fetch.py).
 """
 
 from __future__ import annotations
@@ -33,6 +37,10 @@ from .links import path_query_expr
 from .ordering import order_key
 
 TOKEN_BURST_FACTOR = 2.0
+# A14 salt count: a quota-constrained hot host is ranked over this many
+# (host, salt) windows (``_salted_topk``).  Plan shape only — the admit
+# set is the single-window sort's for any count.
+N_SALTS = 16
 
 
 def rule_match_expr(pq, rule):
@@ -60,33 +68,6 @@ def rule_match_expr(pq, rule):
     ).otherwise(pq.startswith(rule))
 
 
-def mark_robots_blocked(
-    pending: DataFrame, host_state: DataFrame, rules: DataFrame | None
-) -> DataFrame:
-    """URLs of PENDING non-robots rows on robots-known hosts that the
-    host's rules disallow (longest-prefix wins; tie -> Allow)."""
-    known = host_state.filter(F.col("robots_done")).select("host")
-    cand = (
-        pending.filter(F.col("page_type") != "robots")
-        .join(F.broadcast(known), "host")
-        .select("url", "host", path_query_expr(F.col("url")).alias("pq"))
-    )
-    if rules is None:
-        return cand.select("url").limit(0)
-    matched = cand.join(
-        F.broadcast(rules), on=["host"], how="inner"
-    ).where(rule_match_expr(F.col("pq"), F.col("prefix")))
-    w = Window.partitionBy("url").orderBy(
-        F.length("prefix").desc(), F.col("allow").desc()
-    )
-    decided = (
-        matched.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (~F.col("allow")))
-        .select("url")
-    )
-    return decided
-
-
 def decide_round(
     pending: DataFrame,
     host_state: DataFrame,
@@ -94,16 +75,14 @@ def decide_round(
     round_seconds: int,
     broadcast_hosts: bool = True,
     hot_host_threshold: int | None = None,
-    n_salts: int = 16,
-    checkpoint_cand: bool = False,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame]:
     """A10+A11+A12 fused into ONE host-partitioned pipeline.
 
     Returns ``(decided, cand)``: ``cand`` is the localCheckpoint'd
-    shared candidate table when ``checkpoint_cand`` is set (the caller
-    releases its blocks after the round's actions), else None — an
-    explicit pair, not an attribute smuggled on the DataFrame, which
-    silently breaks under copies/Spark Connect.
+    shared candidate table that ``decided`` reads (the caller releases
+    its blocks after the round's actions) — an explicit pair, not an
+    attribute smuggled on the DataFrame, which silently breaks under
+    copies/Spark Connect.
 
     ``decided`` carries every PENDING row with decision flags:
       blocked   — robots-disallowed (A10; longest-prefix, tie -> Allow)
@@ -132,12 +111,12 @@ def decide_round(
       broadcast_hosts — False once the host table outgrows a broadcast
         hash relation (10^8 hosts); both host-side joins then go
         through a co-partitioned shuffle (AQE strategy).
-      hot_host_threshold / n_salts — A14 salted-key skew splitting: a
+      hot_host_threshold — A14 salted-key skew splitting: a
         quota-constrained host with more than ``hot_host_threshold``
         eligible rows is ranked in two phases — per-(host, salt)
-        partial top-quota over ``pmod(xxhash64(url), n_salts)`` salts
-        (spreads the hot host over n_salts tasks), then a final rank
-        over the <= n_salts*quota survivors.  Exact same admit set as
+        partial top-quota over ``pmod(xxhash64(url), N_SALTS)`` salts
+        (spreads the hot host over N_SALTS tasks), then a final rank
+        over the <= N_SALTS*quota survivors.  Exact same admit set as
         the single-window sort (total order, content-keyed salt).
     """
     hs_marked = host_state.select(
@@ -184,15 +163,13 @@ def decide_round(
     # the three admit branches below); Catalyst does no cross-subtree
     # CSE, so each consumer would re-scan the frontier and re-run the
     # joins — a fixed multi-job latency floor on every round.  The
-    # round loop opts in and releases the blocks via the handle on the
-    # result.  A checkpoint, not a persist: downstream plans start from
-    # a LogicalRDD leaf instead of embedding (and re-rendering) this
+    # caller releases the blocks via the returned handle.  A
+    # checkpoint, not a persist: downstream plans start from a
+    # LogicalRDD leaf instead of embedding (and re-rendering) this
     # whole subtree.
-    if checkpoint_cand:
-        cand = cand.localCheckpoint(eager=False)
-    # the handle must be the checkpoint itself: ``cand`` is rebound to
-    # the joined table below, whose release would free nothing
-    shared = cand if checkpoint_cand else None
+    # The handle must be the checkpoint itself: ``cand`` is rebound to
+    # the joined table below, whose release would free nothing.
+    shared = cand = cand.localCheckpoint(eager=False)
     # per-host eligible count via partial-aggregated groupBy + join
     # back — NOT a host window, which would drag every row of the
     # hot host into one task (the single-host skew is by construction)
@@ -237,24 +214,23 @@ def decide_round(
     out = unconstrained.unionByName(constrained)
     if hot_host_threshold is not None:
         out = out.unionByName(
-            _salted_topk(cand.where((F.col("n_elig") > F.col("quota")) & is_hot),
-                         n_salts)
+            _salted_topk(cand.where((F.col("n_elig") > F.col("quota")) & is_hot))
         )
     out = out.drop("quota", "robots_done")
     return out, shared
 
 
-def _salted_topk(hot: DataFrame, n_salts: int) -> DataFrame:
+def _salted_topk(hot: DataFrame) -> DataFrame:
     """A14: exact per-host top-quota admission for quota-constrained
     hot hosts WITHOUT a single-task host-wide sort.  Phase 1 ranks
-    within (host, salt) — the hot host's rows spread over ``n_salts``
+    within (host, salt) — the hot host's rows spread over ``N_SALTS``
     tasks — keeping each salt's top quota (a row outside its salt's
     top-quota has >= quota rows of its own salt ahead of it in the
     total order, so it cannot be in the host top-quota).  Phase 2
-    ranks the <= n_salts*quota survivors per host and marks the true
+    ranks the <= N_SALTS*quota survivors per host and marks the true
     winners; every input row is RETAINED with its admit flag (the
     decided table is also the next round's pending source)."""
-    salted = hot.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
+    salted = hot.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALTS)))
     w1 = Window.partitionBy("host", "_salt").orderBy(
         F.col("eligible").desc(), *order_key(hot)
     )
@@ -292,52 +268,3 @@ def host_updates_from_decided(decided: DataFrame) -> DataFrame:
         )
     )
 
-
-def admit(
-    pending: DataFrame,
-    host_state: DataFrame,
-    round_seconds: int,
-) -> tuple[DataFrame, DataFrame]:
-    """One round of token-bucket admission.
-
-    Returns (admitted rows, host token/refill updates).  Candidates per
-    host are its robots row(s) until robots_done, else all pending rows;
-    hosts WITHOUT candidates this round do not refill (oracle parity).
-    """
-    cand = pending.join(
-        F.broadcast(host_state.select("host", "tokens", "crawl_delay", "robots_done")),
-        "host",
-    ).where(F.col("robots_done") | (F.col("page_type") == "robots"))
-
-    refill = F.lit(float(round_seconds)) / F.col("crawl_delay")
-    budgets = (
-        cand.groupBy("host")
-        .agg(
-            F.count("*").alias("n_cand"),
-            F.first("tokens").alias("tokens"),
-            F.first("crawl_delay").alias("crawl_delay"),
-        )
-        .withColumn(
-            "tokens_refilled",
-            F.least(F.lit(TOKEN_BURST_FACTOR) * refill, F.col("tokens") + refill),
-        )
-        .withColumn("quota", F.floor("tokens_refilled").cast("int"))
-    )
-
-    w = Window.partitionBy("host").orderBy(*order_key(cand))
-    admitted = (
-        cand.join(F.broadcast(budgets.select("host", "quota")), "host")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= F.col("quota"))
-        .drop("rn", "quota", "tokens", "crawl_delay", "robots_done")
-    )
-    spent = admitted.groupBy("host").agg(F.count("*").alias("n_admitted"))
-    host_updates = (
-        budgets.join(spent, "host", "left")
-        .withColumn(
-            "tokens_after",
-            F.col("tokens_refilled") - F.coalesce(F.col("n_admitted"), F.lit(0)),
-        )
-        .select("host", "tokens_after")
-    )
-    return admitted, host_updates

@@ -2,21 +2,26 @@
 
 The pre-filter is the spec's "partitioned cuckoo-filter URL-seen set
 keyed by canonicalized-URL xxhash64" [B:6]: one cuckoo blob
-(functions/cuckoo.py) per ``pmod(url_hash, n_parts)`` partition and
-round, in the ``seen_filter`` table.  ``CuckooFilter.from_bytes``
-checks every blob it decodes, so a blob of another kind fails loudly
-instead of probing garbage.
+(functions/cuckoo.py) per ``pmod(url_hash, N_FILTER_PARTITIONS)``
+partition and round, in the ``seen_filter`` table.
+``CuckooFilter.from_bytes`` checks every blob it decodes, so a blob of
+another kind fails loudly instead of probing garbage.
 
 Exactness layering (§7.1): the filter only PRUNES — candidates it
 proves absent skip the anti-join; "maybe seen" survivors (all true
 dupes + ~0.012% false positives) still go through the exact
-left-anti join against ``seen``, which remains the authority.  A
-filter bug can cost performance, never correctness.
+left-anti join against ``seen``, which remains the authority.  So
+the filter must never answer "definitely new" for a seen url.  That
+holds because the blob layout is a module constant: a probe reads
+blobs that earlier rounds wrote, possibly before a resume, and blobs
+written under another partition count would be looked up in the wrong
+partitions.  Within that layout a filter bug can cost performance,
+never correctness.
 
 Blob lifecycle (delta + compaction): each round inserts the round's
 new keys into a FRESH delta blob per partition (sized exactly, never
 overflows); lookup ORs membership across the partition's blobs; every
-``filter_compact_every`` rounds the blobs are rebuilt from the
+``FILTER_COMPACT_EVERY`` rounds the blobs are rebuilt from the
 ``seen`` table in one distributed pass, bounding probe cost.  At
 10^10 URLs the seen table is ~petabyte-adjacent; the filter is what
 keeps every round from shuffling it (§4.3).
@@ -34,6 +39,14 @@ from pyspark.sql import types as T
 
 from ..functions.cuckoo import CuckooFilter
 
+# Blob partitions, part of the persisted layout (see above).  The count
+# also caps the parallelism of the two Python blob stages (probe
+# cogroup + delta build) — 8 was a measured 4->16-thread scaling sink
+# in the heavy rounds.
+N_FILTER_PARTITIONS = 32
+# rebuild the delta blobs from `seen` every k rounds
+FILTER_COMPACT_EVERY = 8
+
 BLOB_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType()),
@@ -44,8 +57,8 @@ BLOB_SCHEMA = T.StructType(
 )
 
 
-def partition_id_expr(url_hash, n_parts: int):
-    return F.pmod(url_hash, F.lit(n_parts)).cast("int")
+def partition_id_expr(url_hash):
+    return F.pmod(url_hash, F.lit(N_FILTER_PARTITIONS)).cast("int")
 
 
 def dedupe_exact(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
@@ -55,15 +68,13 @@ def dedupe_exact(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
     return candidates.join(seen, ["url_hash", "url"], "left_anti")
 
 
-def cuckoo_prefilter(
-    candidates: DataFrame, blobs: DataFrame | None, n_parts: int
-) -> DataFrame:
+def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame | None) -> DataFrame:
     """A8: adds ``maybe_seen`` (bool).  False => definitely new (skip
     the anti-join).  Implemented as a cogrouped-map pandas UDF so each
     partition's candidate batch meets its filter blobs without
     shuffling the seen table."""
     cand = candidates.withColumn(
-        "partition_id", partition_id_expr(F.col("url_hash"), n_parts)
+        "partition_id", partition_id_expr(F.col("url_hash"))
     )
     if blobs is None:
         return cand.withColumn("maybe_seen", F.lit(False)).drop("partition_id")
@@ -89,14 +100,15 @@ def cuckoo_prefilter(
 
 
 def build_delta_blobs(
-    new_rows: DataFrame, n_parts: int, rnd: int, n_rows: int | None = None
+    new_rows: DataFrame, rnd: int, n_rows: int | None = None
 ) -> DataFrame:
     """Fresh delta blob per partition holding this round's new keys.
 
     Task count adapts to the delta size (each task builds the blobs of
-    the partition_ids it holds — blob layout is always the n_parts
-    pmod, independent of task count), so a 100-row round doesn't pay
-    n_parts python-worker round-trips while a 1M-row round fans out."""
+    the partition_ids it holds — blob layout is always the
+    N_FILTER_PARTITIONS pmod, independent of task count), so a 100-row
+    round doesn't pay a python-worker round-trip per partition while a
+    1M-row round fans out."""
 
     def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdf_iter:
@@ -113,12 +125,12 @@ def build_delta_blobs(
                     }
                 )
 
-    n_tasks = n_parts
+    n_tasks = N_FILTER_PARTITIONS
     if n_rows is not None:
-        n_tasks = max(1, min(n_parts, n_rows // 50_000 + 1))
+        n_tasks = max(1, min(N_FILTER_PARTITIONS, n_rows // 50_000 + 1))
     return (
         new_rows.select(
-            partition_id_expr(F.col("url_hash"), n_parts).alias("partition_id"),
+            partition_id_expr(F.col("url_hash")).alias("partition_id"),
             "url_hash",
         )
         .repartition(n_tasks, "partition_id")
@@ -126,7 +138,7 @@ def build_delta_blobs(
     )
 
 
-def compact_blobs(seen: DataFrame, n_parts: int, rnd: int) -> DataFrame:
+def compact_blobs(seen: DataFrame, rnd: int) -> DataFrame:
     """Rebuild one blob per partition from the full seen table — a
     single distributed pass; bounds lookup cost to O(1) blobs/partition."""
 
@@ -147,7 +159,7 @@ def compact_blobs(seen: DataFrame, n_parts: int, rnd: int) -> DataFrame:
 
     return (
         seen.select(
-            partition_id_expr(F.col("url_hash"), n_parts).alias("partition_id"),
+            partition_id_expr(F.col("url_hash")).alias("partition_id"),
             "url_hash",
         )
         .groupBy("partition_id")

@@ -47,7 +47,6 @@ from .functions.urlnorm import (
     host_of,
     path_query_of,
 )
-from .functions.xxh64 import xxh64_signed
 
 PAGINATION_LINK_POS = 100000
 TOKEN_BURST_FACTOR = 2.0
@@ -88,9 +87,6 @@ class CrawlResult:
     users: list[dict]
     texts: dict[str, str]  # url -> extracted text (byte-identical golden)
     rounds: int
-
-    def seen_hashes(self) -> set[int]:
-        return {xxh64_signed(u) for u in self.seen}
 
 
 def crawl(

@@ -75,7 +75,7 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..operators import links as L
 from ..operators import seen as S
-from ..operators.fetch import fetch_join, prune_key_expr
+from ..operators.fetch import fetch_join
 from ..operators.frontier import (
     DONE,
     PENDING,
@@ -92,7 +92,13 @@ from ..operators.politeness import (
     host_updates_from_decided,
 )
 from ..sources.catalog import DELTA, REPLACE, SnapshotCatalog
-from ..sources.corpus import read_corpus_meta
+from ..sources.corpus import CorpusLayout
+
+# Pre-merge seen filter bound: while `seen` has at most this many rows,
+# already-seen child links are dropped map-side BEFORE the min-depth
+# merge shuffle (most children are navigation back-links); beyond it
+# the cuckoo pre-filter is the scale path.  ~2M urls ≈ 150 MB relation.
+BROADCAST_SEEN_THRESHOLD = 2_000_000
 
 
 @dataclass
@@ -194,7 +200,7 @@ def run(
     cat.write_round("host_state", host_state0, 0, REPLACE, skip_if_empty=False)
     cat.write_round("seen", seen0, 0, DELTA)
     cat.write_round(
-        "seen_filter", S.build_delta_blobs(seen0, cfg.n_filter_partitions, 0),
+        "seen_filter", S.build_delta_blobs(seen0, 0),
         0, DELTA, skip_if_empty=False,
     )
     # host-count upper bound (drives broadcast-vs-shuffle host joins);
@@ -219,7 +225,9 @@ def resume(
     blobs (e.g. catalog copied without seen_filter, or written with the
     filter switched off) are rebuilt from the authoritative ``seen``
     table.  Lineage config keys that are no longer ``CrawlConfig``
-    fields (options since removed) are ignored."""
+    fields (options since removed, e.g. the corpus moduli and the
+    filter layout, now read from the corpus sidecar and fixed in
+    ``operators/seen.py``) are ignored."""
     cat = SnapshotCatalog(spark, run_dir)
     m = cat.latest()
     if m is None:
@@ -235,7 +243,7 @@ def resume(
             and m.tables.get("seen", {}).get("paths")):
         cat.write_round(
             "seen_filter",
-            S.compact_blobs(cat.read("seen"), cfg.n_filter_partitions, m.round),
+            S.compact_blobs(cat.read("seen"), m.round),
             m.round, REPLACE, skip_if_empty=False,
         )
         cat.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
@@ -244,24 +252,9 @@ def resume(
 
 def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     pages = spark.read.parquet(pages_path)
-    # two-level partition layout? the pruning moduli MUST come from the
-    # corpus writer's sidecar metadata (sources/corpus.py) — inferring
-    # files_per_bucket from max(file_in_bucket)+1 is wrong whenever the
-    # top residue is unoccupied, and the resulting mis-pruning reports
-    # silent false 404s.  No sidecar + no explicit cfg value means the
-    # file-level prune is disabled (bucket-level pruning still applies).
-    fpb = cfg.files_per_bucket
-    if fpb is None and "file_in_bucket" in pages.columns:
-        meta = read_corpus_meta(pages_path)
-        if meta is not None:
-            fpb = int(meta["files_per_bucket"])
-            if int(meta["n_buckets"]) != cfg.n_page_buckets:
-                raise ValueError(
-                    f"corpus written with n_buckets={meta['n_buckets']} but "
-                    f"cfg.n_page_buckets={cfg.n_page_buckets}; bucket pruning "
-                    "would scan the wrong directories"
-                )
-    cfg._files_per_bucket = fpb
+    # the pruning layout comes only from the corpus writer's sidecar
+    # (sources/corpus.py); no sidecar -> the fetch join scans unpruned
+    layout = CorpusLayout.read(pages_path)
     m = cat.latest()
     next_rank = int(m.lineage.get("next_rank", 0))
     n_hosts_ub = m.lineage.get("n_hosts_ub")
@@ -288,8 +281,8 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
             # the commit round may come back advanced: a starved round
             # commits its no-op successors at once (fast-forward)
             progressed, out, carry = _run_round(
-                spark, cat, pages, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex,
-                ex_early,
+                spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0,
+                carry, ex, ex_early,
             )
             rnd, next_rank, n_hosts_ub = out.rnd, out.next_rank, out.n_hosts_ub
             _prof(rnd, t0, "round end")
@@ -318,7 +311,8 @@ def _prof(rnd, t0, label):
 
 
 def _run_round(
-    spark, cat, pages, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex, ex_early
+    spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex,
+    ex_early,
 ) -> tuple[bool, _Outcome, _Carry | None]:
     """Returns (progressed, outcome, carry); the outcome's ``rnd`` is
     AHEAD of the input when a starved round fast-forwards past its
@@ -360,13 +354,13 @@ def _run_round(
         pending, hs, rules, cfg.round_seconds,
         broadcast_hosts=broadcast_hosts,
         hot_host_threshold=cfg.hot_host_threshold,
-        n_salts=cfg.n_salts,
-        checkpoint_cand=True,
     )
     decided = decided.localCheckpoint(eager=False)
     # the corpus-prune key set rides inside the SAME aggregation job
-    # (bounded by the n_buckets x files_per_bucket partition grid), so
-    # the round pays one driver round-trip, not two
+    # (bounded by the corpus layout's partition grid), so the round pays
+    # one driver round-trip, not two
+    prune_key = (layout.prune_key() if layout is not None
+                 else F.lit(None).cast("string"))
     agg = decided.agg(
         F.sum(F.col("blocked").cast("long")).alias("nb"),
         F.sum((~F.col("blocked")).cast("long")).alias("np"),
@@ -375,13 +369,7 @@ def _run_round(
             (F.col("admit") & (F.col("page_type") == "robots")).cast("long")
         ).alias("nr"),
         F.sum((~F.col("host_known")).cast("long")).alias("nu"),
-        F.collect_set(
-            F.when(
-                F.col("admit"),
-                prune_key_expr(cfg.n_page_buckets,
-                               getattr(cfg, "_files_per_bucket", None)),
-            )
-        ).alias("pk"),
+        F.collect_set(F.when(F.col("admit"), prune_key)).alias("pk"),
     ).collect()[0]
     prune_keys = list(agg["pk"] or [])
     _prof(rnd, t0, "decide agg done")
@@ -502,9 +490,7 @@ def _run_round(
     # deliberately NOT .persist(): caching the wide strings costs more
     # than the parquet write, and the parquet read gets column pruning
     # (the link-explode below reads only the two link columns).
-    fetched = fetch_join(ranked, pages, cfg.n_page_buckets,
-                         batch_rows=n_admitted,
-                         files_per_bucket=getattr(cfg, "_files_per_bucket", None),
+    fetched = fetch_join(ranked, pages, layout, batch_rows=n_admitted,
                          prune_keys=prune_keys)
     # COMMIT BARRIER: the previous round's commit job must land before
     # this round stages anything (staging is shared catalog state,
@@ -609,7 +595,7 @@ def _run_round(
     # Beyond the broadcast threshold the cuckoo path below takes over
     # (that is exactly what the partitioned filter blobs are for).
     seen_rows = cat.rows("seen")
-    if seen is not None and 0 < seen_rows <= cfg.broadcast_seen_threshold:
+    if seen is not None and 0 < seen_rows <= BROADCAST_SEEN_THRESHOLD:
         children = children.join(
             F.broadcast(seen.select("url")), "url", "left_anti"
         )
@@ -633,7 +619,7 @@ def _run_round(
     pre = None
     if seen_rows >= cfg.cuckoo_min_seen_rows:
         pre = S.cuckoo_prefilter(
-            merged, cat.read("seen_filter"), cfg.n_filter_partitions
+            merged, cat.read("seen_filter")
         ).localCheckpoint(eager=False)
         definite_new = pre.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = pre.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -710,7 +696,7 @@ def _run_round(
         lambda: cat.write_round("round_metrics", stats, rnd, DELTA,
                                 skip_if_empty=False),
     ]
-    if rnd % cfg.filter_compact_every == 0:
+    if rnd % S.FILTER_COMPACT_EVERY == 0:
         # allowMissingColumns: a schema-evolved seen table (catalog
         # add-column) is wider than this round's delta; the filter
         # blobs consume url_hash only, so the nulls are harmless
@@ -719,14 +705,13 @@ def _run_round(
             if seen is not None else seen_delta
         )
         writes.append(lambda: cat.write_round(
-            "seen_filter", S.compact_blobs(all_seen, cfg.n_filter_partitions, rnd),
+            "seen_filter", S.compact_blobs(all_seen, rnd),
             rnd, REPLACE, skip_if_empty=False,
         ))
     elif n_new:
         writes.append(lambda: cat.write_round(
             "seen_filter",
-            S.build_delta_blobs(new_frontier, cfg.n_filter_partitions, rnd,
-                                n_rows=n_new),
+            S.build_delta_blobs(new_frontier, rnd, n_rows=n_new),
             rnd, DELTA, skip_if_empty=False,
         ))
     out = _Outcome(

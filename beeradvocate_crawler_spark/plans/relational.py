@@ -91,30 +91,6 @@ FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """
 
-# --- C4: shuffled hash equi-join ------------------------------------------------
-
-def q_join_orders_customer(spark, sf):
-    """Inner hash equi-join + agg.  Off the driver grid since round 3 —
-    C4's grid slot is q_full_outer_join (a strict superset: same equi
-    key, plus the outer sides); kept for local/regression use."""
-    o = ld(spark, sf, "orders")
-    c = ld(spark, sf, "customer")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-SQL_JOIN_OC = """
-SELECT c_mktsegment, count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
 # --- C5: broadcast join ---------------------------------------------------------
 
 def q_broadcast_nation_region(spark, sf):
@@ -1024,7 +1000,7 @@ def q_robots_match(spark, sf):
     translation to a Java regex — applied to a synthesized path grid
     × a broadcast rules table; the most specific rule wins (longest
     pattern in octets, Allow on ties), no match → allowed.  This is
-    exactly the decision ``mark_robots_blocked`` makes per frontier
+    exactly the ``blocked`` decision ``decide_round`` makes per frontier
     candidate, as a driver-signable query: the oracle carries the same
     grid with HAND-anchored RE2 regexes, so any drift in the in-plan
     escape/translate logic hash-fails rather than silently admitting

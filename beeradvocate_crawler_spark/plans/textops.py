@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .crawl import _release
 from .relational import ld
 
 
@@ -74,22 +75,20 @@ def table_rows(sf_dir: str, name: str) -> int | None:
 # life of a 50+-query sweep (round-2 ADVICE).
 
 _SCOPED_CACHES: list[DataFrame] = []
-_SCOPED_CP_RDDS: list = []  # JavaRDD handles of query-scoped localCheckpoints
+_SCOPED_CHECKPOINTS: list[DataFrame] = []  # query-scoped localCheckpoints
 
 
 def release_caches() -> None:
-    """Unpersist every query-scoped cache.  Harnesses (bench, tests,
-    check_queries) call this after materializing a query's result."""
+    """Unpersist every query-scoped cache and checkpoint.  Harnesses
+    (bench, tests, check_queries) call this after materializing a
+    query's result."""
     while _SCOPED_CACHES:
         try:
             _SCOPED_CACHES.pop().unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
-    while _SCOPED_CP_RDDS:
-        try:
-            _SCOPED_CP_RDDS.pop().unpersist(False)
-        except Exception:
-            pass
+    _release(_SCOPED_CHECKPOINTS)
+    _SCOPED_CHECKPOINTS.clear()
 
 
 def _scoped_persist(df: DataFrame) -> DataFrame:
@@ -101,19 +100,12 @@ def _scoped_persist(df: DataFrame) -> DataFrame:
 def _scoped_local_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint whose blocks release_caches() CAN drop:
     checkpoint blocks are RDD-level persistence, invisible to
-    DataFrame.unpersist(), so the new JavaRDD handle is captured by
-    diffing getPersistentRDDs around the checkpoint (query execution is
-    single-threaded in every harness flow, so the diff is exactly this
-    checkpoint's RDD).  Release only after the result is materialized —
-    a checkpointed RDD has no lineage to recompute from."""
-    sc = df.sparkSession.sparkContext
-    jmap_before = sc._jsc.getPersistentRDDs()
-    before = {int(k) for k in jmap_before.keySet().toArray()}
+    DataFrame.unpersist(), so release_caches() frees them through the
+    checkpoint's own RDD, as the crawl loop does (``crawl._release``).
+    Release only after the result is materialized — a checkpointed RDD
+    has no lineage to recompute from."""
     out = df.localCheckpoint()
-    jmap_after = sc._jsc.getPersistentRDDs()
-    for k in jmap_after.keySet().toArray():
-        if int(k) not in before:
-            _SCOPED_CP_RDDS.append(jmap_after.get(k))
+    _SCOPED_CHECKPOINTS.append(out)
     return out
 
 
@@ -580,9 +572,9 @@ def connected_components_min_label(edges: DataFrame, max_iter: int = 20) -> Data
     flat ~1 s after the cut).  Same failure mode, same fix as the crawl
     loop's cross-round carry (plans/crawl.py).  Checkpoint blocks are
     RDD-level persistence DataFrame.unpersist() can't reach, so each
-    one's JavaRDD handle is captured (_scoped_local_checkpoint) and
-    release_caches() unpersists them explicitly after the caller
-    materializes the result (asserted by the cache-hygiene test)."""
+    one is registered (_scoped_local_checkpoint) and release_caches()
+    frees it through its RDD after the caller materializes the result
+    (asserted by the cache-hygiene test)."""
     both = _scoped_local_checkpoint(edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ))

@@ -22,7 +22,7 @@ input_hint shape):
   is encoded JVM-side.
 
 ``write_corpus`` then lays out the bucketed directory structure + the
-sidecar moduli (sources/corpus.py contract), so ``fetch_join``'s
+layout sidecar (sources/corpus.py contract), so ``fetch_join``'s
 two-level partition pruning works unchanged over ingested corpora —
 verified end-to-end by tests/test_ingest.py: a crawl over a
 WARC-ingested smoke corpus is differentially equal to the oracle.
@@ -36,6 +36,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .corpus import CorpusLayout
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -170,29 +172,19 @@ def write_corpus(
     spread by url-hash across FILES within each bucket: the fetch join
     inherits the scan's partitioning, so per-bucket file count — not
     bucket count — bounds fetch+parse parallelism when one hot host
-    owns a bucket.  Records the moduli in the sidecar (corpus.py) —
-    the fetch pruning contract."""
-    from beeradvocate_crawler_spark.sources.corpus import write_corpus_meta
-
-    spark = df.sparkSession
-    files_per_bucket = files_per_bucket or max(
-        64, spark.sparkContext.defaultParallelism * 2
-    )
+    owns a bucket.  Records the layout in the corpus sidecar
+    (corpus.py) — the fetch pruning contract."""
+    layout = CorpusLayout(n_buckets, files_per_bucket or max(
+        64, df.sparkSession.sparkContext.defaultParallelism * 2))
     (
-        df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.parse_url("url", F.lit("HOST"))), F.lit(n_buckets)),
-        )
-        .withColumn(
-            "file_in_bucket",
-            F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)),
-        )
-        .repartition(n_buckets * files_per_bucket, "bucket", "file_in_bucket")
+        layout.with_partition_cols(df)
+        .repartition(layout.n_buckets * layout.files_per_bucket,
+                     "bucket", "file_in_bucket")
         .write.mode("overwrite")
         .partitionBy("bucket", "file_in_bucket")
         .parquet(out_dir)
     )
-    write_corpus_meta(out_dir, n_buckets, files_per_bucket)
+    layout.write(out_dir)
     return out_dir
 
 

@@ -185,6 +185,14 @@ class TestTextExtract:
     def test_series_equals_pure_on_fixture_pages(self, smoke_site):
         pages, _, _ = smoke_site
         htmls = [p["html"].decode() for p in pages if not p["url"].endswith("robots.txt")]
+        htmls += [
+            "Before the first tag<p>x</p>",
+            "  lead and trail  <p> x </p>  tail  ",
+            " <b> a </b> b ",
+            "\n \nline\n\n<br/>\n",
+            "",
+            "<html><body><br/><p></p></body></html>",
+        ]
         pure = [html_to_text(h) for h in htmls]
         vec = list(html_to_text_series(pd.Series(htmls)))
         assert vec == pure

@@ -54,9 +54,7 @@ class TestSaltedTopK:
     def test_salted_equals_unsalted_admit_set(self, spark):
         pending, hs = _skewed_pending(spark), _host_state(spark)
         base = _admits(decide_round(pending, hs, None, 10)[0])
-        salted = decide_round(
-            pending, hs, None, 10, hot_host_threshold=100, n_salts=8
-        )[0]
+        salted = decide_round(pending, hs, None, 10, hot_host_threshold=100)[0]
         assert _admits(salted) == base
         # the deterministic top-QUOTA per host by (-priority, depth,
         # parent_ord, ...)

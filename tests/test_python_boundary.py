@@ -121,5 +121,5 @@ def test_compact_blobs_raises_no_warning(spark):
     seen = spark.range(100).selectExpr("id * 7919 AS url_hash")
     with warnings.catch_warnings():
         warnings.simplefilter("error", UserWarning)
-        rows = compact_blobs(seen, 4, 1).collect()
+        rows = compact_blobs(seen, 1).collect()
     assert sum(r.n_keys for r in rows) == 100

@@ -3,8 +3,8 @@ and trailing-``$`` anchors, on BOTH sides — the pure matcher
 (functions/robots.py::rule_matches, used by the sequential oracle) and
 its relational twin (operators/politeness.py::rule_match_expr, used by
 the engine's broadcast rules join) — plus their differential over a
-metacharacter-laden rule/path grid and an end-to-end
-mark_robots_blocked check against pure ``allowed()``."""
+metacharacter-laden rule/path grid and a check of ``decide_round``'s
+``blocked`` flag against pure ``allowed()``."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ from beeradvocate_crawler_spark.functions.robots import (
     rule_matches,
 )
 from beeradvocate_crawler_spark.operators.politeness import (
-    mark_robots_blocked,
+    decide_round,
     rule_match_expr,
 )
 
@@ -132,7 +132,7 @@ class TestRelationalTwin:
         ]
         assert not bad, f"{len(bad)} relational-vs-pure mismatches: {bad[:10]}"
 
-    def test_mark_robots_blocked_wildcards(self, spark):
+    def test_decide_round_blocks_wildcards(self, spark):
         body = ("User-agent: *\n"
                 "Disallow: /*.php$\n"
                 "Allow: /public*.php$\n"
@@ -146,19 +146,20 @@ class TestRelationalTwin:
             "https://h.example/ok.html",
         ]
         pending = spark.createDataFrame(
-            [(u, "h.example", "beer") for u in urls],
-            "url string, host string, page_type string",
+            [(u, "h.example", "beer", 70, 1, i, 0) for i, u in enumerate(urls)],
+            "url string, host string, page_type string, priority int, "
+            "depth int, parent_ord long, link_pos int",
         )
         host_state = spark.createDataFrame(
-            [("h.example", True)], "host string, robots_done boolean"
+            [("h.example", 0.0, 1.0, True)],
+            "host string, tokens double, crawl_delay double, robots_done boolean",
         )
         rules = spark.createDataFrame(
             [("h.example", o, a, p) for o, a, p in rr.rules],
             "host string, ord int, allow boolean, prefix string",
         )
-        blocked = {
-            r.url for r in mark_robots_blocked(pending, host_state, rules).collect()
-        }
+        decided, _ = decide_round(pending, host_state, rules, 16)
+        blocked = {r.url for r in decided.where("blocked").collect()}
         want = {
             u for u in urls
             if not rr.allowed(u.split("h.example", 1)[1])

@@ -174,9 +174,11 @@ def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
                                                   filter_on):
     """A snapshot whose lineage config still names the options removed
     from ``CrawlConfig`` (``filter_kind``, ``use_cuckoo``,
-    ``cache_pages``) resumes, with the config taken from the lineage,
-    to the full-crawl hashes.  One written with the filter off has no
-    ``seen_filter`` table; resume rebuilds it from ``seen``."""
+    ``cache_pages``; the corpus moduli, the filter layout, the salt
+    count and the pre-merge broadcast bound, here with values other
+    than the constants) resumes, with the config taken from the
+    lineage, to the full-crawl hashes.  One written with the filter off
+    has no ``seen_filter`` table; resume rebuilds it from ``seen``."""
     run_dir = f"{polite_calls['tmp']}/old_keys_{filter_on}"
     shutil.copytree(polite_calls["base"], run_dir)
     with open(os.path.join(run_dir, "_SNAPSHOT")) as f:
@@ -184,7 +186,10 @@ def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
     with open(mf) as f:
         m = json.load(f)
     m["lineage"]["config"].update(
-        filter_kind="cuckoo", use_cuckoo=filter_on, cache_pages=False)
+        filter_kind="cuckoo", use_cuckoo=filter_on, cache_pages=False,
+        n_filter_partitions=16, filter_compact_every=3,
+        broadcast_seen_threshold=0, n_page_buckets=8, files_per_bucket=63,
+        n_salts=4)
     if not filter_on:
         del m["tables"]["seen_filter"]
     with open(mf, "w") as f:

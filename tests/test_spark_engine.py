@@ -53,7 +53,7 @@ class TestExpressionParity:
 class TestCorpusMeta:
     def test_sparse_residues_no_false_404(self, spark):
         """files_per_bucket larger than the page count leaves most
-        residues unoccupied; pruning keyed off the sidecar moduli must
+        residues unoccupied; pruning keyed off the sidecar layout must
         still find every page (the max(file_in_bucket)+1 inference this
         replaces would prune the wrong files here)."""
         from datetime import datetime
@@ -64,10 +64,7 @@ class TestCorpusMeta:
             classify_expr as ce,
             host_expr,
         )
-        from beeradvocate_crawler_spark.sources.corpus import (
-            read_corpus_meta,
-            write_corpus_meta,
-        )
+        from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
 
         rows = [
             {
@@ -81,23 +78,18 @@ class TestCorpusMeta:
         ]
         tmp = tempfile.mkdtemp(prefix="ba_sparse_")
         pages_path = f"{tmp}/pages"
-        fpb = 97  # >> 10 pages: top residue certainly unoccupied
+        # 97 files per bucket >> 10 pages: top residue certainly unoccupied
+        layout = CorpusLayout(16, 97)
         df = spark.createDataFrame(rows, schema=pages_schema())
         (
-            df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.parse_url("url", F.lit("HOST"))), F.lit(16)),
-            )
-            .withColumn("file_in_bucket", F.pmod(F.xxhash64("url"), F.lit(fpb)))
+            layout.with_partition_cols(df)
             .write.mode("overwrite")
             .partitionBy("bucket", "file_in_bucket")
             .parquet(pages_path)
         )
-        write_corpus_meta(pages_path, 16, fpb)
-        assert read_corpus_meta(pages_path) == {
-            "n_buckets": 16,
-            "files_per_bucket": fpb,
-        }
+        layout.write(pages_path)
+        assert CorpusLayout.read(pages_path) == layout
+        assert CorpusLayout.read(tmp) is None
         pages = spark.read.parquet(pages_path)
         sched = spark.createDataFrame(
             [(r["url"],) for r in rows], "url string"
@@ -105,18 +97,27 @@ class TestCorpusMeta:
             "url", ce(F.col("url")).alias("page_type"),
             host_expr(F.col("url")).alias("host"),
         )
-        fetched = fetch_join(sched, pages, 16, batch_rows=10, files_per_bucket=fpb)
+        fetched = fetch_join(sched, pages, layout, batch_rows=10)
         got = {r["url"]: r["html"] for r in fetched.collect()}
         assert len(got) == 10 and all(v is not None for v in got.values())
         shutil.rmtree(tmp, ignore_errors=True)
 
-    def test_bucket_modulus_mismatch_raises(self, spark, site_dirs):
-        tmp, pages_path = site_dirs
-        with pytest.raises(ValueError, match="n_buckets"):
-            plans.run(
-                spark, pages_path, sm.SEED_URLS, f"{tmp}/run_mismatch",
-                CrawlConfig(round_seconds=16, n_page_buckets=8),
-            )
+    def test_any_recorded_layout_crawls_to_the_oracle(self, spark, smoke_site):
+        """The crawl takes the corpus layout from its sidecar alone: a
+        corpus written with 8 buckets of 5 files crawls to the oracle
+        under a default config."""
+        from beeradvocate_crawler_spark.fixtures.gen_site import pages_df
+        from beeradvocate_crawler_spark.sources.ingest import write_corpus
+
+        _, corpus, ores = smoke_site
+        tmp = tempfile.mkdtemp(prefix="ba_layout_")
+        pages_path = f"{tmp}/pages"
+        write_corpus(pages_df(spark, "smoke"), pages_path,
+                     n_buckets=8, files_per_bucket=5)
+        plans.run(spark, pages_path, sm.SEED_URLS, f"{tmp}/run", CrawlConfig())
+        errs = compare(spark, f"{tmp}/run", ores, corpus)
+        shutil.rmtree(tmp, ignore_errors=True)
+        assert not errs, "\n".join(errs)
 
 
 class TestE2EDifferential:
@@ -203,7 +204,7 @@ class TestE2EDifferential:
         run_dir = f"{tmp}/run_salted"
         plans.run(
             spark, pages_path, sm.SEED_URLS, run_dir,
-            CrawlConfig(round_seconds=16, hot_host_threshold=0, n_salts=4,
+            CrawlConfig(round_seconds=16, hot_host_threshold=0,
                         broadcast_hosts_threshold=0),
         )
         errs = compare(spark, run_dir, ores, corpus)
@@ -264,25 +265,20 @@ class TestMissingPages404:
         corpus = {p["url"]: p for p in kept}
         ores = oracle.crawl(corpus, sm.SEED_URLS, round_seconds=16)
 
+        from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
+
         tmp = tempfile.mkdtemp(prefix="ba_404_")
         pages_path = f"{tmp}/pages"
-        from pyspark.sql import functions as SF
-
+        layout = CorpusLayout(16, 4)
         df = spark.createDataFrame(kept, schema=pages_schema())
         (
-            df.withColumn(
-                "bucket",
-                SF.pmod(SF.xxhash64(SF.parse_url("url", SF.lit("HOST"))), SF.lit(16)),
-            )
-            .withColumn("file_in_bucket", SF.pmod(SF.xxhash64("url"), SF.lit(4)))
+            layout.with_partition_cols(df)
             .repartition(8)
             .write.mode("overwrite")
             .partitionBy("bucket", "file_in_bucket")
             .parquet(pages_path)
         )
-        from beeradvocate_crawler_spark.sources.corpus import write_corpus_meta
-
-        write_corpus_meta(pages_path, 16, 4)
+        layout.write(pages_path)
         plans.run(spark, pages_path, sm.SEED_URLS, f"{tmp}/run",
                   CrawlConfig(round_seconds=16))
         errs = compare(spark, f"{tmp}/run", ores, corpus)

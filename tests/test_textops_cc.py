@@ -47,3 +47,22 @@ def test_cc_empty_edge_set_converges_immediately(spark):
     sweeps burned, no RuntimeError), returning an empty label set."""
     labels = _labels(spark, [])
     assert labels == {}
+
+
+def test_release_caches_frees_the_sweep_checkpoints(spark):
+    """Every per-sweep localCheckpoint is freed by release_caches():
+    no RDD the query persisted is still persisted.  Compared as id
+    sets, not counts: Spark's context cleaner may unpersist blocks of
+    earlier tests while this one runs."""
+    jsc = spark.sparkContext._jsc
+
+    def pinned() -> set:
+        return {int(str(k)) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = pinned()
+    df = spark.createDataFrame([(i, i + 1) for i in range(1, 6)],
+                               "src long, dst long")
+    connected_components_min_label(df).collect()
+    assert pinned() - before, "the sweeps checkpoint their labels"
+    release_caches()
+    assert not pinned() - before
