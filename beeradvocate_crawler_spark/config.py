@@ -1,12 +1,13 @@
 """Crawl engine configuration.
 
 Only what a caller sets: the politeness budget, the user agent, and the
-four size thresholds at which a round switches to its scale path (tests
+three size thresholds at which a round switches to its scale path (tests
 force each to 0 to run that path at smoke scale).  Layout constants
 live beside their single use: the corpus layout is read from the
 corpus's sidecar (``sources/corpus.py``), the seen-filter blob layout
-is ``operators/seen.py``'s, and the salt count and pre-merge broadcast
-bound are ``operators/politeness.py``'s and ``plans/crawl.py``'s.
+is ``operators/seen.py``'s, and the salt count and the seen broadcast
+bound are ``operators/politeness.py``'s and ``plans/crawl.py``'s (tests
+force the seen dedupe's scale path by lowering that bound).
 """
 
 from __future__ import annotations
@@ -28,14 +29,6 @@ class CrawlConfig:
     # then the `*` groups do NOT apply.  The sequential oracle takes
     # the same parameter, so the e2e differential covers it.
     user_agent: str | None = None
-    # probe the cuckoo seen pre-filter (A8, functions/cuckoo.py) only
-    # once `seen` exceeds this many rows: the filter exists to avoid
-    # shuffling a HUGE seen table — while seen is small the exact
-    # anti-join is cheaper than the cogroup's Python stage.  Blobs are
-    # still built/compacted every round so resume and the big-seen
-    # path stay exercised.  (Results are identical either way: the e2e
-    # differential forces the probe with 0.)
-    cuckoo_min_seen_rows: int = 100_000
     # global-rank strategy: below this batch size a single-task window
     # sorts the (politeness-bounded) batch; above it, two-phase
     # range-partitioned ranking (operators/ordering.py).  64k keeps the

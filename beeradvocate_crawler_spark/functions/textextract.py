@@ -26,7 +26,7 @@ RX_LINE_EDGE = re.compile(r" *\n *")
 def html_to_text(html: str) -> str:
     s = RX_SCRIPT.sub(" ", html)
     s = RX_TAG.sub("\n", s)
-    lines = [RX_WS.sub(" ", ln).strip() for ln in s.split("\n")]
+    lines = [RX_WS.sub(" ", ln).strip(" ") for ln in s.split("\n")]
     return "\n".join(ln for ln in lines if ln)
 
 

@@ -88,23 +88,21 @@ def merge_discoveries(children: DataFrame, rnd: int) -> DataFrame:
 
 
 def robots_injection(
-    new_rows: DataFrame, host_state: DataFrame | None, seen: DataFrame | None, rnd: int
+    new_rows: DataFrame, host_state: DataFrame | None, rnd: int
 ) -> DataFrame:
     """Hosts first seen this round get a robots.txt frontier row —
     unless the robots URL is itself among the new rows (oracle.enqueue
-    parity).  A host absent from ``host_state`` has by invariant never
-    had ANY url enqueued, so its robots url cannot be in ``seen`` —
-    membership in host_state subsumes the seen check, and the growing
-    seen table stays out of this per-round subplan (the ``seen``
-    parameter remains for callers without a host_state, e.g. seeding)."""
+    parity).  A host absent from ``host_state`` (all of them at seeding,
+    which passes None) has by invariant never had ANY url enqueued, so
+    its robots url cannot be in ``seen`` — membership in host_state
+    subsumes the seen check, and the growing seen table stays out of
+    this per-round subplan."""
     new_hosts = new_rows.select("host").distinct()
     if host_state is not None:
         new_hosts = new_hosts.join(host_state.select("host"), "host", "left_anti")
     cand = new_hosts.select(
         robots_url_expr(F.col("host")).alias("url"), "host"
     ).join(new_rows.select("url"), "url", "left_anti")
-    if seen is not None and host_state is None:
-        cand = cand.join(seen.select("url"), "url", "left_anti")
     return cand.select(
         "url",
         url_hash_expr(F.col("url")).alias("url_hash"),

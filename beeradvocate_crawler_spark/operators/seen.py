@@ -7,24 +7,29 @@ partition and round, in the ``seen_filter`` table.
 ``CuckooFilter.from_bytes`` checks every blob it decodes, so a blob of
 another kind fails loudly instead of probing garbage.
 
-Exactness layering (§7.1): the filter only PRUNES — candidates it
-proves absent skip the anti-join; "maybe seen" survivors (all true
-dupes + ~0.012% false positives) still go through the exact
-left-anti join against ``seen``, which remains the authority.  So
-the filter must never answer "definitely new" for a seen url.  That
-holds because the blob layout is a module constant: a probe reads
-blobs that earlier rounds wrote, possibly before a resume, and blobs
-written under another partition count would be looked up in the wrong
-partitions.  Within that layout a filter bug can cost performance,
-never correctness.
+Used only past the crawl's seen broadcast bound (``plans/crawl.py``
+``BROADCAST_SEEN_THRESHOLD``); below it the pre-merge broadcast
+anti-join is the round's whole dedupe and no blob is built or read.
 
-Blob lifecycle (delta + compaction): each round inserts the round's
-new keys into a FRESH delta blob per partition (sized exactly, never
-overflows); lookup ORs membership across the partition's blobs; every
-``FILTER_COMPACT_EVERY`` rounds the blobs are rebuilt from the
-``seen`` table in one distributed pass, bounding probe cost.  At
-10^10 URLs the seen table is ~petabyte-adjacent; the filter is what
-keeps every round from shuffling it (§4.3).
+Exactness (§7.1): the filter only PRUNES — candidates it proves absent
+skip the exact left-anti join against ``seen``, the authority; "maybe
+seen" survivors (all true dupes + ~0.012% false positives) go through
+it.  So a probe must read blobs that cover ALL of ``seen``, written
+under the one blob layout (a module constant: blobs written under
+another partition count would be looked up in the wrong partitions);
+with no blobs at all ``cuckoo_prefilter`` raises.  Within that a
+filter bug can cost performance, never correctness.
+
+Blob lifecycle: a round writes blobs only when ``seen`` ends it above
+the bound.  The round that crosses the bound and every
+``FILTER_COMPACT_EVERY``-th round REPLACE them with one blob per
+partition rebuilt from ``seen`` (``compact_blobs``, which also drops
+blobs left stale below the bound); any other round adds a FRESH delta
+blob per partition holding its new keys (``build_delta_blobs``, sized
+exactly); lookup ORs a partition's blobs.  The crawl loop rebuilds
+missing blobs when it starts above the bound.  At 10^10 URLs the seen
+table is ~petabyte-adjacent; the filter is what keeps every round from
+shuffling it (§4.3).
 """
 
 from __future__ import annotations
@@ -61,23 +66,22 @@ def partition_id_expr(url_hash):
     return F.pmod(url_hash, F.lit(N_FILTER_PARTITIONS)).cast("int")
 
 
-def dedupe_exact(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
+def dedupe_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """A7: authoritative exact dedupe — hash anti-join on (url_hash, url)."""
-    if seen is None:
-        return candidates
     return candidates.join(seen, ["url_hash", "url"], "left_anti")
 
 
-def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame | None) -> DataFrame:
+def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame) -> DataFrame:
     """A8: adds ``maybe_seen`` (bool).  False => definitely new (skip
-    the anti-join).  Implemented as a cogrouped-map pandas UDF so each
+    the anti-join), so ``blobs`` must cover every seen url; a missing
+    table raises.  Implemented as a cogrouped-map pandas UDF so each
     partition's candidate batch meets its filter blobs without
     shuffling the seen table."""
+    if blobs is None:
+        raise ValueError("no seen_filter blobs: no url can be proven new")
     cand = candidates.withColumn(
         "partition_id", partition_id_expr(F.col("url_hash"))
     )
-    if blobs is None:
-        return cand.withColumn("maybe_seen", F.lit(False)).drop("partition_id")
     out_schema = T.StructType(
         cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType())]
     )
@@ -99,9 +103,7 @@ def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame | None) -> DataFram
     )
 
 
-def build_delta_blobs(
-    new_rows: DataFrame, rnd: int, n_rows: int | None = None
-) -> DataFrame:
+def build_delta_blobs(new_rows: DataFrame, rnd: int, n_rows: int) -> DataFrame:
     """Fresh delta blob per partition holding this round's new keys.
 
     Task count adapts to the delta size (each task builds the blobs of
@@ -125,9 +127,7 @@ def build_delta_blobs(
                     }
                 )
 
-    n_tasks = N_FILTER_PARTITIONS
-    if n_rows is not None:
-        n_tasks = max(1, min(N_FILTER_PARTITIONS, n_rows // 50_000 + 1))
+    n_tasks = max(1, min(N_FILTER_PARTITIONS, n_rows // 50_000 + 1))
     return (
         new_rows.select(
             partition_id_expr(F.col("url_hash")).alias("partition_id"),

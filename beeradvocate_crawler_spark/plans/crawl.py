@@ -1,11 +1,12 @@
 """The crawl round loop + exact resume (SURVEY.md §3.1/§3.2).
 
 One round = one Spark job DAG (driver orchestrates; all data paths are
-DataFrame ops; Python only at the two Arrow boundaries: parse UDF and
-cuckoo cogroup).  The parse UDF returns typed columns
-(``operators.parse.PARSE_SCHEMA``), so the round reads its outputs by
-column selection: the robots rules are ``inline``d straight from
-``parsed.rules``, the links from ``link_urls``/``link_pos``.
+DataFrame ops; Python only at the Arrow boundaries: the parse UDF and,
+past the seen broadcast bound, the cuckoo filter blobs).  The parse
+UDF returns typed columns (``operators.parse.PARSE_SCHEMA``), so the
+round reads its outputs by column selection: the robots rules are
+``inline``d straight from ``parsed.rules``, the links from
+``link_urls``/``link_pos``.
 
 Every round commits a snapshot — the PENDING frontier snapshot
 (written straight off the round's checkpointed decision table, never
@@ -94,10 +95,13 @@ from ..operators.politeness import (
 from ..sources.catalog import DELTA, REPLACE, SnapshotCatalog
 from ..sources.corpus import CorpusLayout
 
-# Pre-merge seen filter bound: while `seen` has at most this many rows,
-# already-seen child links are dropped map-side BEFORE the min-depth
-# merge shuffle (most children are navigation back-links); beyond it
-# the cuckoo pre-filter is the scale path.  ~2M urls ≈ 150 MB relation.
+# The seen dedupe's regime switch (step 7 of ``_run_round``).  While
+# `seen` has at most this many rows, a broadcast anti-join drops
+# already-seen child links map-side BEFORE the min-depth merge shuffle
+# (most children are navigation back-links) and is the round's whole
+# dedupe; beyond it the round merges, probes the cuckoo filter blobs
+# and anti-joins the "maybe seen" rows, and only there are blobs built.
+# ~2M urls ≈ 150 MB relation.
 BROADCAST_SEEN_THRESHOLD = 2_000_000
 
 
@@ -186,7 +190,7 @@ def run(
     cfg = cfg or CrawlConfig()
     cat = SnapshotCatalog(spark, run_dir)
     fr = seed_frontier(spark, seeds)
-    robots_rows = robots_injection(fr, None, None, 0)
+    robots_rows = robots_injection(fr, None, 0)
     frontier0 = fr.unionByName(robots_rows)
     host_state0 = frontier0.select("host").distinct().select(
         "host",
@@ -199,10 +203,6 @@ def run(
                     skip_if_empty=False, n_rows=None)
     cat.write_round("host_state", host_state0, 0, REPLACE, skip_if_empty=False)
     cat.write_round("seen", seen0, 0, DELTA)
-    cat.write_round(
-        "seen_filter", S.build_delta_blobs(seen0, 0),
-        0, DELTA, skip_if_empty=False,
-    )
     # host-count upper bound (drives broadcast-vs-shuffle host joins);
     # seeds are a driver-side list, so this costs no job
     n_hosts = len({host_of(canonicalize_url(s)) for s in seeds})
@@ -221,13 +221,11 @@ def resume(
     """A18: continue from the latest committed snapshot, bit-identically.
     Per-partition lineage is validated first (A19): a missing/truncated
     part file rolls the snapshot back to the newest fully-valid round,
-    whose lost successors are re-run deterministically.  Missing filter
-    blobs (e.g. catalog copied without seen_filter, or written with the
-    filter switched off) are rebuilt from the authoritative ``seen``
-    table.  Lineage config keys that are no longer ``CrawlConfig``
-    fields (options since removed, e.g. the corpus moduli and the
-    filter layout, now read from the corpus sidecar and fixed in
-    ``operators/seen.py``) are ignored."""
+    whose lost successors are re-run deterministically.  Lineage config
+    keys that are no longer ``CrawlConfig`` fields (options since
+    removed, e.g. the corpus moduli and the filter layout, now read
+    from the corpus sidecar and fixed in ``operators/seen.py``) are
+    ignored."""
     cat = SnapshotCatalog(spark, run_dir)
     m = cat.latest()
     if m is None:
@@ -237,16 +235,6 @@ def resume(
     cfg = cfg or CrawlConfig(**{
         k: v for k, v in (m.lineage.get("config") or {}).items() if k in known
     })
-    # table existence from the manifest: cat.read() would run a parquet
-    # schema-inference job per table just to answer None or not
-    if (not m.tables.get("seen_filter", {}).get("paths")
-            and m.tables.get("seen", {}).get("paths")):
-        cat.write_round(
-            "seen_filter",
-            S.compact_blobs(cat.read("seen"), m.round),
-            m.round, REPLACE, skip_if_empty=False,
-        )
-        cat.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
     return _loop(spark, cat, pages_path, cfg, max_rounds)
 
 
@@ -256,6 +244,16 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     # (sources/corpus.py); no sidecar -> the fetch join scans unpruned
     layout = CorpusLayout.read(pages_path)
     m = cat.latest()
+    # past the seen bound every round probes, so its blobs must cover
+    # all of `seen` (operators/seen.py): a snapshot without them (a
+    # fresh run writes none; a catalog copied without seen_filter) gets
+    # them rebuilt, as an amend of its own round.  Table existence comes
+    # from the manifest: cat.read() would run a schema-inference job.
+    if (cat.rows("seen", m) > BROADCAST_SEEN_THRESHOLD
+            and not m.tables.get("seen_filter", {}).get("paths")):
+        cat.write_round("seen_filter", S.compact_blobs(cat.read("seen", m), m.round),
+                        m.round, REPLACE, skip_if_empty=False)
+        m = cat.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
     next_rank = int(m.lineage.get("next_rank", 0))
     n_hosts_ub = m.lineage.get("n_hosts_ub")
     rnd = m.round
@@ -584,52 +582,41 @@ def _run_round(
         .withColumn("host", L.host_expr(F.col("url")))
         .withColumn("url_hash", L.url_hash_expr(F.col("url")))
     )
-    # Pre-merge seen filter: in the steady state MOST child links point
-    # at already-seen urls (navigation/back-links — 35M children vs
-    # ~100k genuinely new on the heavy bench round), and shuffling them
-    # into the min-depth merge just to anti-join them away afterwards
-    # made the link chain parallelism-independent.  While ``seen`` fits
-    # a broadcast, drop seen children map-side BEFORE the merge —
-    # identical semantics (a url's whole merge group is either kept or
-    # dropped; the post-merge exact anti-join remains the authority).
-    # Beyond the broadcast threshold the cuckoo path below takes over
-    # (that is exactly what the partitioned filter blobs are for).
-    seen_rows = cat.rows("seen")
-    if seen is not None and 0 < seen_rows <= BROADCAST_SEEN_THRESHOLD:
-        children = children.join(
-            F.broadcast(seen.select("url")), "url", "left_anti"
-        )
-    # Materialize the merge output before the dedupe/union stages: the
-    # count is paid once, and downstream consumers read the (small,
-    # post-dedup-filter) checkpointed table instead of re-running the
-    # explode+classify+merge chain.
-    merged = merge_discoveries(children, rnd).localCheckpoint(eager=False)
-    merged.count()
-    _prof(rnd, t0, "explode+classify+merge materialized")
-
-    # 7. seen-set dedupe: cuckoo pre-filter (A8) then exact anti-join (A7);
-    # the probe engages once seen is big enough to be worth pre-pruning
-    # (row count is free from the manifest).
-    # ``pre`` and ``new_rows`` are each consumed by MULTIPLE subtrees
-    # (pre: the definite/maybe branches; new_rows: the frontier union +
-    # robots_injection's host-distinct and url anti-join).  Catalyst
-    # does no cross-subtree CSE, so without the checkpoints the whole
+    # 7. seen-set dedupe, one per regime (row count is free from the
+    # manifest; never 0 here, as `seen` holds every frontier url and
+    # this round admitted some).  Below the bound: in the steady state
+    # MOST child links point at already-seen urls (navigation/back-links
+    # — 35M children vs ~100k genuinely new on the heavy bench round),
+    # and shuffling them into the min-depth merge just to anti-join them
+    # away afterwards made the link chain parallelism-independent.  So
+    # while ``seen`` fits a broadcast, seen children are dropped
+    # map-side BEFORE the merge, which is exact (a url's whole merge
+    # group is either kept or dropped) and leaves nothing for a later
+    # dedupe.
+    # Beyond the bound: cuckoo pre-filter (A8), then the exact
+    # anti-join (A7) of the "maybe seen" rows only.  ``pre`` feeds two
+    # branches and ``new_rows`` several consumers (the frontier union +
+    # robots_injection's host-distinct and url anti-join); Catalyst does
+    # no cross-subtree CSE, so without the checkpoints the whole
     # explode+classify+merge+probe chain re-executes once per consumer
     # — measured as ~90 s/round at 16 threads on the 1.32M-URL round.
-    pre = None
-    if seen_rows >= cfg.cuckoo_min_seen_rows:
+    seen_rows = cat.rows("seen")
+    if seen_rows <= BROADCAST_SEEN_THRESHOLD:
+        children = children.join(
+            F.broadcast(seen.select("url")), "url", "left_anti")
+        new_rows = _merge(children, rnd, t0)
+        dedupe_parts = [new_rows]
+    else:
+        merged = _merge(children, rnd, t0)
         pre = S.cuckoo_prefilter(
             merged, cat.read("seen_filter")
         ).localCheckpoint(eager=False)
         definite_new = pre.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = pre.filter(F.col("maybe_seen")).drop("maybe_seen")
-        survivors = S.dedupe_exact(maybe, seen)
-        new_rows = definite_new.unionByName(survivors)
-    else:
-        new_rows = S.dedupe_exact(merged, seen)
-
-    new_rows = new_rows.localCheckpoint(eager=False)
-    robots_rows = robots_injection(new_rows, hs, seen, rnd)
+        new_rows = definite_new.unionByName(
+            S.dedupe_exact(maybe, seen)).localCheckpoint(eager=False)
+        dedupe_parts = [merged, pre, new_rows]
+    robots_rows = robots_injection(new_rows, hs, rnd)
     new_frontier = new_rows.unionByName(robots_rows).localCheckpoint(eager=False)
     # one job: delta size + exact new-host count (the countDistinct is
     # over this round's NEW rows only, not the frontier)
@@ -696,37 +683,49 @@ def _run_round(
         lambda: cat.write_round("round_metrics", stats, rnd, DELTA,
                                 skip_if_empty=False),
     ]
-    if rnd % S.FILTER_COMPACT_EVERY == 0:
-        # allowMissingColumns: a schema-evolved seen table (catalog
-        # add-column) is wider than this round's delta; the filter
-        # blobs consume url_hash only, so the nulls are harmless
-        all_seen = (
-            seen.unionByName(seen_delta, allowMissingColumns=True)
-            if seen is not None else seen_delta
-        )
-        writes.append(lambda: cat.write_round(
-            "seen_filter", S.compact_blobs(all_seen, rnd),
-            rnd, REPLACE, skip_if_empty=False,
-        ))
-    elif n_new:
-        writes.append(lambda: cat.write_round(
-            "seen_filter",
-            S.build_delta_blobs(new_frontier, rnd, n_rows=n_new),
-            rnd, DELTA, skip_if_empty=False,
-        ))
+    # filter blobs only where a probe will read them: once `seen` ends
+    # the round above the bound.  A REPLACE compaction on the crossing
+    # round (it also drops blobs left stale below the bound) and every
+    # FILTER_COMPACT_EVERY-th round, a delta blob otherwise.
+    if seen_rows + n_new > BROADCAST_SEEN_THRESHOLD:
+        if (seen_rows <= BROADCAST_SEEN_THRESHOLD
+                or rnd % S.FILTER_COMPACT_EVERY == 0):
+            # allowMissingColumns: a schema-evolved seen table (catalog
+            # add-column) is wider than this round's delta; the filter
+            # blobs consume url_hash only, so the nulls are harmless
+            all_seen = seen.unionByName(seen_delta, allowMissingColumns=True)
+            writes.append(lambda: cat.write_round(
+                "seen_filter", S.compact_blobs(all_seen, rnd),
+                rnd, REPLACE, skip_if_empty=False,
+            ))
+        elif n_new:
+            writes.append(lambda: cat.write_round(
+                "seen_filter",
+                S.build_delta_blobs(new_frontier, rnd, n_rows=n_new),
+                rnd, DELTA, skip_if_empty=False,
+            ))
     out = _Outcome(
         rnd, next_rank + n_admitted, n_hosts_ub, writes,
         staged=[early_fut, seen_fut],
         metrics={"n_admitted": n_admitted, "n_new": n_new,
                  "n_blocked": n_blocked, "n_pending_before": n_pending_after},
-        release=release + [ranked, rank_parts, robots_res, merged, pre,
-                           new_rows, new_frontier],
+        release=release + [ranked, rank_parts, robots_res, *dedupe_parts,
+                           new_frontier],
     )
     # a rules update must be committed before the next round's decide
     # consumes it, so that round waits on its commit and hands no carry
     # (robots rounds are the first few only; losing their overlap is noise)
     return True, out, _hand_on(cat, cfg, ex, carry, out, pending_next, hs2,
                                rules, wait=rules_changed)
+
+
+def _merge(children, rnd, t0):
+    """The min-depth discovery merge, materialized once: later stages
+    read the checkpoint instead of re-running explode+classify+merge."""
+    merged = merge_discoveries(children, rnd).localCheckpoint(eager=False)
+    merged.count()
+    _prof(rnd, t0, "explode+classify+merge materialized")
+    return merged
 
 
 def _write_all(writes):

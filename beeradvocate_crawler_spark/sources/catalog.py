@@ -255,11 +255,11 @@ class SnapshotCatalog:
         # notwithstanding.)
         prev_round = prev.round if prev is not None else -1
         # r == prev_round is a sanctioned amend of the CURRENT snapshot
-        # (resume rebuilds seen_filter into its own round); r may also
-        # jump AHEAD of prev_round + 1 — a starved round fast-forwards
-        # past its no-op successors and commits at the skipped-to round
-        # number (plans/crawl.py), so round numbers are monotone but
-        # not contiguous.  Either way the pointer must still name the
+        # (the crawl loop rebuilds missing seen_filter blobs into its
+        # own round); r may also jump AHEAD of prev_round + 1 — a
+        # starved round fast-forwards past its no-op successors and
+        # commits at the skipped-to round number (plans/crawl.py), so
+        # round numbers are monotone but not contiguous.  Either way the pointer must still name the
         # snapshot THIS writer staged against — if a concurrent writer
         # advanced it (including to the same round number), committing
         # would clobber their round.

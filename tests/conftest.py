@@ -27,3 +27,14 @@ def smoke_site():
     corpus = {p["url"]: p for p in pages}
     ores = oracle.crawl(corpus, sm.SEED_URLS, round_seconds=16)
     return pages, corpus, ores
+
+
+@pytest.fixture
+def seen_probe_path(monkeypatch):
+    """Forces the seen dedupe's scale path at smoke scale: with the
+    broadcast bound at 0 every round past seeding merges, probes the
+    cuckoo filter blobs and anti-joins the "maybe seen" rows, and the
+    blobs are built and compacted as past the bound."""
+    from beeradvocate_crawler_spark.plans import crawl
+
+    monkeypatch.setattr(crawl, "BROADCAST_SEEN_THRESHOLD", 0)

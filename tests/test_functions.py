@@ -192,6 +192,12 @@ class TestTextExtract:
             "\n \nline\n\n<br/>\n",
             "",
             "<html><body><br/><p></p></body></html>",
+            # non-ASCII and control whitespace is text, not a line edge
+            "a\xa0<p>\xa0</p>",
+            "\xa0\t<b>\t d \t\xa0 </b>\n\xa0",
+            "\u2003<p> e \u2003</p>\u2028 f \u2028<br/>\u2028",
+            "\x1c<p>\x1c g \x1c</p>\x1c",
+            "\x85 h \x85<p>\t\x85\t</p>",
         ]
         pure = [html_to_text(h) for h in htmls]
         vec = list(html_to_text_series(pd.Series(htmls)))

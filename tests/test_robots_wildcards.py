@@ -179,7 +179,8 @@ WILDCARD_ROBOTS = (
 
 
 class TestWildcardCrawlE2E:
-    def test_engine_matches_oracle_under_wildcard_robots(self, spark, tmp_path):
+    def test_engine_matches_oracle_under_wildcard_robots(self, spark, tmp_path,
+                                                         seen_probe_path):
         """Full crawl differential on a smoke-site variant whose robots
         uses `*`/`$` rules that actually fire mid-crawl: every beer's
         review pagination is disallowed except the start=25 page, which
@@ -238,7 +239,7 @@ class TestWildcardCrawlE2E:
             write_corpus(df, pages_path)
             run_dir = f"{tmp}/run"
             plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
-                      CrawlConfig(round_seconds=16, cuckoo_min_seen_rows=0))
+                      CrawlConfig(round_seconds=16))
             errs = compare(spark, run_dir, ores, corpus)
             assert not errs, "\n".join(errs)
         finally:

@@ -169,31 +169,35 @@ def test_resume_without_manifest_schemas_is_exact(spark, polite_calls):
     assert "schema" not in tables["seen"] and "schema" in tables["frontier"]
 
 
-@pytest.mark.parametrize("filter_on", [True, False])
+@pytest.mark.parametrize("probe", [False, True])
 def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
-                                                  filter_on):
+                                                  probe, monkeypatch):
     """A snapshot whose lineage config still names the options removed
     from ``CrawlConfig`` (``filter_kind``, ``use_cuckoo``,
-    ``cache_pages``; the corpus moduli, the filter layout, the salt
-    count and the pre-merge broadcast bound, here with values other
-    than the constants) resumes, with the config taken from the
-    lineage, to the full-crawl hashes.  One written with the filter off
-    has no ``seen_filter`` table; resume rebuilds it from ``seen``."""
-    run_dir = f"{polite_calls['tmp']}/old_keys_{filter_on}"
+    ``cache_pages``, ``cuckoo_min_seen_rows``; the corpus moduli, the
+    filter layout, the salt count and the pre-merge broadcast bound,
+    here with values other than the constants) resumes, with the config
+    taken from the lineage, to the full-crawl hashes.  The snapshot has
+    no ``seen_filter`` table, as its rounds are below the seen bound.
+    With the bound at 0 (``probe``) resume must rebuild the blobs from
+    ``seen`` before its first round probes them."""
+    if probe:
+        monkeypatch.setattr(plans, "BROADCAST_SEEN_THRESHOLD", 0)
+    run_dir = f"{polite_calls['tmp']}/old_keys_{probe}"
     shutil.copytree(polite_calls["base"], run_dir)
     with open(os.path.join(run_dir, "_SNAPSHOT")) as f:
         mf = os.path.join(run_dir, "_manifests", json.load(f)["manifest"])
     with open(mf) as f:
         m = json.load(f)
+    assert "seen_filter" not in m["tables"]
     m["lineage"]["config"].update(
-        filter_kind="cuckoo", use_cuckoo=filter_on, cache_pages=False,
-        n_filter_partitions=16, filter_compact_every=3,
-        broadcast_seen_threshold=0, n_page_buckets=8, files_per_bucket=63,
-        n_salts=4)
-    if not filter_on:
-        del m["tables"]["seen_filter"]
+        filter_kind="cuckoo", use_cuckoo=not probe, cache_pages=False,
+        cuckoo_min_seen_rows=0, n_filter_partitions=16,
+        filter_compact_every=3, broadcast_seen_threshold=0,
+        n_page_buckets=8, files_per_bucket=63, n_salts=4)
     with open(mf, "w") as f:
         json.dump(m, f)
     cat = plans.resume(spark, polite_calls["pages"], run_dir)
     assert _crawl_hashes(cat) == FULL_CRAWL
-    assert cat.latest().tables["seen_filter"]["paths"]
+    blobs = cat.latest().tables.get("seen_filter", {}).get("paths")
+    assert bool(blobs) == probe

@@ -97,7 +97,8 @@ def evo_site_dirs(spark, smoke_site):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_resume_across_schema_version_boundary(spark, smoke_site, evo_site_dirs):
+def test_resume_across_schema_version_boundary(spark, smoke_site, evo_site_dirs,
+                                               seen_probe_path):
     """run(2 rounds) -> add columns to seen + crawl_order -> resume to
     completion.  The resumed loop writes the OLD schema into the
     evolved tables; the crawl must stay bit-identical to the oracle and
@@ -106,7 +107,7 @@ def test_resume_across_schema_version_boundary(spark, smoke_site, evo_site_dirs)
     _, corpus, ores = smoke_site
     tmp, pages_path = evo_site_dirs
     run_dir = f"{tmp}/run_evo"
-    cfg = CrawlConfig(round_seconds=16, cuckoo_min_seen_rows=0)
+    cfg = CrawlConfig(round_seconds=16)
     plans.run(spark, pages_path, sm.SEED_URLS, run_dir, cfg, max_rounds=2)
 
     cat = SnapshotCatalog(spark, run_dir)

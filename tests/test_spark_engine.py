@@ -120,17 +120,114 @@ class TestCorpusMeta:
         assert not errs, "\n".join(errs)
 
 
+class TestSeenFilter:
+    """The scale-path dedupe on its own: cuckoo probe, then the exact
+    anti-join of the rows it flags."""
+
+    @staticmethod
+    def _urls(spark, lo, hi, step=1):
+        return spark.createDataFrame(
+            [(f"https://ba.example/beer/profile/{i}/",)
+             for i in range(lo, hi, step)],
+            "url string",
+        ).select(F.xxhash64("url").alias("url_hash"), "url")
+
+    def test_probe_flags_every_seen_key(self, spark):
+        """Blobs from one compaction and two delta rounds, as a crawl
+        past the bound leaves them; candidates are half seen (drawn
+        from all three) and half new."""
+        from functools import reduce
+
+        from beeradvocate_crawler_spark.operators import seen as S
+
+        parts = [self._urls(spark, 0, 300), self._urls(spark, 300, 450),
+                 self._urls(spark, 450, 600)]
+        seen = reduce(lambda a, b: a.unionByName(b), parts)
+        blobs = (S.compact_blobs(parts[0], 8)
+                 .unionByName(S.build_delta_blobs(parts[1], 9, n_rows=150))
+                 .unionByName(S.build_delta_blobs(parts[2], 10, n_rows=150)))
+        seen_cand = self._urls(spark, 0, 600, 2)
+        new_cand = self._urls(spark, 600, 900)
+        pre = S.cuckoo_prefilter(seen_cand.unionByName(new_cand), blobs)
+        maybe = pre.filter(F.col("maybe_seen")).drop("maybe_seen")
+        flagged = {r.url_hash for r in maybe.collect()}
+        assert {r.url_hash for r in seen_cand.collect()} <= flagged
+        new = pre.filter(~F.col("maybe_seen")).drop("maybe_seen").unionByName(
+            S.dedupe_exact(maybe, seen))
+        got = sorted((r.url_hash, r.url) for r in new.collect())
+        want = sorted((r.url_hash, r.url) for r in new_cand.collect())
+        assert got == want
+
+    def test_probe_without_blobs_raises(self, spark):
+        """No blobs prove nothing new: the probe must not answer
+        "definitely new" for every row."""
+        from beeradvocate_crawler_spark.operators import seen as S
+
+        with pytest.raises(ValueError, match="seen_filter"):
+            S.cuckoo_prefilter(self._urls(spark, 0, 10), None)
+
+
 class TestE2EDifferential:
-    def test_engine_matches_oracle_exactly(self, spark, smoke_site, site_dirs):
+    def test_engine_matches_oracle_exactly(self, spark, smoke_site, site_dirs,
+                                           seen_probe_path):
+        """With the seen bound at 0 every round probes the filter blobs,
+        so the differential covers the full cuckoo pipeline, fed with
+        the back-links to seen urls that most children are."""
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
         run_dir = f"{tmp}/run_e2e"
-        # cuckoo_min_seen_rows=0 forces the probe path even at smoke
-        # scale, so the differential covers the full cuckoo pipeline
         plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
-                  CrawlConfig(round_seconds=16, cuckoo_min_seen_rows=0))
+                  CrawlConfig(round_seconds=16))
         errs = compare(spark, run_dir, ores, corpus)
         assert not errs, "\n".join(errs)
+
+    def test_below_bound_round_runs_one_dedupe(self, spark, smoke_site,
+                                               site_dirs, monkeypatch):
+        """Below the seen bound (every smoke round) the broadcast
+        anti-join before the merge is the whole dedupe: no probe, no
+        exact anti-join, no filter blob and no ``seen_filter`` table."""
+        from beeradvocate_crawler_spark.operators import seen as S
+
+        def unexpected(*args, **kwargs):
+            raise AssertionError("seen filter path ran below the bound")
+
+        for name in ("cuckoo_prefilter", "dedupe_exact", "build_delta_blobs",
+                     "compact_blobs"):
+            monkeypatch.setattr(S, name, unexpected)
+        _, corpus, ores = smoke_site
+        tmp, pages_path = site_dirs
+        run_dir = f"{tmp}/run_one_dedupe"
+        cat = plans.run(spark, pages_path, sm.SEED_URLS, run_dir, CrawlConfig())
+        errs = compare(spark, run_dir, ores, corpus)
+        assert not errs, "\n".join(errs)
+        assert "seen_filter" not in cat.latest().tables
+
+    def test_crossing_the_bound_replaces_stale_blobs(
+        self, spark, smoke_site, site_dirs, monkeypatch
+    ):
+        """The smoke crawl's seen grows 2, 2, 4, 10, 34, 78 over rounds
+        0-5.  Two rounds at bound 0 write blobs covering 4 urls; one
+        round at bound 20 leaves them stale (10 seen); the resumed crawl
+        crosses 20 in round 4, whose compaction must replace them, and
+        probes from round 5 on.  Still the oracle's crawl."""
+        _, corpus, ores = smoke_site
+        tmp, pages_path = site_dirs
+        run_dir = f"{tmp}/run_crossing"
+
+        def blob_keys(cat):
+            return cat.read("seen_filter").agg(F.sum("n_keys")).collect()[0][0]
+
+        monkeypatch.setattr(plans, "BROADCAST_SEEN_THRESHOLD", 0)
+        cat = plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
+                        CrawlConfig(), max_rounds=2)
+        assert blob_keys(cat) == cat.rows("seen") == 4
+        monkeypatch.setattr(plans, "BROADCAST_SEEN_THRESHOLD", 20)
+        cat = plans.resume(spark, pages_path, run_dir, max_rounds=1)
+        assert (blob_keys(cat), cat.rows("seen")) == (4, 10)
+        cat = plans.resume(spark, pages_path, run_dir)
+        errs = compare(spark, run_dir, ores, corpus)
+        assert not errs, "\n".join(errs)
+        assert blob_keys(cat) == cat.rows("seen") == len(ores.seen)
 
     def test_resume_equivalence(self, spark, smoke_site, site_dirs):
         """run(N rounds) + resume == run-to-completion, bit-identical."""
@@ -412,9 +509,10 @@ class TestCommitConcurrency:
         shutil.rmtree(d, ignore_errors=True)
 
     def test_resume_after_rollback_still_commits(self, spark, smoke_site, site_dirs):
-        """The CAS check must not break the sanctioned re-commit flows:
-        rollback_to_valid -> re-run lost rounds, and resume's
-        seen_filter amend of its own round."""
+        """The CAS check must not break the sanctioned re-commit flow
+        rollback_to_valid -> re-run lost rounds.  (The other one, the
+        blob rebuild's amend of its own round, runs in every crawl
+        with the seen bound at 0.)"""
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
         run_dir = f"{tmp}/run_cc_resume"
