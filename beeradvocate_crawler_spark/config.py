@@ -1,13 +1,14 @@
 """Crawl engine configuration.
 
-Only what a caller sets: the politeness budget, the user agent, and the
-three size thresholds at which a round switches to its scale path (tests
-force each to 0 to run that path at smoke scale).  Layout constants
-live beside their single use: the corpus layout is read from the
-corpus's sidecar (``sources/corpus.py``), the seen-filter blob layout
-is ``operators/seen.py``'s, and the salt count and the seen broadcast
-bound are ``operators/politeness.py``'s and ``plans/crawl.py``'s (tests
-force the seen dedupe's scale path by lowering that bound).
+Only what a caller sets: the politeness budget, the round horizon and
+the user agent.  Layout constants and the size thresholds at which a
+round switches to its scale path live beside their single use: the
+corpus layout is read from the corpus's sidecar (``sources/corpus.py``),
+the seen-filter blob layout is ``operators/seen.py``'s, the big-batch
+rank and hot-host salting thresholds are ``operators/ordering.py``'s
+and ``operators/politeness.py``'s, and the host-join and seen broadcast
+bounds are ``plans/crawl.py``'s.  Tests force a scale path at smoke
+scale by lowering its constant.
 """
 
 from __future__ import annotations
@@ -29,18 +30,3 @@ class CrawlConfig:
     # then the `*` groups do NOT apply.  The sequential oracle takes
     # the same parameter, so the e2e differential covers it.
     user_agent: str | None = None
-    # global-rank strategy: below this batch size a single-task window
-    # sorts the (politeness-bounded) batch; above it, two-phase
-    # range-partitioned ranking (operators/ordering.py).  64k keeps the
-    # serial sort bounded while small rounds stay single-stage.
-    big_batch_threshold: int = 1 << 16
-    # hot-host salting (A14, operators/politeness.py:_salted_topk): a
-    # quota-CONSTRAINED host with more than hot_host_threshold eligible
-    # rows is ranked via salted two-phase top-k instead of one
-    # single-task host window (same admit set; tested)
-    hot_host_threshold: int = 4096
-    # host_state joins broadcast below this many hosts (upper-bound
-    # tracked in snapshot lineage); above it they fall back to a
-    # co-partitioned shuffle join — a broadcast hash relation of 10^8
-    # hosts per round won't fit executor memory
-    broadcast_hosts_threshold: int = 5_000_000

@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 # range partitions of the two-phase path (its offset map has one entry each)
 N_RANGE_PARTITIONS = 64
+# batch size above which the two-phase path ranks: 64k keeps the
+# single-task sort bounded while politeness-bounded rounds stay
+# single-stage
+BIG_BATCH_THRESHOLD = 1 << 16
 
 
 def order_key(df: DataFrame) -> list:
@@ -39,7 +43,6 @@ def with_global_rank(
     df: DataFrame,
     start_rank: int,
     batch_rows: int,
-    big_batch_threshold: int,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Adds ``rank`` = start_rank + position in the total order.
 
@@ -48,7 +51,7 @@ def with_global_rank(
     path), which ``ranked`` reads; the caller releases its blocks once
     every consumer of ``ranked`` has run."""
     key = order_key(df)
-    if batch_rows <= big_batch_threshold:
+    if batch_rows <= BIG_BATCH_THRESHOLD:
         w = Window.orderBy(*key)
         return df.withColumn(
             "rank", (F.row_number().over(w) - 1 + F.lit(start_rank)).cast("long")

@@ -41,6 +41,9 @@ TOKEN_BURST_FACTOR = 2.0
 # (host, salt) windows (``_salted_topk``).  Plan shape only — the admit
 # set is the single-window sort's for any count.
 N_SALTS = 16
+# a quota-constrained host with more eligible rows than this is ranked
+# by ``_salted_topk`` instead of one single-task host window
+HOT_HOST_THRESHOLD = 4096
 
 
 def rule_match_expr(pq, rule):
@@ -74,7 +77,6 @@ def decide_round(
     rules: DataFrame | None,
     round_seconds: int,
     broadcast_hosts: bool = True,
-    hot_host_threshold: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """A10+A11+A12 fused into ONE host-partitioned pipeline.
 
@@ -107,15 +109,15 @@ def decide_round(
     eligible subset.  Semantics identical to oracle.crawl steps 1–2
     (differentially tested).
 
-    Physical knobs (none affect results — §4.2 determinism):
+    Physical strategies (none affect results — §4.2 determinism):
       broadcast_hosts — False once the host table outgrows a broadcast
         hash relation (10^8 hosts); both host-side joins then go
         through a co-partitioned shuffle (AQE strategy).
-      hot_host_threshold — A14 salted-key skew splitting: a
-        quota-constrained host with more than ``hot_host_threshold``
-        eligible rows is ranked in two phases — per-(host, salt)
-        partial top-quota over ``pmod(xxhash64(url), N_SALTS)`` salts
-        (spreads the hot host over N_SALTS tasks), then a final rank
+      A14 salted-key skew splitting — a quota-constrained host with
+        more than ``HOT_HOST_THRESHOLD`` eligible rows is ranked in two
+        phases — per-(host, salt) partial top-quota over
+        ``pmod(xxhash64(url), N_SALTS)`` salts (spreads the hot host
+        over N_SALTS tasks), then a final rank
         over the <= N_SALTS*quota survivors.  Exact same admit set as
         the single-window sort (total order, content-keyed salt).
     """
@@ -197,11 +199,7 @@ def decide_round(
     w_rank = Window.partitionBy("host").orderBy(
         F.col("eligible").desc(), *order_key(cand)
     )
-    is_hot = (
-        F.col("n_elig") > F.lit(hot_host_threshold)
-        if hot_host_threshold is not None
-        else F.lit(False)
-    )
+    is_hot = F.col("n_elig") > F.lit(HOT_HOST_THRESHOLD)
     constrained = (
         cand.where((F.col("n_elig") > F.col("quota")) & ~is_hot)
         .withColumn("rn", F.row_number().over(w_rank))
@@ -211,12 +209,9 @@ def decide_round(
         )
         .drop("rn")
     )
-    out = unconstrained.unionByName(constrained)
-    if hot_host_threshold is not None:
-        out = out.unionByName(
-            _salted_topk(cand.where((F.col("n_elig") > F.col("quota")) & is_hot))
-        )
-    out = out.drop("quota", "robots_done")
+    out = unconstrained.unionByName(constrained).unionByName(
+        _salted_topk(cand.where((F.col("n_elig") > F.col("quota")) & is_hot))
+    ).drop("quota", "robots_done")
     return out, shared
 
 

@@ -103,7 +103,7 @@ def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame) -> DataFrame:
     )
 
 
-def build_delta_blobs(new_rows: DataFrame, rnd: int, n_rows: int) -> DataFrame:
+def build_delta_blobs(new_rows: DataFrame, rnd: int, n_new: int) -> DataFrame:
     """Fresh delta blob per partition holding this round's new keys.
 
     Task count adapts to the delta size (each task builds the blobs of
@@ -127,7 +127,7 @@ def build_delta_blobs(new_rows: DataFrame, rnd: int, n_rows: int) -> DataFrame:
                     }
                 )
 
-    n_tasks = max(1, min(N_FILTER_PARTITIONS, n_rows // 50_000 + 1))
+    n_tasks = max(1, min(N_FILTER_PARTITIONS, n_new // 50_000 + 1))
     return (
         new_rows.select(
             partition_id_expr(F.col("url_hash")).alias("partition_id"),

@@ -13,10 +13,11 @@ Every round commits a snapshot — the PENDING frontier snapshot
 by joining/rewriting the full frontier history) plus append-only deltas (terminal frontier_log rows, seen, ledger,
 parsed, metrics) — so ``resume`` continues bit-identically (§5.3
 property).
-Independent table writes are submitted from concurrent driver threads:
-the commit barrier waits for all of them, but their job latencies
-overlap instead of summing (the per-round serial floor governs N->4N
-scaling efficiency).
+Every table write but ``parsed`` (which the round reads back) goes to
+one long-lived write pool as soon as its input is final, so the
+writes' job latencies overlap each other and the round's later phases
+instead of summing (the per-round serial floor governs N->4N scaling
+efficiency).
 
 Determinism inventory (§4.2): admission is a pure function of
 (frontier, host_state, round index); the batch rank is a total order;
@@ -48,19 +49,22 @@ BENCH/BASELINE.md).  Checkpoint blocks are invisible to
 checkpoint's own RDD, and only after the round's last consumer.
 
 Commit rule: every round exit (drained, starved, rules-changed,
-admitting) builds an ``_Outcome`` and submits one ``_commit`` job to a
-single-worker executor, so commits run in round order.  The next round
-decides on the carry (the checkpointed pending frontier and host_state)
-while that job runs; only a round that changed the robots rules waits
-on its own commit, and its successor reads the committed catalog.
+admitting) joins the previous round's commit immediately before its
+first write, then builds an ``_Outcome`` holding its write futures and
+submits one ``_commit`` job to a single-worker executor; the job waits
+on those futures and commits.  The next round decides on the carry
+(the checkpointed pending frontier and host_state) while that job
+runs; only a round that changed the robots rules waits on its own
+commit, and its successor reads the committed catalog.
 
 Fault model: checkpoint blocks live only on the executors that built
 them and have no lineage to recompute from.  A lost executor fails
 the round's job; the crawl then restarts with ``resume`` from the last
 committed snapshot, which re-runs the lost round bit-identically.
-Each ``_commit`` first joins its predecessor's, so a failed commit
-fails every later one (the executor runs queued jobs after one raises)
-and the catalog head is always a round whose commits all succeeded.
+A failed write fails its round's commit job before ``commit_round``,
+and a failed commit job fails the next round at its join, before that
+round stages anything; so no commit lands on top of a failed one and
+the catalog head is always a round whose commits all succeeded.
 """
 
 from __future__ import annotations
@@ -103,6 +107,14 @@ from ..sources.corpus import CorpusLayout
 # and anti-joins the "maybe seen" rows, and only there are blobs built.
 # ~2M urls ≈ 150 MB relation.
 BROADCAST_SEEN_THRESHOLD = 2_000_000
+# host_state joins broadcast up to this many hosts (the upper bound kept
+# in the snapshot lineage); above it they shuffle: a broadcast hash
+# relation of 10^8 hosts per round would not fit executor memory
+BROADCAST_HOSTS_THRESHOLD = 5_000_000
+# the most table writes one round hands the write pool (crawl_order,
+# frontier_log, robots_rules, seen, frontier, host_state, round_metrics,
+# seen_filter), so no write waits behind another
+WRITE_POOL_SIZE = 8
 
 
 @dataclass
@@ -125,20 +137,15 @@ class _Outcome:
     rnd: int                     # commit round: a fast-forward advances it
     next_rank: int
     n_hosts_ub: int | None
-    writes: list                 # staged writes still to run
-    staged: list = field(default_factory=list)  # futures of staged writes
+    staged: list                 # futures of the round's pooled writes
     extras: dict = field(default_factory=dict)  # drained/fast_forwarded_from
     metrics: dict | None = None
     release: list = field(default_factory=list)  # freed after the commit
 
 
-def _commit(cat, cfg, prev: Future | None, out: _Outcome) -> None:
-    """One round's commit job.  The predecessor join must come first:
-    without it round r+1 would commit on top of a failed round r's
-    predecessor, with round r's staged files."""
-    if prev is not None:
-        prev.result()
-    _write_all(out.writes)
+def _commit(cat, cfg, out: _Outcome) -> None:
+    """One round's commit job: wait on its writes, commit, release.  A
+    failed write fails the job before ``commit_round``."""
     for f in out.staged:
         f.result()
     lineage = {"next_rank": out.next_rank, "config": asdict(cfg),
@@ -155,7 +162,7 @@ def _hand_on(cat, cfg, ex, carry, out, frontier=None, host_state=None,
         out.release += [carry.frontier, carry.host_state]
     if wait:
         out.release += [frontier, host_state]
-    fut = ex.submit(_commit, cat, cfg, carry.commit if carry else None, out)
+    fut = ex.submit(_commit, cat, cfg, out)
     if wait:
         fut.result()
         return None
@@ -199,9 +206,8 @@ def run(
         F.lit(False).alias("robots_done"),
     )
     seen0 = frontier0.select("url_hash", "url", F.lit(0).alias("round"))
-    cat.write_round("frontier", frontier0, 0, REPLACE,
-                    skip_if_empty=False, n_rows=None)
-    cat.write_round("host_state", host_state0, 0, REPLACE, skip_if_empty=False)
+    cat.write_round("frontier", frontier0, 0, REPLACE)
+    cat.write_round("host_state", host_state0, 0, REPLACE)
     cat.write_round("seen", seen0, 0, DELTA)
     # host-count upper bound (drives broadcast-vs-shuffle host joins);
     # seeds are a driver-side list, so this costs no job
@@ -252,7 +258,7 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     if (cat.rows("seen", m) > BROADCAST_SEEN_THRESHOLD
             and not m.tables.get("seen_filter", {}).get("paths")):
         cat.write_round("seen_filter", S.compact_blobs(cat.read("seen", m), m.round),
-                        m.round, REPLACE, skip_if_empty=False)
+                        m.round, REPLACE)
         m = cat.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
     next_rank = int(m.lineage.get("next_rank", 0))
     n_hosts_ub = m.lineage.get("n_hosts_ub")
@@ -260,18 +266,7 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     rounds_done = 0
     carry: _Carry | None = None
     ex = ThreadPoolExecutor(max_workers=1)  # round-ordered commit jobs
-    # early-write pool: ledger + terminal-log rows are fully determined
-    # right after decide/rank, so their (constant-heavy: job launch,
-    # output-commit renames, manifest fsync) write latency hides under
-    # the round's dominant fetch+parse phase instead of landing on the
-    # round-end serial tail — measured ~12 s/heavy-round of
-    # parallelism-independent write cost at local[4] (prof r5/r6),
-    # which is exactly the Amdahl term the north rule's N->4N
-    # efficiency criterion punishes.
-    # two workers: the ledger/terminal pair and the (later-staged) seen
-    # delta are independent writes — the seen job must not queue behind
-    # the first batch when a heavy round staggers the submissions
-    ex_early = ThreadPoolExecutor(max_workers=2)
+    pool = ThreadPoolExecutor(max_workers=WRITE_POOL_SIZE)  # table writes
     try:
         while rnd < cfg.max_rounds and (max_rounds is None or rounds_done < max_rounds):
             rnd += 1
@@ -280,21 +275,20 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
             # commits its no-op successors at once (fast-forward)
             progressed, out, carry = _run_round(
                 spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0,
-                carry, ex, ex_early,
+                carry, ex, pool,
             )
             rnd, next_rank, n_hosts_ub = out.rnd, out.next_rank, out.n_hosts_ub
             _prof(rnd, t0, "round end")
             rounds_done += 1
             if not progressed:
                 break
-        # the last commit job joins every earlier one, so the returned
-        # catalog reflects every completed round; a failed commit must
-        # PROPAGATE here, not be swallowed
-        if carry is not None:
-            carry.commit.result()
+        # every round joined its predecessor's commit, so only the last
+        # commit job can still be running; the returned catalog must
+        # reflect it, and its failure must PROPAGATE here
+        _join(carry)
     finally:
         ex.shutdown(wait=True)  # the last commit job ended, failed or not
-        ex_early.shutdown(wait=True)
+        pool.shutdown(wait=True)
         if carry is not None:
             _release([carry.frontier, carry.host_state])
     return cat
@@ -310,11 +304,21 @@ def _prof(rnd, t0, label):
 
 def _run_round(
     spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex,
-    ex_early,
+    pool,
 ) -> tuple[bool, _Outcome, _Carry | None]:
     """Returns (progressed, outcome, carry); the outcome's ``rnd`` is
     AHEAD of the input when a starved round fast-forwards past its
-    no-op successors (see the n_admitted == 0 branch)."""
+    no-op successors (see the n_admitted == 0 branch).
+
+    Every exit joins the previous round's commit right before its first
+    write (``_join``): staging is shared catalog state, so a round
+    stages nothing until its predecessor's manifest has landed, and a
+    failed predecessor fails this round there."""
+    staged: list[Future] = []
+
+    def write(name, df, mode, r=rnd):
+        staged.append(pool.submit(cat.write_round, name, df, r, mode))
+
     if carry is not None:
         # pipelined round: decide consumes the previous round's
         # checkpointed in-memory state while its commit job runs in the
@@ -343,15 +347,13 @@ def _run_round(
             .repartition(dp, "url_hash")
         )
     broadcast_hosts = (
-        n_hosts_ub is None or n_hosts_ub <= cfg.broadcast_hosts_threshold
+        n_hosts_ub is None or n_hosts_ub <= BROADCAST_HOSTS_THRESHOLD
     )
     # 1.+2. robots marking + token-bucket admission fused into ONE
     # host-partitioned pipeline (A10/A11/A12); every per-round count
     # comes from a single aggregation over the checkpointed decision table
     decided, decide_cand = decide_round(
-        pending, hs, rules, cfg.round_seconds,
-        broadcast_hosts=broadcast_hosts,
-        hot_host_threshold=cfg.hot_host_threshold,
+        pending, hs, rules, cfg.round_seconds, broadcast_hosts=broadcast_hosts,
     )
     decided = decided.localCheckpoint(eager=False)
     # the corpus-prune key set rides inside the SAME aggregation job
@@ -402,12 +404,12 @@ def _run_round(
     release = [decided, decide_cand]
     if n_pending_after == 0:
         # drained: flush final terminal marks, empty the pending set, stop
-        out = _Outcome(rnd, next_rank, n_hosts_ub, writes=[
-            lambda: cat.write_round("frontier", leftover, rnd, REPLACE,
-                                    skip_if_empty=False, n_rows=0),
-            lambda: cat.write_round("frontier_log", terminal, rnd, DELTA,
-                                    n_rows=n_blocked),
-        ], extras={"drained": True}, release=release)
+        _join(carry)
+        write("frontier", leftover, REPLACE)
+        if n_blocked:
+            write("frontier_log", terminal, DELTA)
+        out = _Outcome(rnd, next_rank, n_hosts_ub, staged,
+                       extras={"drained": True}, release=release)
         return False, out, _hand_on(cat, cfg, ex, carry, out)
 
     if n_admitted == 0:
@@ -460,23 +462,19 @@ def _run_round(
             ).drop("_cand")
         leftover = leftover.localCheckpoint(eager=False)
         hs2 = hs2.localCheckpoint(eager=False)
-        out = _Outcome(rnd_commit, next_rank, n_hosts_ub, writes=[
-            lambda: cat.write_round("frontier", leftover, rnd_commit, REPLACE,
-                                    skip_if_empty=False,
-                                    n_rows=n_pending_after),
-            lambda: cat.write_round("frontier_log", terminal, rnd_commit,
-                                    DELTA, n_rows=n_blocked),
-            lambda: cat.write_round("host_state", hs2, rnd_commit, REPLACE,
-                                    skip_if_empty=False),
-        ], release=release)
+        _join(carry)
+        write("frontier", leftover, REPLACE, rnd_commit)
+        if n_blocked:
+            write("frontier_log", terminal, DELTA, rnd_commit)
+        write("host_state", hs2, REPLACE, rnd_commit)
+        out = _Outcome(rnd_commit, next_rank, n_hosts_ub, staged,
+                       release=release)
         if rnd_commit != rnd:
             out.extras["fast_forwarded_from"] = rnd
         return True, out, _hand_on(cat, cfg, ex, carry, out, leftover, hs2, rules)
 
     # 3. deterministic global order -> ledger (A20)
-    ranked, rank_parts = with_global_rank(
-        admitted, next_rank, n_admitted, cfg.big_batch_threshold
-    )
+    ranked, rank_parts = with_global_rank(admitted, next_rank, n_admitted)
     ranked = ranked.localCheckpoint(eager=False)
     _prof(rnd, t0, "rank built")
     ledger = ranked.select("rank", F.lit(rnd).alias("round"), "url")
@@ -490,31 +488,21 @@ def _run_round(
     # (the link-explode below reads only the two link columns).
     fetched = fetch_join(ranked, pages, layout, batch_rows=n_admitted,
                          prune_keys=prune_keys)
-    # COMMIT BARRIER: the previous round's commit job must land before
-    # this round stages anything (staging is shared catalog state,
-    # manifests must stay ordered).  Decide/agg above overlapped with
-    # that job — that overlap is the pipelined-commit win.  (The carry's
-    # blocks are NOT released here: a localCheckpoint'd RDD has no
-    # lineage to recompute from, so they retire in THIS round's commit
-    # job, after its writes.)
-    if carry is not None:
-        carry.commit.result()
+    # COMMIT BARRIER: decide/agg/rank above overlapped with the previous
+    # round's commit job — that overlap is the pipelined-commit win.
+    # (The carry's blocks are NOT released here: a localCheckpoint'd RDD
+    # has no lineage to recompute from, so they retire in THIS round's
+    # commit job, after its writes.)
+    _join(carry)
     _prof(rnd, t0, "prev commit joined")
-    # EARLY WRITES: the ledger (ranked is final) and the terminal log
-    # (decided is final) are staged NOW so their write jobs + commit
-    # constants overlap the dominant fetch+parse phase below rather
-    # than the round-end tail; the snapshot protocol is untouched —
-    # these are staged files for THIS round, joined by its commit job
-    # before commit_round, so commits stay all-or-nothing and ordered.
-    early_writes = [
-        lambda: cat.write_round("crawl_order", ledger, rnd, DELTA,
-                                n_rows=n_admitted),
-        lambda: cat.write_round("frontier_log", terminal, rnd, DELTA,
-                                n_rows=n_blocked + n_admitted),
-    ]
-    early_fut = ex_early.submit(_write_all, early_writes)
-    cat.write_round("parsed", parse_fetched(fetched, cfg.user_agent), rnd, DELTA,
-                    n_rows=n_admitted)
+    # the ledger (ranked is final) and the terminal log (decided is
+    # final) are written now, so their job latencies (launch, output-
+    # commit renames) hide under the dominant fetch+parse phase below
+    # rather than the round-end tail.  `parsed` is written on this
+    # thread: the round reads it back.
+    write("crawl_order", ledger, DELTA)
+    write("frontier_log", terminal, DELTA)
+    cat.write_round("parsed", parse_fetched(fetched, cfg.user_agent), rnd, DELTA)
     _prof(rnd, t0, "fetch+parse+write done")
     parsed = cat.read_staged("parsed")
     # seen/seen_filter are read AFTER the barrier so their path lists
@@ -543,8 +531,7 @@ def _run_round(
             "ord", "rule_ord")
         if new_rules.count():
             rules2 = new_rules if rules is None else rules.unionByName(new_rules)
-            cat.write_round("robots_rules", rules2, rnd, REPLACE,
-                            skip_if_empty=False)
+            write("robots_rules", rules2, REPLACE)
             rules_changed = True
 
     # 6. link discovery (A5 output + A16 pagination) -> children rows
@@ -629,20 +616,19 @@ def _run_round(
         n_hosts_ub = n_hosts_ub + int(nf_agg["h"])  # upper bound: some known
 
     # 8. pending snapshot + terminal log + host state + deltas, one
-    # snapshot commit (A17).  All writes are independent tables, so
-    # they are submitted CONCURRENTLY (Spark schedules jobs from
-    # multiple driver threads) — the per-round serial floor is the sum
-    # of their job latencies otherwise, which is exactly the Amdahl
-    # term that kills N->4N scaling efficiency on small rounds.
+    # snapshot commit (A17).  All writes are independent tables, so the
+    # pool runs them CONCURRENTLY (Spark schedules jobs from multiple
+    # driver threads) — the per-round serial floor is the sum of their
+    # job latencies otherwise, which is exactly the Amdahl term that
+    # kills N->4N scaling efficiency on small rounds.
     # the seen delta is fully determined by new_frontier (just counted
-    # above), and it is the LARGEST tail write — stage it now so its
+    # above), and it is the LARGEST tail write — submit it now so its
     # job overlaps the remaining driver-side plan construction below
     # (hs2/stats/checkpoint setup, ~5 s of pure py4j/Catalyst time on
     # the heavy rounds) instead of queuing behind it
     seen_delta = new_frontier.select("url_hash", "url", F.lit(rnd).alias("round"))
-    seen_fut = ex_early.submit(
-        lambda: cat.write_round("seen", seen_delta, rnd, DELTA, n_rows=n_new)
-    )
+    if n_new:
+        write("seen", seen_delta, DELTA)
     new_hosts = (
         new_frontier.select("host").distinct()
         .join(hs.select("host"), "host", "left_anti")
@@ -674,15 +660,9 @@ def _run_round(
         .withColumn("wall_ms", F.lit(wall_ms))
     )
 
-    writes = [
-        lambda: cat.write_round("frontier", pending_next, rnd, REPLACE,
-                                skip_if_empty=False,
-                                n_rows=n_pending_after - n_admitted + n_new),
-        lambda: cat.write_round("host_state", hs2, rnd, REPLACE,
-                                skip_if_empty=False),
-        lambda: cat.write_round("round_metrics", stats, rnd, DELTA,
-                                skip_if_empty=False),
-    ]
+    write("frontier", pending_next, REPLACE)
+    write("host_state", hs2, REPLACE)
+    write("round_metrics", stats, DELTA)
     # filter blobs only where a probe will read them: once `seen` ends
     # the round above the bound.  A REPLACE compaction on the crossing
     # round (it also drops blobs left stale below the bound) and every
@@ -694,19 +674,12 @@ def _run_round(
             # add-column) is wider than this round's delta; the filter
             # blobs consume url_hash only, so the nulls are harmless
             all_seen = seen.unionByName(seen_delta, allowMissingColumns=True)
-            writes.append(lambda: cat.write_round(
-                "seen_filter", S.compact_blobs(all_seen, rnd),
-                rnd, REPLACE, skip_if_empty=False,
-            ))
+            write("seen_filter", S.compact_blobs(all_seen, rnd), REPLACE)
         elif n_new:
-            writes.append(lambda: cat.write_round(
-                "seen_filter",
-                S.build_delta_blobs(new_frontier, rnd, n_rows=n_new),
-                rnd, DELTA, skip_if_empty=False,
-            ))
+            write("seen_filter", S.build_delta_blobs(new_frontier, rnd, n_new),
+                  DELTA)
     out = _Outcome(
-        rnd, next_rank + n_admitted, n_hosts_ub, writes,
-        staged=[early_fut, seen_fut],
+        rnd, next_rank + n_admitted, n_hosts_ub, staged,
         metrics={"n_admitted": n_admitted, "n_new": n_new,
                  "n_blocked": n_blocked, "n_pending_before": n_pending_after},
         release=release + [ranked, rank_parts, robots_res, *dedupe_parts,
@@ -728,15 +701,10 @@ def _merge(children, rnd, t0):
     return merged
 
 
-def _write_all(writes):
-    """Run independent staged table writes concurrently.  Each callable
-    issues one Spark write job; submission from multiple driver threads
-    lets the scheduler overlap their (mostly fixed) latencies.  Any
-    failure propagates before commit, so the snapshot protocol's
-    all-or-nothing property is preserved."""
-    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
-        for f in [ex.submit(w) for w in writes]:
-            f.result()
+def _join(carry: _Carry | None) -> None:
+    """Wait for the previous round's commit; its failure raises here."""
+    if carry is not None:
+        carry.commit.result()
 
 
 def _apply_host_updates(hs, token_updates, robots_res, new_hosts):

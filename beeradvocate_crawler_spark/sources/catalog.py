@@ -12,10 +12,11 @@ time travel by round — over plain parquet:
 
 Manifest (one per committed round) records, per table, the *explicit
 file-list* (mode "replace" points at the latest rewrite, mode "delta"
-accumulates append paths), row counts, the table's Spark schema, and
-free-form lineage/metrics.  Reads pass that schema to the parquet
-reader, so reading a table runs no schema-inference job; a delta
-table's schema is the union, by field name, of its writes' schemas.
+accumulates append paths), its part-file inventory and row count,
+the table's Spark schema, and free-form lineage/metrics.  Reads pass
+that schema to the parquet reader, so reading a table runs no
+schema-inference job; a delta table's schema is the union, by field
+name, of its writes' schemas.
 (Tables of manifests written before schemas were recorded are read
 with inference, as before.)
 Commit protocol: write parquet dirs -> write manifest json -> atomic
@@ -37,6 +38,9 @@ snapshot instead of continuing from corrupt state.  (This replaces the
 observed nodes under persist+union feeding a write command in this
 Spark build, and footer-level inventory is stronger — it validates the
 bytes actually on disk, not counters from the write-time plan.)
+The same inventory is the only source of row counts: at commit every
+table's ``rows`` is the sum of its files' footer counts, so a writer
+passes none and no write runs a count job.
 
 The interface is deliberately narrow (``read / write_round /
 commit_round / latest``) so a real ``iceberg-spark-runtime`` catalog
@@ -136,38 +140,19 @@ class SnapshotCatalog:
             return Manifest.from_json(f.read())
 
     # -- writes (staged, become visible only at commit) ------------------------
-    def write_round(
-        self,
-        name: str,
-        df: DataFrame,
-        r: int,
-        mode: str = REPLACE,
-        partition_by: list[str] | None = None,
-        skip_if_empty: bool = True,
-        n_rows: int | None = None,
-    ) -> int:
-        """Write one table's round-r data; returns rows written.
-        ``mode=replace``: this path becomes the table; ``mode=delta``:
-        appended to the table's path list."""
-        if skip_if_empty and n_rows is None:
-            n_rows = df.count()
-        if skip_if_empty and n_rows == 0:
-            with self._stage_lock:
-                self._staged.setdefault(
-                    name, {"mode": mode, "path": None, "rows": 0}
-                )
-            return 0
+    def write_round(self, name: str, df: DataFrame, r: int,
+                    mode: str = REPLACE) -> None:
+        """Stage one table's round-r write.  ``mode=replace``: this path
+        becomes the table; ``mode=delta``: appended to the table's path
+        list.  The table's row count is taken at commit from the part
+        files' footers, so a write runs exactly one job."""
         path = os.path.join(self.run_dir, name, f"r={r:06d}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         with self._stage_lock:
             self._staged[name] = {
-                "mode": mode, "path": path, "rows": int(n_rows or -1),
+                "mode": mode, "path": path,
                 "files": self._inventory(path), "schema": df.schema.jsonValue(),
             }
-        return int(n_rows or -1)
 
     def _inventory(self, path: str) -> list[dict[str, Any]]:
         """Per-partition lineage: (relpath, bytes, footer row count)
@@ -276,44 +261,30 @@ class SnapshotCatalog:
         for name in names:
             staged = self._staged.get(name)
             old = prev_tables.get(name, {})
-            schema = old.get("schema")
-            if staged is None:
-                m.tables[name] = dict(old)  # carried forward unchanged
-            elif staged["mode"] == REPLACE:
-                m.tables[name] = {
-                    "mode": REPLACE,
-                    "paths": [staged["path"]] if staged["path"] else old.get("paths", []),
-                    "rows": staged["rows"],
-                    "files": (staged.get("files", []) if staged["path"]
-                              else old.get("files", [])),
-                }
-                if staged["path"]:
-                    schema = staged["schema"]
-            else:
-                paths = list(old.get("paths", []))
-                files = list(old.get("files", []))
-                if staged["path"]:
-                    # a table committed without a schema (older manifest)
-                    # keeps none: its earlier files' schema is unknown
-                    if schema is not None or not paths:
-                        schema = _union_schema(schema, staged["schema"])
-                    paths.append(staged["path"])
-                    files.extend(staged.get("files", []))
-                m.tables[name] = {
-                    "mode": DELTA,
-                    "paths": paths,
-                    "rows": old.get("rows", 0) + max(0, staged["rows"]),
-                    "files": files,
-                }
-            if schema is not None:
-                m.tables[name]["schema"] = schema
+            t = dict(old)  # carried forward unless staged
+            if staged is not None and staged["mode"] == REPLACE:
+                t.update(mode=REPLACE, paths=[staged["path"]],
+                         files=staged["files"], schema=staged["schema"])
+            elif staged is not None:
+                paths = old.get("paths", [])
+                # a table committed without a schema (older manifest)
+                # keeps none: its earlier files' schema is unknown
+                if "schema" in old or not paths:
+                    t["schema"] = _union_schema(old.get("schema"),
+                                                staged["schema"])
+                t.update(mode=DELTA, paths=paths + [staged["path"]],
+                         files=old.get("files", []) + staged["files"])
+            # from the footer inventory, carried-forward tables included:
+            # an older manifest may hold a writer-supplied count
+            t["rows"] = sum(f["rows"] for f in t.get("files", []))
+            m.tables[name] = t
             # additive schema evolution: committed evolutions carry
             # forward; newly staged ones append (Iceberg add-column)
             evo = list(old.get("evolution", [])) + self._staged_evolution.get(
                 name, []
             )
             if evo:
-                m.tables[name]["evolution"] = evo
+                t["evolution"] = evo
         mf = f"manifest-{r:06d}.json"
         with open(os.path.join(self.run_dir, "_manifests", mf), "w") as f:
             f.write(m.to_json())
@@ -376,7 +347,6 @@ class SnapshotCatalog:
         df = self.read(name, m)
         if df is None:
             return m
-        n = self.rows(name, m)
         target_files = target_files or max(
             1, self.spark.sparkContext.defaultParallelism
         )
@@ -384,7 +354,7 @@ class SnapshotCatalog:
         df.repartition(target_files).write.mode("overwrite").parquet(path)
         with self._stage_lock:
             self._staged[name] = {
-                "mode": REPLACE, "path": path, "rows": n,
+                "mode": REPLACE, "path": path,
                 "files": self._inventory(path), "schema": df.schema.jsonValue(),
             }
         return self.commit_round(m.round, lineage=m.lineage, metrics=m.metrics)
@@ -533,7 +503,7 @@ class SnapshotCatalog:
         parquet, then let downstream stages re-read it with column
         pruning instead of caching wide strings)."""
         staged = self._staged.get(name)
-        if staged is None or staged["path"] is None:
+        if staged is None:
             return None
         return self._reader(staged["schema"]).parquet(staged["path"])
 

@@ -5,8 +5,10 @@ plan-shape-only (§4.2 determinism)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from beeradvocate_crawler_spark.operators import politeness as P
 from beeradvocate_crawler_spark.operators.politeness import decide_round
 
 N_ROWS = 5000
@@ -51,10 +53,13 @@ def _admits(decided):
 
 
 class TestSaltedTopK:
-    def test_salted_equals_unsalted_admit_set(self, spark):
+    def test_salted_equals_unsalted_admit_set(self, spark, monkeypatch):
         pending, hs = _skewed_pending(spark), _host_state(spark)
+        # the unsalted reference: the threshold is above every host's count
+        monkeypatch.setattr(P, "HOT_HOST_THRESHOLD", N_ROWS)
         base = _admits(decide_round(pending, hs, None, 10)[0])
-        salted = decide_round(pending, hs, None, 10, hot_host_threshold=100)[0]
+        monkeypatch.setattr(P, "HOT_HOST_THRESHOLD", 100)
+        salted = decide_round(pending, hs, None, 10)[0]
         assert _admits(salted) == base
         # the deterministic top-QUOTA per host by (-priority, depth,
         # parent_ord, ...)
@@ -63,12 +68,28 @@ class TestSaltedTopK:
         plan = salted._jdf.queryExecution().optimizedPlan().toString()
         assert "_salt" in plan
 
-    def test_no_threshold_means_no_salted_branch(self, spark):
+    @pytest.mark.parametrize("threshold,salted_rows", [(N_ROWS, 0),
+                                                       (100, N_ROWS)])
+    def test_threshold_decides_which_rows_are_salted(
+        self, spark, monkeypatch, threshold, salted_rows
+    ):
+        """The salted branch is always planned; ``HOT_HOST_THRESHOLD``
+        decides which constrained hosts' rows it ranks: none when the
+        threshold is above every host's eligible count, all of both
+        hot hosts' rows below it."""
         pending, hs = _skewed_pending(spark), _host_state(spark)
-        out = decide_round(pending, hs, None, 10, hot_host_threshold=None)[0]
+        hot = []
+        orig = P._salted_topk
+
+        def spy(df):
+            hot.append(df)
+            return orig(df)
+
+        monkeypatch.setattr(P, "HOT_HOST_THRESHOLD", threshold)
+        monkeypatch.setattr(P, "_salted_topk", spy)
+        out = decide_round(pending, hs, None, 10)[0]
         assert _admits(out) == EXPECT_ADMITS
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "_salt" not in plan
+        assert hot[0].count() == salted_rows
 
 
 class TestHostJoinFallback:

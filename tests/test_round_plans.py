@@ -111,10 +111,13 @@ def test_round_plans_stay_small(polite_calls):
         f"largest physical plan description is {max(sizes)} bytes")
 
 
-def test_big_batch_rank_releases_its_blocks(spark, polite_calls):
+def test_big_batch_rank_releases_its_blocks(spark, polite_calls, monkeypatch):
     """The two-phase rank's range-partitioned input is released with
     the round's other intermediates."""
-    cfg = CrawlConfig(round_seconds=16, big_batch_threshold=0)
+    from beeradvocate_crawler_spark.operators import ordering
+
+    monkeypatch.setattr(ordering, "BIG_BATCH_THRESHOLD", 0)
+    cfg = CrawlConfig(round_seconds=16)
     before = _persistent_rdds(spark)
     plans.run(spark, polite_calls["pages"], sm.SEED_URLS,
               f"{polite_calls['tmp']}/big", cfg, max_rounds=3)
@@ -175,9 +178,10 @@ def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
     """A snapshot whose lineage config still names the options removed
     from ``CrawlConfig`` (``filter_kind``, ``use_cuckoo``,
     ``cache_pages``, ``cuckoo_min_seen_rows``; the corpus moduli, the
-    filter layout, the salt count and the pre-merge broadcast bound,
-    here with values other than the constants) resumes, with the config
-    taken from the lineage, to the full-crawl hashes.  The snapshot has
+    filter layout, the salt count, the pre-merge broadcast bound and
+    the three scale-path thresholds, here with values other than the
+    constants) resumes, with the config taken from the lineage, to the
+    full-crawl hashes.  The snapshot has
     no ``seen_filter`` table, as its rounds are below the seen bound.
     With the bound at 0 (``probe``) resume must rebuild the blobs from
     ``seen`` before its first round probes them."""
@@ -194,7 +198,9 @@ def test_resume_snapshot_with_removed_config_keys(spark, polite_calls,
         filter_kind="cuckoo", use_cuckoo=not probe, cache_pages=False,
         cuckoo_min_seen_rows=0, n_filter_partitions=16,
         filter_compact_every=3, broadcast_seen_threshold=0,
-        n_page_buckets=8, files_per_bucket=63, n_salts=4)
+        n_page_buckets=8, files_per_bucket=63, n_salts=4,
+        big_batch_threshold=0, hot_host_threshold=0,
+        broadcast_hosts_threshold=0)
     with open(mf, "w") as f:
         json.dump(m, f)
     cat = plans.resume(spark, polite_calls["pages"], run_dir)

@@ -29,11 +29,11 @@ def test_delta_table_add_column_with_default(spark):
         cat = SnapshotCatalog(spark, d)
         cat.write_round(
             "t", spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
-            0, DELTA, n_rows=2)
+            0, DELTA)
         cat.commit_round(0)
         cat.write_round(
             "t", spark.createDataFrame([(3, "c")], "id long, v string"),
-            1, DELTA, n_rows=1)
+            1, DELTA)
         cat.commit_round(1)
 
         # evolution amends the CURRENT snapshot (Iceberg add-column)
@@ -44,12 +44,12 @@ def test_delta_table_add_column_with_default(spark):
         # post-evolution writers may use the NEW schema...
         cat.write_round(
             "t", spark.createDataFrame([(4, "d", 40)], "id long, v string, w long"),
-            2, DELTA, n_rows=1)
+            2, DELTA)
         cat.commit_round(2)
         # ...or keep producing the OLD one (a resumed old binary)
         cat.write_round(
             "t", spark.createDataFrame([(5, "e")], "id long, v string"),
-            3, DELTA, n_rows=1)
+            3, DELTA)
         cat.commit_round(3)
 
         got = {r["id"]: (r["v"], r["w"]) for r in cat.read("t").collect()}
@@ -78,7 +78,7 @@ def test_only_additive_columns_survive_roundtrip(spark):
     try:
         cat = SnapshotCatalog(spark, d)
         cat.write_round("t", spark.createDataFrame([(1,)], "id long"),
-                        0, DELTA, n_rows=1)
+                        0, DELTA)
         cat.evolve_table("t", "score", "double", default=0.5)
         cat.commit_round(0)
         reopened = SnapshotCatalog(spark, d)

@@ -4,6 +4,7 @@ round commit (SURVEY.md §5.3 e2e + property layers)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -144,8 +145,8 @@ class TestSeenFilter:
                  self._urls(spark, 450, 600)]
         seen = reduce(lambda a, b: a.unionByName(b), parts)
         blobs = (S.compact_blobs(parts[0], 8)
-                 .unionByName(S.build_delta_blobs(parts[1], 9, n_rows=150))
-                 .unionByName(S.build_delta_blobs(parts[2], 10, n_rows=150)))
+                 .unionByName(S.build_delta_blobs(parts[1], 9, 150))
+                 .unionByName(S.build_delta_blobs(parts[2], 10, 150)))
         seen_cand = self._urls(spark, 0, 600, 2)
         new_cand = self._urls(spark, 600, 900)
         pre = S.cuckoo_prefilter(seen_cand.unionByName(new_cand), blobs)
@@ -276,34 +277,37 @@ class TestE2EDifferential:
         errs = compare(spark, run_dir, ores, corpus)
         assert not errs, "\n".join(errs)
 
-    def test_two_phase_rank_equivalence(self, spark, smoke_site, site_dirs):
+    def test_two_phase_rank_equivalence(self, spark, smoke_site, site_dirs,
+                                        monkeypatch):
         """Force the big-batch two-phase global rank path; results must
         be identical to the single-window path (§4.2 total order)."""
+        from beeradvocate_crawler_spark.operators import ordering
+
+        monkeypatch.setattr(ordering, "BIG_BATCH_THRESHOLD", 0)
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
         run_dir = f"{tmp}/run_twophase"
-        plans.run(
-            spark, pages_path, sm.SEED_URLS, run_dir,
-            CrawlConfig(round_seconds=16, big_batch_threshold=0),
-        )
+        plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
+                  CrawlConfig(round_seconds=16))
         errs = compare(spark, run_dir, ores, corpus)
         assert not errs, "\n".join(errs)
 
     def test_salted_and_shuffle_host_paths_equivalence(
-        self, spark, smoke_site, site_dirs
+        self, spark, smoke_site, site_dirs, monkeypatch
     ):
         """Force BOTH physical fallbacks at once — hot-host salted
-        two-phase admission (A14, hot_host_threshold=0 makes every
+        two-phase admission (A14, HOT_HOST_THRESHOLD=0 makes every
         constrained host 'hot') and shuffle host_state joins
-        (broadcast_hosts_threshold=0) — outputs must stay exact."""
+        (BROADCAST_HOSTS_THRESHOLD=0) — outputs must stay exact."""
+        from beeradvocate_crawler_spark.operators import politeness
+
+        monkeypatch.setattr(politeness, "HOT_HOST_THRESHOLD", 0)
+        monkeypatch.setattr(plans, "BROADCAST_HOSTS_THRESHOLD", 0)
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
         run_dir = f"{tmp}/run_salted"
-        plans.run(
-            spark, pages_path, sm.SEED_URLS, run_dir,
-            CrawlConfig(round_seconds=16, hot_host_threshold=0,
-                        broadcast_hosts_threshold=0),
-        )
+        plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
+                  CrawlConfig(round_seconds=16))
         errs = compare(spark, run_dir, ores, corpus)
         assert not errs, "\n".join(errs)
 
@@ -382,9 +386,19 @@ class TestMissingPages404:
         assert not errs, "\n".join(errs)
 
 
+@pytest.fixture(scope="module")
+def default_crawl(spark, site_dirs):
+    """Run dir of a default-config smoke crawl, run to completion."""
+    tmp, pages_path = site_dirs
+    run_dir = f"{tmp}/run_tt"
+    plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
+              CrawlConfig(round_seconds=16))
+    return run_dir
+
+
 class TestTimeTravel:
     def test_manifest_for_round_reconstructs_history(
-        self, spark, smoke_site, site_dirs
+        self, spark, smoke_site, default_crawl
     ):
         """Time travel by round (catalog.py manifest_for_round, the
         Iceberg-snapshot semantics SURVEY §7.4 claims): reading the
@@ -397,11 +411,7 @@ class TestTimeTravel:
         from beeradvocate_crawler_spark.sources.catalog import SnapshotCatalog
 
         _, corpus, ores = smoke_site
-        tmp, pages_path = site_dirs
-        run_dir = f"{tmp}/run_tt"
-        plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
-                  CrawlConfig(round_seconds=16))
-        cat = SnapshotCatalog(spark, run_dir)
+        cat = SnapshotCatalog(spark, default_crawl)
         last = cat.latest().round
         assert last == ores.rounds
 
@@ -435,6 +445,28 @@ class TestTimeTravel:
             )
 
         assert prev_seen == ores.seen
+
+    def test_manifest_row_counts_are_exact(self, spark, default_crawl):
+        """Every table of every manifest records as ``rows`` the sum of
+        its part files' footer counts (including tables a round only
+        carries forward), and at the head that is the number of rows
+        the table reads back."""
+        from beeradvocate_crawler_spark.sources.catalog import SnapshotCatalog
+
+        cat = SnapshotCatalog(spark, default_crawl)
+        mfs = sorted(os.listdir(os.path.join(default_crawl, "_manifests")))
+        assert len(mfs) == cat.latest().round + 1
+        for mf in mfs:
+            m = cat.manifest_for_round(int(mf[len("manifest-"):-len(".json")]))
+            for name, t in m.tables.items():
+                assert t["rows"] == sum(f["rows"] for f in t["files"]), (
+                    f"round {m.round}, table {name}")
+        m = cat.latest()
+        assert set(m.tables) >= {"crawl_order", "frontier", "frontier_log",
+                                 "host_state", "parsed", "robots_rules",
+                                 "round_metrics", "seen"}
+        for name in m.tables:
+            assert cat.rows(name, m) == cat.read(name, m).count(), name
 
 
 class TestCommitConcurrency:
@@ -545,7 +577,7 @@ class TestCatalogMaintenance:
         cat = SnapshotCatalog(spark, d)
         for r in range(3):
             df = spark.range(r * 10, r * 10 + 10).withColumnRenamed("id", "v")
-            cat.write_round("t", df, r, DELTA, skip_if_empty=False, n_rows=10)
+            cat.write_round("t", df, r, DELTA)
             cat.commit_round(r)
         assert len(cat.latest().tables["t"]["paths"]) == 3
         cat.compact_table("t", target_files=2)
@@ -562,7 +594,7 @@ class TestCatalogMaintenance:
         assert old == list(range(20))
         # a later delta appends on top of the compacted base
         cat.write_round("t", spark.range(30, 35).withColumnRenamed("id", "v"),
-                        3, DELTA, skip_if_empty=False, n_rows=5)
+                        3, DELTA)
         cat.commit_round(3)
         assert sorted(x["v"] for x in cat.read("t").collect()) == list(range(35))
         shutil.rmtree(d, ignore_errors=True)
@@ -579,7 +611,7 @@ class TestCatalogMaintenance:
         cat = SnapshotCatalog(spark, d)
         for r in range(4):
             df = spark.range(r * 10, r * 10 + 10).withColumnRenamed("id", "v")
-            cat.write_round("t", df, r, DELTA, skip_if_empty=False, n_rows=10)
+            cat.write_round("t", df, r, DELTA)
             cat.commit_round(r)
         cat.compact_table("t", target_files=1)
         stats = cat.expire_snapshots(keep_last=1)
@@ -616,38 +648,49 @@ class TestCatalogMaintenance:
 
 
 class TestPipelinedCommitCrash:
-    """Crash injection at the round commit: ``commit_round`` raises
-    from the commit job of round ``crash_round``, after its writes are
-    staged and before its manifest pointer swap.  The failure must
+    """Crash injection in round ``crash_round``, at one of two points:
+    ``commit_round`` raises from the round's commit job, after its
+    writes are staged and before its manifest pointer swap; or the
+    pooled ``write_round`` of one table raises, which fails the
+    commit job while it waits on the round's writes.  The failure must
     propagate out of ``run`` with round ``crash_round - 1`` still the
-    catalog head (no later commit job may commit on top of the failed
-    one), and a plain ``resume`` must re-run to the exact oracle state:
+    catalog head (no later round may commit on top of the failed one),
+    and a plain ``resume`` must re-run to the exact oracle state:
     staged-but-uncommitted files of the dead round stay invisible."""
 
-    def _crash_then_resume(self, spark, smoke_site, site_dirs, crash_round):
+    def _crash_then_resume(self, spark, smoke_site, site_dirs, crash_round,
+                           point, monkeypatch):
         from beeradvocate_crawler_spark.sources.catalog import SnapshotCatalog
 
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
-        run_dir = f"{tmp}/run_crash_swap_{crash_round}"
+        run_dir = f"{tmp}/run_crash_{point}_{crash_round}"
 
         class Crash(RuntimeError):
             pass
 
-        orig = SnapshotCatalog.commit_round
+        if point == "commit_round":
+            orig_commit = SnapshotCatalog.commit_round
 
-        def dying(self, rnd, *a, **k):
-            if rnd == crash_round:
-                raise Crash(f"simulated death before round-{rnd} pointer swap")
-            return orig(self, rnd, *a, **k)
+            def dying(self, rnd, *a, **k):
+                if rnd == crash_round:
+                    raise Crash(f"simulated death before round-{rnd} pointer swap")
+                return orig_commit(self, rnd, *a, **k)
 
-        SnapshotCatalog.commit_round = dying
-        try:
-            with pytest.raises(Crash):
-                plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
-                          CrawlConfig(round_seconds=16))
-        finally:
-            SnapshotCatalog.commit_round = orig
+            monkeypatch.setattr(SnapshotCatalog, "commit_round", dying)
+        else:
+            orig_write = SnapshotCatalog.write_round
+
+            def dying(self, name, df, rnd, *a, **k):
+                if (name, rnd) == (point, crash_round):
+                    raise Crash(f"simulated failure of the round-{rnd} {name} write")
+                return orig_write(self, name, df, rnd, *a, **k)
+
+            monkeypatch.setattr(SnapshotCatalog, "write_round", dying)
+        with pytest.raises(Crash):
+            plans.run(spark, pages_path, sm.SEED_URLS, run_dir,
+                      CrawlConfig(round_seconds=16))
+        monkeypatch.undo()
 
         cat = SnapshotCatalog(spark, run_dir)
         assert cat.latest().round == crash_round - 1
@@ -656,19 +699,27 @@ class TestPipelinedCommitCrash:
         errs = compare(spark, run_dir, ores, corpus)
         assert not errs, "\n".join(errs)
 
+    @pytest.mark.parametrize("point", ["commit_round", "host_state"])
     def test_crash_between_bg_submit_and_pointer_swap_resumes_cleanly(
-        self, spark, smoke_site, site_dirs
+        self, spark, smoke_site, site_dirs, point, monkeypatch
     ):
         """Round 3: a pipelined round followed by another pipelined
-        round, whose barrier sees the failure."""
-        self._crash_then_resume(spark, smoke_site, site_dirs, 3)
+        round, whose join on round 3's commit sees the failure.  The
+        ``host_state`` write is among the round's last, submitted just
+        before its commit job."""
+        self._crash_then_resume(spark, smoke_site, site_dirs, 3, point,
+                                monkeypatch)
 
-    @pytest.mark.parametrize("crash_round", [1, 8])
+    @pytest.mark.parametrize("crash_round,point", [
+        (1, "commit_round"), (8, "commit_round"), (9, "frontier")])
     def test_crash_at_commit_of_waiting_or_last_admitting_round(
-        self, spark, smoke_site, site_dirs, crash_round
+        self, spark, smoke_site, site_dirs, crash_round, point, monkeypatch
     ):
         """Round 1 changes the robots rules and waits on its own
         commit.  Round 8 is followed by the drained round 9, which
-        stages nothing before its commit job: that job must fail
-        behind round 8's instead of committing round 9 on top of 7."""
-        self._crash_then_resume(spark, smoke_site, site_dirs, crash_round)
+        joins round 8's commit before its first write, so it must fail
+        there instead of committing round 9 on top of 7.  A failed
+        ``frontier`` write of the drained round 9 fails the crawl's
+        last commit job."""
+        self._crash_then_resume(spark, smoke_site, site_dirs, crash_round,
+                                point, monkeypatch)
