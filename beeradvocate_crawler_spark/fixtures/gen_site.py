@@ -170,8 +170,9 @@ def pages_df(spark, scale: str):
     :func:`generate_pages` (tested) — this is the path that scales
     (a 10^10-page corpus can't be rendered on the driver)."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from ..sources.corpus import pages_schema
 
     specs = page_specs(scale)
     spec_schema = T.StructType(
@@ -215,20 +216,6 @@ def pages_df(spark, scale: str):
         .repartition(n_slices, "ord")
         .mapInPandas(render, out_schema)
         .drop("ord")
-    )
-
-
-def pages_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
     )
 
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.urlnorm import PAGE_PRIORITY
 from .links import (
@@ -21,24 +20,7 @@ from .links import (
     url_hash_expr,
 )
 
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("page_type", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("parent_ord", T.LongType(), False),
-        T.StructField("link_pos", T.IntegerType(), False),
-        T.StructField("discovered_round", T.IntegerType(), False),
-        T.StructField("state", T.StringType(), False),
-    ]
-)
-
-PENDING, SCHEDULED, DONE, ROBOTS_BLOCKED = (
-    "PENDING", "SCHEDULED", "DONE", "ROBOTS_BLOCKED",
-)
+PENDING, DONE, ROBOTS_BLOCKED = "PENDING", "DONE", "ROBOTS_BLOCKED"
 
 
 def seed_frontier(spark, seeds: list[str], rnd: int = 0) -> DataFrame:

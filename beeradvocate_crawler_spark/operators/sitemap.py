@@ -124,7 +124,7 @@ def sitemap_seed_list(sitemaps: DataFrame, xml_col: str = "xml") -> list[str]:
 
 
 def seeds_from_sitemaps(sitemaps: DataFrame, rnd: int = 0, xml_col: str = "xml") -> DataFrame:
-    """A21 -> A1: urlset entries as canonical FRONTIER_SCHEMA rows at
+    """A21 -> A1: urlset entries as canonical frontier rows at
     depth 0, classified and prioritized exactly like list seeds
     (frontier.seed_frontier) so a sitemap-seeded crawl is
     indistinguishable from an explicit-list crawl over the same URLs.

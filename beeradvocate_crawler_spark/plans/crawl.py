@@ -13,11 +13,15 @@ Every round commits a snapshot — the PENDING frontier snapshot
 by joining/rewriting the full frontier history) plus append-only deltas (terminal frontier_log rows, seen, ledger,
 parsed, metrics) — so ``resume`` continues bit-identically (§5.3
 property).
-Every table write but ``parsed`` (which the round reads back) goes to
-one long-lived write pool as soon as its input is final, so the
-writes' job latencies overlap each other and the round's later phases
-instead of summing (the per-round serial floor governs N->4N scaling
-efficiency).
+
+Every round starts from the committed snapshot: it reads
+``frontier``, ``host_state``, ``robots_rules`` and ``seen`` from the
+catalog, which is also how ``resume`` and the streaming twin continue
+a crawl.  Every table write but ``parsed`` (which the round reads
+back) goes to one long-lived write pool as soon as its input is final,
+so the writes' job latencies overlap each other and the round's later
+phases instead of summing (the per-round serial floor governs N->4N
+scaling efficiency).
 
 Determinism inventory (§4.2): admission is a pure function of
 (frontier, host_state, round index); the batch rank is a total order;
@@ -30,12 +34,10 @@ Materialization rule: every intermediate a round consumes more than
 once (the decide candidates, the decision table, the ranked batch and,
 for a big batch, its range-partitioned input, the robots results, the
 merged discoveries, the cuckoo probe output, the new rows and the new
-frontier delta) and the carry handed to the next round is a
-``localCheckpoint(eager=False)``, never a ``persist``.  That call is
-not lazy under AQE: it plans the query and runs all of its shuffle map
-stages at the call, on the calling thread; only the final result
-stage waits for the first consumer (a resumed round 6 of the smoke
-crawl spends 1.30 s of 4.39 s in its 8 such calls).  Downstream
+frontier delta) is a ``localCheckpoint(eager=False)``, never a
+``persist``.  That call is not lazy under AQE: it plans the query and
+runs all of its shuffle map stages at the call, on the calling thread;
+only the final result stage waits for the first consumer.  Downstream
 plans then start from a ``LogicalRDD`` leaf: a cached relation would
 embed its whole source plan in every consumer, and Spark re-renders those
 multi-megabyte plan strings at every SQL execution start and adaptive
@@ -48,23 +50,20 @@ BENCH/BASELINE.md).  Checkpoint blocks are invisible to
 ``DataFrame.unpersist()``; ``_release`` frees them through the
 checkpoint's own RDD, and only after the round's last consumer.
 
-Commit rule: every round exit (drained, starved, rules-changed,
-admitting) joins the previous round's commit immediately before its
-first write, then builds an ``_Outcome`` holding its write futures and
-submits one ``_commit`` job to a single-worker executor; the job waits
-on those futures and commits.  The next round decides on the carry
-(the checkpointed pending frontier and host_state) while that job
-runs; only a round that changed the robots rules waits on its own
-commit, and its successor reads the committed catalog.
+Commit rule: every round exit (drained, starved, admitting) builds an
+``_Outcome`` holding its write futures; ``_loop`` then runs
+``_commit`` on the round's own thread, which waits on those futures,
+commits the round and releases its checkpoints, before the next round
+starts.
 
 Fault model: checkpoint blocks live only on the executors that built
 them and have no lineage to recompute from.  A lost executor fails
 the round's job; the crawl then restarts with ``resume`` from the last
 committed snapshot, which re-runs the lost round bit-identically.
-A failed write fails its round's commit job before ``commit_round``,
-and a failed commit job fails the next round at its join, before that
-round stages anything; so no commit lands on top of a failed one and
-the catalog head is always a round whose commits all succeeded.
+Faults follow program order: a failed job, write or commit raises out
+of ``_loop`` before the next round begins, so no commit lands on top
+of a failed one and the catalog head is always a round whose commits
+all succeeded.
 """
 
 from __future__ import annotations
@@ -97,7 +96,7 @@ from ..operators.politeness import (
     host_updates_from_decided,
 )
 from ..sources.catalog import DELTA, REPLACE, SnapshotCatalog
-from ..sources.corpus import CorpusLayout
+from ..sources.corpus import CorpusLayout, pages_schema
 
 # The seen dedupe's regime switch (step 7 of ``_run_round``).  While
 # `seen` has at most this many rows, a broadcast anti-join drops
@@ -118,21 +117,8 @@ WRITE_POOL_SIZE = 8
 
 
 @dataclass
-class _Carry:
-    """Round r's state that round r+1 decides on while r's commit job
-    runs (frames are None after a drained round).  ``rules`` is always
-    the committed table; ``seen``/``seen_filter`` are re-read from the
-    catalog after the barrier, so no cross-round lineage chain forms."""
-
-    frontier: DataFrame | None
-    host_state: DataFrame | None
-    rules: DataFrame | None
-    commit: Future
-
-
-@dataclass
 class _Outcome:
-    """What a round leaves to its commit job (see ``_commit``)."""
+    """What a round leaves to its commit (see ``_commit``)."""
 
     rnd: int                     # commit round: a fast-forward advances it
     next_rank: int
@@ -144,29 +130,14 @@ class _Outcome:
 
 
 def _commit(cat, cfg, out: _Outcome) -> None:
-    """One round's commit job: wait on its writes, commit, release.  A
-    failed write fails the job before ``commit_round``."""
+    """One round's commit: wait on its writes, commit, release.  A
+    failed write raises before ``commit_round``."""
     for f in out.staged:
         f.result()
     lineage = {"next_rank": out.next_rank, "config": asdict(cfg),
                "n_hosts_ub": out.n_hosts_ub, **out.extras}
     cat.commit_round(out.rnd, lineage=lineage, metrics=out.metrics)
     _release(out.release)
-
-
-def _hand_on(cat, cfg, ex, carry, out, frontier=None, host_state=None,
-             rules=None, wait=False) -> _Carry | None:
-    """Submit ``out``'s commit job, which also retires the previous
-    carry; return the next carry (None when the round waits)."""
-    if carry is not None:
-        out.release += [carry.frontier, carry.host_state]
-    if wait:
-        out.release += [frontier, host_state]
-    fut = ex.submit(_commit, cat, cfg, out)
-    if wait:
-        fut.result()
-        return None
-    return _Carry(frontier, host_state, rules, fut)
 
 
 def _release(dfs) -> None:
@@ -245,7 +216,8 @@ def resume(
 
 
 def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
-    pages = spark.read.parquet(pages_path)
+    # the declared schema spares a schema-inference job per call
+    pages = spark.read.schema(pages_schema()).parquet(pages_path)
     # the pruning layout comes only from the corpus writer's sidecar
     # (sources/corpus.py); no sidecar -> the fetch join scans unpruned
     layout = CorpusLayout.read(pages_path)
@@ -264,33 +236,27 @@ def _loop(spark, cat: SnapshotCatalog, pages_path, cfg, max_rounds):
     n_hosts_ub = m.lineage.get("n_hosts_ub")
     rnd = m.round
     rounds_done = 0
-    carry: _Carry | None = None
-    ex = ThreadPoolExecutor(max_workers=1)  # round-ordered commit jobs
     pool = ThreadPoolExecutor(max_workers=WRITE_POOL_SIZE)  # table writes
     try:
         while rnd < cfg.max_rounds and (max_rounds is None or rounds_done < max_rounds):
             rnd += 1
             t0 = time.time()
+            progressed, out = _run_round(
+                spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0,
+                pool,
+            )
+            # the next round reads this one's snapshot, so it starts
+            # only once the commit has landed
+            _commit(cat, cfg, out)
             # the commit round may come back advanced: a starved round
             # commits its no-op successors at once (fast-forward)
-            progressed, out, carry = _run_round(
-                spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0,
-                carry, ex, pool,
-            )
             rnd, next_rank, n_hosts_ub = out.rnd, out.next_rank, out.n_hosts_ub
             _prof(rnd, t0, "round end")
             rounds_done += 1
             if not progressed:
                 break
-        # every round joined its predecessor's commit, so only the last
-        # commit job can still be running; the returned catalog must
-        # reflect it, and its failure must PROPAGATE here
-        _join(carry)
     finally:
-        ex.shutdown(wait=True)  # the last commit job ended, failed or not
-        pool.shutdown(wait=True)
-        if carry is not None:
-            _release([carry.frontier, carry.host_state])
+        pool.shutdown(wait=True)  # a failed round's other writes end first
     return cat
 
 
@@ -303,49 +269,27 @@ def _prof(rnd, t0, label):
 
 
 def _run_round(
-    spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0, carry, ex,
-    pool,
-) -> tuple[bool, _Outcome, _Carry | None]:
-    """Returns (progressed, outcome, carry); the outcome's ``rnd`` is
-    AHEAD of the input when a starved round fast-forwards past its
-    no-op successors (see the n_admitted == 0 branch).
-
-    Every exit joins the previous round's commit right before its first
-    write (``_join``): staging is shared catalog state, so a round
-    stages nothing until its predecessor's manifest has landed, and a
-    failed predecessor fails this round there."""
+    spark, cat, pages, layout, cfg, rnd, next_rank, n_hosts_ub, t0, pool,
+) -> tuple[bool, _Outcome]:
+    """Returns (progressed, outcome); the outcome's ``rnd`` is AHEAD of
+    the input when a starved round fast-forwards past its no-op
+    successors (see the n_admitted == 0 branch)."""
     staged: list[Future] = []
 
     def write(name, df, mode, r=rnd):
         staged.append(pool.submit(cat.write_round, name, df, r, mode))
 
-    if carry is not None:
-        # pipelined round: decide consumes the previous round's
-        # checkpointed in-memory state while its commit job runs in the
-        # background; already pending-only (the filter is a schema-
-        # preserving no-op) and spread (the decide repartition's
-        # partitions, plus the merge shuffle's after an admitting round)
-        pending = carry.frontier.filter(F.col("state") == PENDING).drop("state")
-        hs = carry.host_state
-        rules = carry.rules
-    else:
-        fr = cat.read("frontier")
-        hs = cat.read("host_state")
-        rules = cat.read("robots_rules")
-        # the frontier table holds ONLY pending rows (terminal rows go
-        # to the append-only frontier_log) — the filter is a no-op kept
-        # for resume compatibility with pre-split run dirs.  The
-        # explicit repartition undoes parquet scan-packing: a compact
-        # 1.3M-row frontier file otherwise lands in 1-2 scan partitions
-        # and serializes the whole decision pipeline (measured: same
-        # 7.7 s decide wall at 4 and 16 threads).  On a real cluster
-        # the state tables have many files and this collapses to a
-        # cheap rebalance.
-        dp = spark.sparkContext.defaultParallelism
-        pending = (
-            fr.filter(F.col("state") == PENDING).drop("state")
-            .repartition(dp, "url_hash")
-        )
+    hs = cat.read("host_state")
+    rules = cat.read("robots_rules")
+    # the frontier table holds ONLY pending rows (terminal rows go to
+    # the append-only frontier_log).  The explicit repartition undoes
+    # parquet scan-packing: a compact 1.3M-row frontier file otherwise
+    # lands in 1-2 scan partitions and serializes the whole decision
+    # pipeline (measured: same 7.7 s decide wall at 4 and 16 threads).
+    # On a real cluster the state tables have many files and this
+    # collapses to a cheap rebalance.
+    dp = spark.sparkContext.defaultParallelism
+    pending = cat.read("frontier").drop("state").repartition(dp, "url_hash")
     broadcast_hosts = (
         n_hosts_ub is None or n_hosts_ub <= BROADCAST_HOSTS_THRESHOLD
     )
@@ -404,13 +348,11 @@ def _run_round(
     release = [decided, decide_cand]
     if n_pending_after == 0:
         # drained: flush final terminal marks, empty the pending set, stop
-        _join(carry)
         write("frontier", leftover, REPLACE)
         if n_blocked:
             write("frontier_log", terminal, DELTA)
-        out = _Outcome(rnd, next_rank, n_hosts_ub, staged,
-                       extras={"drained": True}, release=release)
-        return False, out, _hand_on(cat, cfg, ex, carry, out)
+        return False, _Outcome(rnd, next_rank, n_hosts_ub, staged,
+                               extras={"drained": True}, release=release)
 
     if n_admitted == 0:
         # token starvation round: only terminal marks + refill bookkeeping.
@@ -460,9 +402,6 @@ def _run_round(
                 F.when(F.col("_cand"), F.least(burst, F.col("tokens") + rr))
                 .otherwise(F.col("tokens")),
             ).drop("_cand")
-        leftover = leftover.localCheckpoint(eager=False)
-        hs2 = hs2.localCheckpoint(eager=False)
-        _join(carry)
         write("frontier", leftover, REPLACE, rnd_commit)
         if n_blocked:
             write("frontier_log", terminal, DELTA, rnd_commit)
@@ -471,7 +410,7 @@ def _run_round(
                        release=release)
         if rnd_commit != rnd:
             out.extras["fast_forwarded_from"] = rnd
-        return True, out, _hand_on(cat, cfg, ex, carry, out, leftover, hs2, rules)
+        return True, out
 
     # 3. deterministic global order -> ledger (A20)
     ranked, rank_parts = with_global_rank(admitted, next_rank, n_admitted)
@@ -488,13 +427,6 @@ def _run_round(
     # (the link-explode below reads only the two link columns).
     fetched = fetch_join(ranked, pages, layout, batch_rows=n_admitted,
                          prune_keys=prune_keys)
-    # COMMIT BARRIER: decide/agg/rank above overlapped with the previous
-    # round's commit job — that overlap is the pipelined-commit win.
-    # (The carry's blocks are NOT released here: a localCheckpoint'd RDD
-    # has no lineage to recompute from, so they retire in THIS round's
-    # commit job, after its writes.)
-    _join(carry)
-    _prof(rnd, t0, "prev commit joined")
     # the ledger (ranked is final) and the terminal log (decided is
     # final) are written now, so their job latencies (launch, output-
     # commit renames) hide under the dominant fetch+parse phase below
@@ -505,15 +437,11 @@ def _run_round(
     cat.write_round("parsed", parse_fetched(fetched, cfg.user_agent), rnd, DELTA)
     _prof(rnd, t0, "fetch+parse+write done")
     parsed = cat.read_staged("parsed")
-    # seen/seen_filter are read AFTER the barrier so their path lists
-    # include the previous round's committed deltas — the carry never
-    # holds cross-round in-memory lineage for the append-only tables
     seen = cat.read("seen")
 
     # robots results -> host updates effective next round (skipped
     # entirely in robots-free rounds — the common case)
     robots_res = None
-    rules_changed = False
     if n_robots:
         robots_res = (
             ranked.filter(F.col("page_type") == "robots")
@@ -532,7 +460,6 @@ def _run_round(
         if new_rules.count():
             rules2 = new_rules if rules is None else rules.unionByName(new_rules)
             write("robots_rules", rules2, REPLACE)
-            rules_changed = True
 
     # 6. link discovery (A5 output + A16 pagination) -> children rows
     html_links = parsed.select(
@@ -624,8 +551,7 @@ def _run_round(
     # the seen delta is fully determined by new_frontier (just counted
     # above), and it is the LARGEST tail write — submit it now so its
     # job overlaps the remaining driver-side plan construction below
-    # (hs2/stats/checkpoint setup, ~5 s of pure py4j/Catalyst time on
-    # the heavy rounds) instead of queuing behind it
+    # (hs2/stats, pure py4j/Catalyst time) instead of queuing behind it
     seen_delta = new_frontier.select("url_hash", "url", F.lit(rnd).alias("round"))
     if n_new:
         write("seen", seen_delta, DELTA)
@@ -635,16 +561,8 @@ def _run_round(
         .select("host", F.lit(0.0).alias("tokens"),
                 F.lit(1.0).alias("crawl_delay"), F.lit(False).alias("robots_done"))
     )
-    # the carry: localCheckpoint the next round's decide inputs (cuts
-    # the cross-round lineage — WITHOUT this the logical plan nests one
-    # full round deeper every round and the driver melts down rendering/
-    # optimizing it).  Under AQE the call runs the shuffle map stages
-    # of both plans here, on this thread; only the result stage is left
-    # to whichever touches it first (the commit job's write or the next
-    # round's decide).
-    hs2 = _apply_host_updates(
-        hs, host_updates, robots_res, new_hosts).localCheckpoint(eager=False)
-    pending_next = leftover.unionByName(new_frontier).localCheckpoint(eager=False)
+    hs2 = _apply_host_updates(hs, host_updates, robots_res, new_hosts)
+    pending_next = leftover.unionByName(new_frontier)
     wall_ms = int((time.time() - t0) * 1000)
     stats = (
         parsed.groupBy("page_type")
@@ -678,18 +596,13 @@ def _run_round(
         elif n_new:
             write("seen_filter", S.build_delta_blobs(new_frontier, rnd, n_new),
                   DELTA)
-    out = _Outcome(
+    return True, _Outcome(
         rnd, next_rank + n_admitted, n_hosts_ub, staged,
         metrics={"n_admitted": n_admitted, "n_new": n_new,
                  "n_blocked": n_blocked, "n_pending_before": n_pending_after},
         release=release + [ranked, rank_parts, robots_res, *dedupe_parts,
                            new_frontier],
     )
-    # a rules update must be committed before the next round's decide
-    # consumes it, so that round waits on its commit and hands no carry
-    # (robots rounds are the first few only; losing their overlap is noise)
-    return True, out, _hand_on(cat, cfg, ex, carry, out, pending_next, hs2,
-                               rules, wait=rules_changed)
 
 
 def _merge(children, rnd, t0):
@@ -699,12 +612,6 @@ def _merge(children, rnd, t0):
     merged.count()
     _prof(rnd, t0, "explode+classify+merge materialized")
     return merged
-
-
-def _join(carry: _Carry | None) -> None:
-    """Wait for the previous round's commit; its failure raises here."""
-    if carry is not None:
-        carry.commit.result()
 
 
 def _apply_host_updates(hs, token_updates, robots_res, new_hosts):

@@ -569,8 +569,9 @@ def connected_components_min_label(edges: DataFrame, max_iter: int = 20) -> Data
     pipeline via the edge list), so without the lineage cut the logical
     plan — and Catalyst's analysis time — grows exponentially with
     sweep count (measured at sf0.1: sweeps 3.9 s → 48 s by sweep 3;
-    flat ~1 s after the cut).  Same failure mode, same fix as the crawl
-    loop's cross-round carry (plans/crawl.py).  Checkpoint blocks are
+    flat ~1 s after the cut).  The crawl loop avoids the same failure
+    mode by starting every round from its committed snapshot
+    (plans/crawl.py).  Checkpoint blocks are
     RDD-level persistence DataFrame.unpersist() can't reach, so each
     one is registered (_scoped_local_checkpoint) and release_caches()
     frees it through its RDD after the caller materializes the result

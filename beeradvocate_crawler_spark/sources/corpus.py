@@ -16,7 +16,9 @@ reports mass false 404s.  A corpus with no sidecar is read unpruned.
 
 ``CorpusLayout`` is the one place these formulas are written: the
 writer's partition columns and the fetch join's prune key both come
-from it.
+from it.  ``pages_schema`` is the one declaration of the corpus's data
+columns: the fixture renderer writes it, and the round loop and the
+streaming source read the corpus with it instead of inferring it.
 """
 
 from __future__ import annotations
@@ -27,8 +29,21 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 CORPUS_META = "_corpus_meta.json"
+
+
+def pages_schema() -> T.StructType:
+    """The corpus's data columns; a reader adds the partition columns
+    ``bucket``/``file_in_bucket`` from the directory layout."""
+    return T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("html", T.BinaryType(), False),
+        T.StructField("text", T.StringType(), False),
+        T.StructField("lang", T.StringType(), False),
+    ])
 
 
 @dataclass(frozen=True)

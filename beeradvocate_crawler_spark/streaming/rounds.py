@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..fixtures.gen_site import pages_schema
+from ..sources.corpus import pages_schema
 
 
 def corpus_stream(spark: SparkSession, pages_path: str) -> DataFrame:

@@ -102,10 +102,10 @@ scaling corpus, local[{args.cpus}]: wall {rec['wall_sec']} s
 **crawl_order + seen hashes {'EQUAL' if ok else 'DIFFER FROM'} the
 batch loop's goldens** ({ORDER_GOLD} / {SEEN_GOLD}) — the streaming
 mode is output-identical to the batch engine at 1.44M-URL scale, not
-just at fixture scale.  (Streaming trades the batch loop's pipelined
-in-memory carry for per-round catalog resume — its wall is expected to
-sit above the batch figure at equal parallelism; the exactness is the
-claim here.)
+just at fixture scale.  (Streaming adds a ``resume`` call and a
+micro-batch per round to the batch loop's work — its wall is expected
+to sit above the batch figure at equal parallelism; the exactness is
+the claim here.)
 """)
         return 0 if ok else 1
     finally:

@@ -1,8 +1,8 @@
 """Round-plan properties of the crawl loop on the smoke polite crawl.
 
 1. **Every block a crawl call creates is released by the time it
-   returns.**  Round intermediates and the carry are localCheckpoint'd,
-   and checkpoint blocks are invisible to ``DataFrame.unpersist()``, so
+   returns.**  Round intermediates are localCheckpoint'd, and
+   checkpoint blocks are invisible to ``DataFrame.unpersist()``, so
    a release that goes through the wrong handle leaks silently.
 2. **Plans stay small.**  A round's shared intermediates are
    checkpoint leaves, so a downstream plan never embeds their source
@@ -12,8 +12,9 @@
 3. **A warm round re-pays no round-invariant work.**  Resuming the same
    round again compiles (almost) no new classes, and reading a
    committed table runs no schema-inference job: the manifest carries
-   its schema.  A manifest without schemas (written before they were
-   recorded) still resumes bit-identically.
+   its schema, and the corpus is read with its declared schema.  A
+   manifest without schemas (written before they were recorded) still
+   resumes bit-identically.
 
 The guards pin counts, not timings.
 """
@@ -149,6 +150,23 @@ def test_committed_tables_read_without_a_job(spark, polite_calls):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup("catalog_reads") == []
     assert all(df is not None for df in tables.values())
+
+
+def test_resume_reads_the_corpus_in_one_job(spark, polite_calls):
+    """A resume that runs no round starts at most one job: the corpus
+    file listing.  Inferring the corpus schema would add a second."""
+    run_dir = f"{polite_calls['tmp']}/no_rounds"
+    shutil.copytree(polite_calls["base"], run_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume_no_rounds", "resume without a round")
+    try:
+        cat = plans.resume(spark, polite_calls["pages"], run_dir,
+                           polite_calls["cfg"], max_rounds=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("resume_no_rounds")) <= 1
+    assert cat.latest().round == 5
 
 
 def test_resume_without_manifest_schemas_is_exact(spark, polite_calls):

@@ -59,13 +59,15 @@ class TestCorpusMeta:
         replaces would prune the wrong files here)."""
         from datetime import datetime
 
-        from beeradvocate_crawler_spark.fixtures.gen_site import pages_schema
         from beeradvocate_crawler_spark.operators.fetch import fetch_join
         from beeradvocate_crawler_spark.operators.links import (
             classify_expr as ce,
             host_expr,
         )
-        from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
+        from beeradvocate_crawler_spark.sources.corpus import (
+            CorpusLayout,
+            pages_schema,
+        )
 
         rows = [
             {
@@ -295,14 +297,16 @@ class TestE2EDifferential:
     def test_salted_and_shuffle_host_paths_equivalence(
         self, spark, smoke_site, site_dirs, monkeypatch
     ):
-        """Force BOTH physical fallbacks at once — hot-host salted
-        two-phase admission (A14, HOT_HOST_THRESHOLD=0 makes every
-        constrained host 'hot') and shuffle host_state joins
-        (BROADCAST_HOSTS_THRESHOLD=0) — outputs must stay exact."""
-        from beeradvocate_crawler_spark.operators import politeness
+        """Force every scale path at once — hot-host salted two-phase
+        admission (A14, HOT_HOST_THRESHOLD=0 makes every constrained
+        host 'hot'), shuffle host_state joins
+        (BROADCAST_HOSTS_THRESHOLD=0) and the shuffled fetch join
+        (BROADCAST_FETCH_THRESHOLD=0) — outputs must stay exact."""
+        from beeradvocate_crawler_spark.operators import fetch, politeness
 
         monkeypatch.setattr(politeness, "HOT_HOST_THRESHOLD", 0)
         monkeypatch.setattr(plans, "BROADCAST_HOSTS_THRESHOLD", 0)
+        monkeypatch.setattr(fetch, "BROADCAST_FETCH_THRESHOLD", 0)
         _, corpus, ores = smoke_site
         tmp, pages_path = site_dirs
         run_dir = f"{tmp}/run_salted"
@@ -344,10 +348,7 @@ class TestMissingPages404:
         import tempfile
 
         from beeradvocate_crawler_spark import oracle
-        from beeradvocate_crawler_spark.fixtures.gen_site import (
-            generate_pages,
-            pages_schema,
-        )
+        from beeradvocate_crawler_spark.fixtures.gen_site import generate_pages
         from beeradvocate_crawler_spark.testing import compare
 
         from beeradvocate_crawler_spark.functions.urlnorm import classify_url
@@ -366,7 +367,10 @@ class TestMissingPages404:
         corpus = {p["url"]: p for p in kept}
         ores = oracle.crawl(corpus, sm.SEED_URLS, round_seconds=16)
 
-        from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
+        from beeradvocate_crawler_spark.sources.corpus import (
+            CorpusLayout,
+            pages_schema,
+        )
 
         tmp = tempfile.mkdtemp(prefix="ba_404_")
         pages_path = f"{tmp}/pages"
@@ -648,15 +652,16 @@ class TestCatalogMaintenance:
 
 
 class TestPipelinedCommitCrash:
-    """Crash injection in round ``crash_round``, at one of two points:
-    ``commit_round`` raises from the round's commit job, after its
-    writes are staged and before its manifest pointer swap; or the
-    pooled ``write_round`` of one table raises, which fails the
-    commit job while it waits on the round's writes.  The failure must
-    propagate out of ``run`` with round ``crash_round - 1`` still the
-    catalog head (no later round may commit on top of the failed one),
-    and a plain ``resume`` must re-run to the exact oracle state:
-    staged-but-uncommitted files of the dead round stay invisible."""
+    """Crash injection in round ``crash_round``, at one of three points:
+    ``decide_round`` raises, before the round's first write;
+    ``commit_round`` raises, after the round's writes are staged and
+    before its manifest pointer swap; or the pooled ``write_round`` of
+    one table raises, which fails the round's commit while it waits on
+    the round's writes.  The failure must propagate out of ``run`` with
+    round ``crash_round - 1`` still the catalog head (no later round
+    may commit on top of the failed one), and a plain ``resume`` must
+    re-run to the exact oracle state: staged-but-uncommitted files of
+    the dead round stay invisible."""
 
     def _crash_then_resume(self, spark, smoke_site, site_dirs, crash_round,
                            point, monkeypatch):
@@ -669,7 +674,20 @@ class TestPipelinedCommitCrash:
         class Crash(RuntimeError):
             pass
 
-        if point == "commit_round":
+        if point == "decide_round":
+            orig_decide = plans.decide_round
+            calls = []
+
+            def dying(*a, **k):
+                # one call per round, and the smoke crawl fast-forwards
+                # no round before ``crash_round``
+                calls.append(1)
+                if len(calls) == crash_round:
+                    raise Crash(f"simulated failure of round {crash_round}'s decide")
+                return orig_decide(*a, **k)
+
+            monkeypatch.setattr(plans, "decide_round", dying)
+        elif point == "commit_round":
             orig_commit = SnapshotCatalog.commit_round
 
             def dying(self, rnd, *a, **k):
@@ -703,10 +721,9 @@ class TestPipelinedCommitCrash:
     def test_crash_between_bg_submit_and_pointer_swap_resumes_cleanly(
         self, spark, smoke_site, site_dirs, point, monkeypatch
     ):
-        """Round 3: a pipelined round followed by another pipelined
-        round, whose join on round 3's commit sees the failure.  The
+        """Round 3 is an admitting round followed by another.  The
         ``host_state`` write is among the round's last, submitted just
-        before its commit job."""
+        before its commit."""
         self._crash_then_resume(spark, smoke_site, site_dirs, 3, point,
                                 monkeypatch)
 
@@ -715,11 +732,16 @@ class TestPipelinedCommitCrash:
     def test_crash_at_commit_of_waiting_or_last_admitting_round(
         self, spark, smoke_site, site_dirs, crash_round, point, monkeypatch
     ):
-        """Round 1 changes the robots rules and waits on its own
-        commit.  Round 8 is followed by the drained round 9, which
-        joins round 8's commit before its first write, so it must fail
-        there instead of committing round 9 on top of 7.  A failed
-        ``frontier`` write of the drained round 9 fails the crawl's
-        last commit job."""
+        """Round 1 changes the robots rules.  Round 8 is followed by
+        the drained round 9, which must not start, let alone commit on
+        top of round 7.  A failed ``frontier`` write of the drained
+        round 9 fails the crawl's last commit."""
         self._crash_then_resume(spark, smoke_site, site_dirs, crash_round,
                                 point, monkeypatch)
+
+    def test_crash_before_first_write_resumes_cleanly(
+        self, spark, smoke_site, site_dirs, monkeypatch
+    ):
+        """Round 4's decide raises before the round stages anything."""
+        self._crash_then_resume(spark, smoke_site, site_dirs, 4,
+                                "decide_round", monkeypatch)

@@ -7,8 +7,8 @@ candidate host either admits after the next refill or NEVER can
 (burst < 1 token) — so a starved round either commits at its own
 index or jumps to the round horizon in one commit.  Two differential
 twins: a host that starves in single rounds between admissions (each
-starved round commits at its own index and hands its carry to the
-next, admitting round), and the permanent case: a host whose
+starved round commits at its own index, and the next, admitting
+round starts from that snapshot), and the permanent case: a host whose
 robots.txt sets Crawl-delay 4x the round budget (refill 0.25, burst
 0.5 < 1 token) — the oracle idles from round 2 to max_rounds one
 round at a time; the engine must reach the IDENTICAL end state
@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 
 from beeradvocate_crawler_spark import oracle
 from beeradvocate_crawler_spark.config import CrawlConfig
-from beeradvocate_crawler_spark.fixtures.gen_site import pages_schema
 from beeradvocate_crawler_spark.functions.xxh64 import xxh64_signed
 from beeradvocate_crawler_spark.plans import crawl as plans
+from beeradvocate_crawler_spark.sources.corpus import pages_schema
 from beeradvocate_crawler_spark.sources.ingest import write_corpus
 
 ROBOTS_URL = "https://slow.example/robots.txt"
@@ -123,7 +123,7 @@ def test_starved_round_hands_its_carry_to_an_admitting_round(spark):
     """Crawl-delay 6 against round_seconds=4: refill 2/3, burst 4/3.
     After the robots round the host admits one URL, then alternately
     starves (2/3 - float rounding < 1 token) and admits, so rounds 3
-    and 5 are starved and each hands its carry to an admitting round.
+    and 5 are starved and each is followed by an admitting round.
     The seed URLs are absent from the corpus (404), so nothing else is
     discovered, and round 7 is drained."""
     from datetime import datetime
