@@ -30,6 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from beeradvocate_crawler_spark.fixtures import site_model as sm
     from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
     from beeradvocate_crawler_spark.plans import crawl as plans
+    from beeradvocate_crawler_spark.plans.relational import ld
     from beeradvocate_crawler_spark.sources.corpus import CorpusLayout
 
     tmp = tempfile.mkdtemp(prefix="ba_entry_")
@@ -40,7 +41,7 @@ def entry(spark: SparkSession) -> DataFrame:
     # mix the driver's sf0.001 documents in as off-site corpus chaff
     # (never crawled -> exercises fetch-join bucket pruning), laid out
     # by the corpus's recorded layout
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = ld(spark, "/root/testdata/sf0.001", "documents")
     chaff = layout.with_partition_cols(docs.select(
         F.concat(F.lit("https://docs.example/d/"), F.col("doc_id")).alias("url"),
         F.lit("2024-06-01 00:00:00").cast("timestamp").alias("warc_ts"),

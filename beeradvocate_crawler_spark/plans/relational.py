@@ -17,10 +17,47 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _cols(**types: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in types.items()])
+
+
+_INT, _LONG, _DBL, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_TS = T.TimestampNTZType()
+
+# The queries() tables, exactly as Spark infers them from the parquet
+# footers (file reads are always nullable; the timestamps carry no UTC
+# adjustment, so they read as timestamp_ntz).  ``ld`` reads with these,
+# so a table load starts no footer-reading job; a new table needs an
+# entry here.
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _cols(r_regionkey=_INT, r_name=_STR),
+    "nation": _cols(n_nationkey=_INT, n_name=_STR, n_regionkey=_INT),
+    "customer": _cols(c_custkey=_LONG, c_name=_STR, c_nationkey=_INT,
+                      c_acctbal=_DBL, c_mktsegment=_STR),
+    "supplier": _cols(s_suppkey=_LONG, s_name=_STR, s_nationkey=_INT,
+                      s_acctbal=_DBL),
+    "part": _cols(p_partkey=_LONG, p_name=_STR, p_brand=_STR, p_type=_STR,
+                  p_size=_INT, p_retailprice=_DBL),
+    "orders": _cols(o_orderkey=_LONG, o_custkey=_LONG, o_orderstatus=_STR,
+                    o_totalprice=_DBL, o_orderdate=_TS, o_orderpriority=_STR),
+    "lineitem": _cols(l_orderkey=_LONG, l_partkey=_LONG, l_suppkey=_LONG,
+                      l_linenumber=_INT, l_quantity=_DBL,
+                      l_extendedprice=_DBL, l_discount=_DBL, l_tax=_DBL,
+                      l_returnflag=_STR, l_linestatus=_STR, l_shipdate=_TS),
+    "events": _cols(event_id=_LONG, ts=_TS, user_id=_LONG, event_type=_STR,
+                    value=_DBL, props=_STR),
+    "documents": _cols(doc_id=_LONG, text=_STR, lang=_STR, source=_STR,
+                       n_chars=_LONG),
+    "embeddings": _cols(vec_id=_LONG, embedding=T.ArrayType(T.FloatType()),
+                        label=_INT),
+}
 
 
 def ld(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:

@@ -91,6 +91,7 @@ def crawl_throughput(spark, scale: str, round_seconds: int) -> dict:
     from beeradvocate_crawler_spark.fixtures import site_model as sm
     from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
     from beeradvocate_crawler_spark.plans import crawl as plans
+    from beeradvocate_crawler_spark.sources.corpus import pages_schema
 
     tmp = tempfile.mkdtemp(prefix="ba_bench_")
     try:
@@ -106,7 +107,7 @@ def crawl_throughput(spark, scale: str, round_seconds: int) -> dict:
         plans.run(spark, f"{warm}/pages", sm.SEED_URLS, f"{warm}/run",
                   CrawlConfig(round_seconds=round_seconds))
         shutil.rmtree(warm, ignore_errors=True)
-        spark.read.parquet(pages_path).select(
+        spark.read.schema(pages_schema()).parquet(pages_path).select(
             F.count("*"), F.sum(F.length("html"))
         ).collect()
         t0 = time.time()

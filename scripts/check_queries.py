@@ -16,8 +16,6 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
 
 def norm_cell(v):
     if v is None:
@@ -50,11 +48,12 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
+    from beeradvocate_crawler_spark.plans.relational import TABLE_SCHEMAS
     from beeradvocate_crawler_spark.session import get_spark
 
     spark = get_spark(master="local[8]")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_SCHEMAS:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = E.queries()

@@ -43,6 +43,7 @@ def main() -> int:
     from beeradvocate_crawler_spark.fixtures.gen_site import write_pages_parquet
     from beeradvocate_crawler_spark.plans import crawl as plans
     from beeradvocate_crawler_spark.session import get_spark
+    from beeradvocate_crawler_spark.sources.corpus import pages_schema
 
     spark = get_spark(
         master=args.master, shuffle_partitions=args.shuffle_partitions
@@ -63,7 +64,7 @@ def main() -> int:
         # the same (warm) page-cache state — otherwise whichever leg
         # runs second inherits the first leg's eviction pattern and the
         # efficiency ratio measures the OS cache, not the engine
-        spark.read.parquet(pages_path).select(
+        spark.read.schema(pages_schema()).parquet(pages_path).select(
             F.count("*"),
             F.sum(
                 F.octet_length("html") + F.length("text") + F.length("url")

@@ -5,16 +5,26 @@ driver itself at sf0.01)."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 
 import duckdb
 import pytest
 
+from beeradvocate_crawler_spark.plans.relational import TABLE_SCHEMAS, ld
+
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+# every scale factor next to SF_DIR, plus the benchmark's own copy of
+# sf0.01 (read only)
+SCHEMA_DIRS = [
+    *(pytest.param(d, id=os.path.basename(d))
+      for d in sorted(glob.glob(f"{os.path.dirname(SF_DIR)}/sf*"))),
+    pytest.param(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "perfbench", "data", "sf0.01"),
+        id="perfbench-sf0.01"),
+]
 
 # fast + representative: one per operator family
 SUBSET = [
@@ -62,7 +72,7 @@ def _vhash(cols, rows):
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_SCHEMAS:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con
 
@@ -92,3 +102,31 @@ def test_every_query_has_unique_name(entrymod):
     assert len(qs) >= 45
     extra_sql = set(entrymod.oracle_sql()) - set(qs)
     assert not extra_sql, f"oracle_sql keys without queries: {extra_sql}"
+
+
+@pytest.mark.parametrize("sf_dir", SCHEMA_DIRS)
+def test_declared_schemas_match_the_footers(spark, sf_dir):
+    """``ld`` reads with TABLE_SCHEMAS instead of inferring, so each
+    declaration must be what Spark infers from the files, nullability
+    and ``containsNull`` included, and the tables must be the dir's."""
+    files = {os.path.basename(p)[: -len(".parquet")]
+             for p in glob.glob(f"{sf_dir}/*.parquet")}
+    assert files == set(TABLE_SCHEMAS)
+    for t, schema in TABLE_SCHEMAS.items():
+        assert spark.read.parquet(f"{sf_dir}/{t}.parquet").schema == schema, t
+
+
+def test_ld_starts_no_job(spark):
+    sc = spark.sparkContext
+
+    def newest_job():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    before = newest_job()
+    dfs = [ld(spark, SF_DIR, t) for t in TABLE_SCHEMAS]
+    assert newest_job() == before
+    assert [df.schema for df in dfs] == list(TABLE_SCHEMAS.values())
+    with pytest.raises(KeyError):  # no inference fallback
+        ld(spark, SF_DIR, "pages")

@@ -92,6 +92,7 @@ def test_recrawl_schedule_orders_stale_short_gap_first(spark, tmp_path):
     page uses the default interval."""
     from beeradvocate_crawler_spark.plans.relational import (
         RECRAWL_DEFAULT_GAP_SEC,
+        TABLE_SCHEMAS,
         q_recrawl_schedule,
     )
 
@@ -105,9 +106,8 @@ def test_recrawl_schedule_orders_stale_short_gap_first(spark, tmp_path):
         rows.append((len(rows), t0 + dt.timedelta(hours=h), 2, "fetch", 0.0, "{}"))
     # page 3 (C): fetched once on day 15 -> default gap
     rows.append((len(rows), t0 + dt.timedelta(days=15), 3, "fetch", 0.0, "{}"))
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
+    # every sf*/events.parquet holds timestamp_ntz, the type ld reads
+    df = spark.createDataFrame(rows, TABLE_SCHEMAS["events"])
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     df.coalesce(1).write.parquet(f"{sf_dir}/events.parquet")
